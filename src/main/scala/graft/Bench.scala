@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
+
+import Harness.jstr
 
 /** Benchmark main. Prints exactly ONE machine-parseable JSON line on stdout:
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
@@ -38,12 +38,6 @@ object Bench {
     */
   val DriftLimit = 2.0
 
-  def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
-
   /** Pull the per-query min map out of a prior artifact line — the
     * FIRST `"queries":{...}` block (the full-file artifact carries the
     * complete map there; `spreads`/`drift` blocks come later and must
@@ -59,7 +53,7 @@ object Bench {
     val body = json.substring(open + 1, close)
     val Pair = "\"((?:[^\"\\\\]|\\\\.)*)\"\\s*:\\s*(-?[0-9.eE+]+)".r
     Pair.findAllMatchIn(body).flatMap { m =>
-      try Some(m.group(1) -> m.group(2).toDouble)
+      try Some(Harness.unjstr(m.group(1)) -> m.group(2).toDouble)
       catch { case _: NumberFormatException => None }
     }.toMap
   }
@@ -75,38 +69,11 @@ object Bench {
         name
     }
 
-  /** Force full evaluation of every row and column: hash each row to one
-    * 64-bit value and XOR-fold (bit_xor never overflows under ANSI mode,
-    * unlike sum over 64-bit hashes). Nothing is prunable, output is one
-    * tiny row.
-    */
-  def fullEval(df: DataFrame): Unit = {
-    val h = xxhash64(struct(df.columns.toIndexedSeq.map(col): _*))
-    df.select(bit_xor(h)).collect()
-    ()
-  }
-
-  /** The measurement session every harness main shares — one place for
-    * the env-var defaults so Bench and Profile can never drift onto
-    * different core counts (a Profile at local[32] "diagnosing" a Bench
-    * run at local[4] measures a different configuration).
-    */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val (_, queries) = Harness.queries(args.toSeq)
+    val spark = Harness.session()
 
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
 
     // Fail-fast discipline (VERDICT r14 #1): when a query kills the
@@ -130,7 +97,7 @@ object Bench {
     // warmup: evaluate everything once, untimed; remember what failed so the
     // timed pass skips it (a throw mid-pass would distort neighbors).
     queries.iterator.takeWhile(_ => fatal.isEmpty).foreach { case (name, fn) =>
-      try fullEval(fn(spark, sfDir))
+      try Harness.fullEval(fn(spark, sfDir))
       catch { case e: Throwable => record(name, e) }
     }
 
@@ -163,19 +130,14 @@ object Bench {
         java.nio.charset.StandardCharsets.UTF_8))
       catch { case scala.util.control.NonFatal(_) => Map.empty }
 
-    def timedRun(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] = {
-      try {
-        // drop persisted intermediates from the warmup/previous pass
-        // (CacheManager matches canonicalized plans, so a re-built query
-        // would otherwise read warm cache and under-report) — every
-        // timed number is a cold end-to-end run; only JVM/codegen warmup
-        // carries over. Inside the try: clearCache on a stopped context
-        // throws too, and must route through the same fatal path.
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        fullEval(fn(spark, sfDir)); Some((System.nanoTime() - t0) / 1e9)
-      } catch { case e: Throwable => record(name, e); None }
-    }
+    // every timed number is a cold end-to-end run (CacheManager matches
+    // canonicalized plans, so a re-built query would otherwise read the
+    // previous pass's cache and under-report). Inside the try: releasing
+    // caches on a stopped context throws too, and must route through the
+    // same fatal path.
+    def timedRun(name: String, fn: Harness.Query): Option[Double] =
+      try Some(Harness.coldRun(spark)(fn(spark, sfDir)))
+      catch { case e: Throwable => record(name, e); None }
 
     val timed = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     queries.iterator.takeWhile(_ => fatal.isEmpty).foreach { case (name, fn) =>

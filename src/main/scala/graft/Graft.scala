@@ -1,21 +1,16 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.dedup.Dedup
-import graft.sim.Similarity
-
-/** User-facing façade — the high-level calls a user of the reference
-  * scripts (or any training-data pipeline) reaches for, each delegating to
-  * the oracle-gated operators underneath. One import, no plumbing:
+/** The library's entry point: a configured session and the three
+  * reference pipelines. Every other operator is called on its own module
+  * (`dedup.Dedup`, `sim.Similarity`, `text.*`, ...):
   *
   * {{{
   * import graft.Graft
   * val spark = Graft.session()                    // tuned local session
   * Graft.runSqlToParquet(spark, sfDir, out)       // pipeline 1
-  * Graft.dedupCorpus(docsDf)                      // exact + near-dup drop
-  * Graft.searchTopK(spark, sfDir)                 // ANN top-k
+  * dedup.Dedup.dropNearDups(docs, pairs)          // any operator, directly
   * }}}
   */
 object Graft {
@@ -24,10 +19,10 @@ object Graft {
     * UTC clock, right-sized shuffle partitions, and the extension pack
     * (dot_long / ngram_poly_hash SQL functions + SargableMonthRule).
     */
-  def session(threads: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
+  def session(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = configure(SparkSession.builder())
-      .master(s"local[$threads]")
-      .config("spark.sql.shuffle.partitions", threads)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
@@ -81,1046 +76,4 @@ object Graft {
   def runPreprocessMonthly(spark: SparkSession, sfDir: String, monthBucket: String,
                            chunkSize: Int = pipelines.Preprocess.RefChunkSize): DataFrame =
     pipelines.Preprocess.preprocessMonthly(spark, sfDir, monthBucket, chunkSize)
-
-  // ---- training-data operators over a (doc_id, text) corpus ----
-
-  /** Drop exact duplicates (normalized-text fingerprint, keep lowest doc_id). */
-  def dedupExact(docs: DataFrame): DataFrame =
-    Dedup.Exact.dedupExact(docs)
-
-  /** Drop near-duplicates: word-shingle MinHash LSH pairs, greedy
-    * representative selection. Returns the surviving rows of `docs`.
-    * This is the PROBABILISTIC path (band misses are real — measured
-    * 24/25 recall on the fixture, q_dedup_lsh_recall); the recall-1
-    * apply path is [[dedupCorpusExact]], and the canonical-copy rule
-    * that keeps the cleanest member instead of the first is
-    * [[dedupCorpusByQuality]].
-    */
-  def dedupCorpus(docs: DataFrame): DataFrame = {
-    val hv = Dedup.MinHashLSH.shingleHashes(col("text"))
-    val pairs = Dedup.MinHashLSH.nearDupPairsOn(docs, hv, Dedup.MinHashLSH.WordConfig)
-    Dedup.dropNearDups(docs, pairs)
-  }
-
-  /** Drop near-duplicates with RECALL-1 pairs: the exact prefix-filtered
-    * set-similarity join (X187) instead of MinHash banding — every pair
-    * with shingle-set Jaccard ≥ τ is found, by construction. Keeps the
-    * cluster-min doc_id, like [[dedupCorpus]]. Costs more than LSH on
-    * high-ambient-similarity corpora (the prefix filter's candidate set
-    * grows with shared rare shingles) but never misses a pair.
-    */
-  def dedupCorpusExact(docs: DataFrame,
-                       tauBp: Int = dedup.SetSim.TauBp): DataFrame = {
-    val pairs = dedup.SetSim.similarityJoin(docs, tauBp)
-      .select(col("a").as("doc_a"), col("b").as("doc_b"))
-    Dedup.dropNearDups(docs, pairs)
-  }
-
-  /** QUALITY-AWARE near-dup drop (X190 as the apply path): each cluster
-    * keeps its highest-quality member (X9 exact-integer score, ties by
-    * doc_id) instead of the member that happened to sort first — the
-    * production canonical-copy rule. Pairs come from the recall-1 exact
-    * join by default; pass `exact = false` for the cheaper LSH pairs.
-    */
-  def dedupCorpusByQuality(docs: DataFrame, exact: Boolean = true): DataFrame = {
-    val pairs =
-      if (exact)
-        dedup.SetSim.similarityJoin(docs)
-          .select(col("a").as("doc_a"), col("b").as("doc_b"))
-      else
-        Dedup.MinHashLSH.nearDupPairsOn(docs,
-            Dedup.MinHashLSH.shingleHashes(col("text")), Dedup.MinHashLSH.WordConfig)
-          .select(col("doc_a"), col("doc_b"))
-    val clusters = Dedup.Components.of(pairs)
-    val quality = docs.select(col("doc_id"),
-      text.Analysis.qualityQFromTokens(text.TextOps.tokenize(col("text"))).as("q"))
-    val reps = Dedup.repsOf(clusters, quality).select("doc_id")
-    val drop = clusters.select("doc_id").join(reps, Seq("doc_id"), "left_anti")
-    docs.join(drop, Seq("doc_id"), "left_anti")
-  }
-
-  /** SPAN-level dedup, the documented default: the whitespace-exact
-    * ExactSubstr scrub (X176) — recall 1 at the declared k-token
-    * granularity on ARBITRARY whitespace, surviving text spliced back
-    * byte-exactly. Alias of [[scrubExactSpansWs]]; the single-space
-    * fast path is [[scrubExactSpans]], the CDC byte-proxy (measured
-    * ~72% avg recall) exists only for byte-granularity corpora.
-    */
-  def dedupSpans(docs: DataFrame,
-                 k: Int = dedup.ExactSpans.KTokens): DataFrame =
-    dedup.ExactSpans.scrubWs(docs, k)
-
-  /** Per-document quality/text-analysis frame: language, token counts,
-    * quality score, fingerprint.
-    */
-  def analyzeCorpus(docs: DataFrame): DataFrame = {
-    val toks = text.TextOps.tokenize(col("text"))
-    val withToks = docs.select(col("doc_id"), col("text"), toks.as("toks"))
-    val quality = text.Analysis.qualityColumnsFromTokens(col("text"), col("toks"))
-      .map { case (n, c) => c.as(n) }
-    withToks.select(
-      Seq(col("doc_id"),
-        text.Analysis.langIdFromTokens(col("text"), col("toks")).as("lang_pred"),
-        text.Analysis.fingerprint(col("text")).as("fp_md5")) ++ quality: _*)
-  }
-
-  /** Exact cosine top-k neighbors for the fixture's query set. */
-  def searchTopK(spark: SparkSession, sfDir: String): DataFrame =
-    Similarity.topK(spark, sfDir)
-
-  /** IVF-probed approximate top-k (the 100 TB path). */
-  def searchTopKApprox(spark: SparkSession, sfDir: String): DataFrame =
-    Similarity.ivfTopK(spark, sfDir)
-
-  /** IVF-PQ approximate top-k — probed lists scored from per-list int8
-    * residual codes (8× smaller at rest than the quantized vectors).
-    */
-  def searchTopKCompressed(spark: SparkSession, sfDir: String): DataFrame =
-    Similarity.ivfPqTopK(spark, sfDir)
-
-  /** Serve top-k from the stored base index plus an appended batch —
-    * incremental index maintenance: the batch is encoded against the
-    * frozen quantizer (work ∝ batch), never a full rebuild.
-    */
-  def searchTopKIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    Similarity.ivfPqIncremental(spark, sfDir)
-
-  // ---- corpus preparation (round-3 surface) ----
-
-  /** Deterministic train/val/test assignment by key hash — reproducible
-    * at any scale, append-stable.
-    */
-  def splitCorpus(docs: DataFrame): DataFrame =
-    ops.CorpusOps.stratifiedSplit(docs)
-
-  /** Per-document top terms by integer-quantized tf·idf. */
-  def topTerms(spark: SparkSession, sfDir: String): DataFrame =
-    ops.CorpusOps.tfidfTopTerms(spark, sfDir)
-
-  /** The full prepare-for-training pipeline (dedup → quality gate →
-    * split) as one lazy plan, reported per split.
-    */
-  def prepareCorpus(spark: SparkSession, sfDir: String): DataFrame =
-    ops.CorpusOps.pipelineReport(spark, sfDir)
-
-  /** ES-style multi-format first-match timestamp coercion. */
-  def parseTimestamp(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    ops.DateParse.multiFormatTimestamp(c)
-
-  /** Watermark-bounded streaming dedup (first delivery per key wins). */
-  def dedupStream(events: DataFrame, key: String, horizon: String = "2 hours"): DataFrame =
-    streaming.EventsStream.dedupStream(events, key, horizon)
-
-  /** Content-defined chunks of a (doc_id, text) corpus — duplicated-span
-    * detection and RAG chunking.
-    */
-  def chunkCorpus(docs: DataFrame): DataFrame =
-    ops.ScaleOps.widen(docs).select(col("doc_id"),
-      posexplode(Dedup.Cdc.chunkCol(col("text"))).as(Seq("chunk_idx", "chunk")))
-
-  /** Strip line/segment boilerplate recurring across ≥k documents
-    * (CCNet-style); returns (doc_id, n_segments, n_boiler, clean_text).
-    */
-  def stripBoilerplate(spark: SparkSession, sfDir: String): DataFrame =
-    text.Boilerplate.lineDedup(spark, sfDir)
-
-  /** Cap documents per source/domain (deterministic salted-hash order,
-    * two-pass exact rank — no whole-domain window).
-    */
-  def capPerSource(docs: DataFrame, cap: Int = ops.CorpusOps.SourceCap): DataFrame =
-    ops.CorpusOps.capPerSource(docs, cap)
-
-  /** Integer-exact unigram surprisal per document (perplexity-proxy
-    * quality band).
-    */
-  def scoreSurprisal(spark: SparkSession, sfDir: String): DataFrame =
-    ops.CorpusOps.unigramSurprisal(spark, sfDir)
-
-  /** Keep only new-batch docs that are NOT near-dups of the indexed
-    * corpus — the incremental ingestion-cycle filter.
-    */
-  def dedupIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.MinHashLSH.incrementalKeep(spark, sfDir)
-
-  /** Token→word-vector document embedding (the reference's
-    * `MeanEmbeddings` semantic): UD2 preprocess → broadcast vocab-table
-    * lookup → per-dim integer-quantized mean pool, in exact long form.
-    */
-  def docEmbedding(spark: SparkSession, sfDir: String): DataFrame =
-    sim.DocEmbedding.docEmbedding(spark, sfDir)
-
-  /** The ES `english`-analyzer twin: the (doc_id, pos, term) stream a
-    * search sink would index for analyzed-text fields — tokenize →
-    * possessive strip → stopwords → Porter-lite stem.
-    */
-  def englishAnalyze(spark: SparkSession, sfDir: String): DataFrame =
-    text.Stemmer.englishTerms(spark, sfDir)
-
-  /** The word2vec-style phrase pipeline (the reference's `build_bi` /
-    * `build_tri` declaration): PMI-lift collocation model + greedy
-    * token-stream merge; two passes finish trigrams.
-    */
-  def phraseBigrams(spark: SparkSession, sfDir: String): DataFrame =
-    text.Phrases.applyBigrams(spark, sfDir)
-
-  def phraseTrigrams(spark: SparkSession, sfDir: String): DataFrame =
-    text.Phrases.applyTrigrams(spark, sfDir)
-
-  /** Model-based quality filtering: fasttext-style hashed bag-of-words
-    * linear scorer against a broadcast weight table; exact integer
-    * score + keep verdict per document.
-    */
-  def qualityModelScore(spark: SparkSession, sfDir: String): DataFrame =
-    text.QualityModel.score(spark, sfDir)
-
-  /** TRAIN the quality classifier natively: heuristic-teacher seed
-    * labels → Naive Bayes class counts per hash slot → fixed-point
-    * integer log-odds weight table, ready for [[qualityModelScore]]'s
-    * scorer. (slot, cnt_pos, cnt_neg, w).
-    */
-  def qualityTrain(spark: SparkSession, sfDir: String): DataFrame =
-    text.QualityTrain.train(spark, sfDir)
-
-  /** Train on any labeled corpus (text, label) — the distillation seam. */
-  def qualityTrainDocs(labeled: DataFrame): DataFrame =
-    text.QualityTrain.trainDocs(labeled)
-
-  /** Incremental trainer steps: additive count tables per batch,
-    * merged then reweighted — bit-identical to whole-corpus training.
-    */
-  def qualityTrainCounts(labeled: DataFrame): DataFrame =
-    text.QualityTrain.countsOf(labeled)
-
-  def qualityMergeCounts(tables: DataFrame*): DataFrame =
-    text.QualityTrain.mergeCounts(tables: _*)
-
-  def qualityWeights(counts: DataFrame): DataFrame =
-    text.QualityTrain.weightsOf(counts)
-
-  /** Train per-language char-bigram profiles from (lang_true, text). */
-  def langProfiles(labeled: DataFrame): DataFrame =
-    text.LangProfile.profilesFrom(labeled)
-
-  /** Classify (doc_id, text) against a profile table: (doc_id,
-    * lang_pred, score); no-evidence docs absent.
-    */
-  def langClassify(docs: DataFrame, profiles: DataFrame): DataFrame =
-    text.LangProfile.classify(docs, profiles)
-
-  /** Stateless stream twin: adds `lang_pred` (NULL = no evidence) via
-    * one per-row expression against a collected profile map.
-    */
-  def langClassifyStream(docs: DataFrame,
-                         model: Map[(String, String), Long]): DataFrame =
-    text.LangProfile.classifyStream(docs, model)
-
-  /** Score any corpus with any (slot, w) table — trained or shipped. */
-  def qualityScoreDocs(docs: DataFrame, weights: DataFrame): DataFrame =
-    text.QualityModel.scoreDocs(docs, weights)
-
-  /** SemDeDup semantic deduplication: IVF-cluster-bucketed cosine
-    * near-dup pairs and the keep-one-representative corpus.
-    */
-  def semanticNearDupPairs(spark: SparkSession, sfDir: String): DataFrame =
-    sim.SemDedup.pairs(spark, sfDir)
-
-  def semanticDedup(spark: SparkSession, sfDir: String): DataFrame =
-    sim.SemDedup.kept(spark, sfDir)
-
-  /** BPE-encode the corpus vocabulary with the rank-ordered merge table
-    * learned from the gated pair statistics — subword tokens per word.
-    */
-  def bpeEncode(spark: SparkSession, sfDir: String): DataFrame =
-    text.Bpe.encode(spark, sfDir)
-
-  /** Winnowing fingerprints (guaranteed detection of shared runs
-    * ≥ k+w−1 chars) and the rare-fingerprint shared-pair report.
-    */
-  def winnowPairs(spark: SparkSession, sfDir: String): DataFrame =
-    dedup.Winnow.sharedPairs(spark, sfDir)
-
-  /** The scale-safe winnow report: copy-group membership in linear
-    * (rep, member, shared) form — what a 100 TB run should consume
-    * instead of the O(g²) member-pair expansion, which [[winnowPairs]]
-    * caps at [[dedup.Winnow.MaxExpandGroup]] members per group.
-    */
-  def winnowClusters(spark: SparkSession, sfDir: String): DataFrame =
-    dedup.Winnow.sharedClusters(spark, sfDir)
-
-  /** RefinedWeb/Gopher hygiene recipe as one lazy plan: the 7-row
-    * per-stage funnel report (and [[hygieneAssignments]] for the
-    * per-document stage labels).
-    */
-  def hygieneFunnel(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Hygiene.funnel(spark, sfDir)
-
-  def hygieneAssignments(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Hygiene.assignments(spark, sfDir)
-
-  /** Funnel report with the mergeable distinct-terms column — per-depth
-    * vocabulary from HLL sketch unions over the 7-row sketch table
-    * (spec-asserted; the gated funnel stays exact).
-    */
-  def hygieneFunnelWithVocab(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Hygiene.funnelWithVocab(spark, sfDir)
-
-  /** Exact heavy-hitter terms (count > n/K) without a vocabulary-sized
-    * shuffle — per-partition Misra-Gries candidates + exact re-count.
-    */
-  def heavyTerms(spark: SparkSession, sfDir: String): DataFrame =
-    text.HeavyHitters.heavyTerms(spark, sfDir)
-
-  /** Top BPE merge candidates (adjacent char pairs weighted by word
-    * frequency) — tokenizer-training statistics over the vocab table.
-    */
-  def bpeMergeCandidates(spark: SparkSession, sfDir: String): DataFrame =
-    text.Bpe.topPairs(spark, sfDir)
-
-  /** Materialize a training mixture: (doc, epoch) rows per the per-source
-    * rate recipe — deterministic up/downsampling.
-    */
-  def mixCorpus(docs: DataFrame): DataFrame =
-    ops.CorpusOps.mixCorpus(docs)
-
-  /** Concat-then-chunk sequence packing (token-budget batch assembly);
-    * [[mixAndPack]] packs the mixed corpus in one plan.
-    */
-  def packCorpus(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Packing.packSequences(spark, sfDir)
-
-  def mixAndPack(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Packing.mixPack(spark, sfDir)
-
-  /** Exact (doc, sequence) membership with mid-document cuts — the
-    * overflow-splitting refinement of [[packCorpus]].
-    */
-  def packMembership(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Packing.packOverflow(spark, sfDir)
-
-  /** Deterministic per-shard export manifest (counts, tokens, content
-    * checksum) — what a loader validates each training shard against.
-    */
-  def shardManifest(spark: SparkSession, sfDir: String): DataFrame =
-    sources.Layout.shardManifest(spark, sfDir)
-
-  /** Blocking-first fuzzy name matching (edit-distance join that never
-    * goes all-pairs).
-    */
-  def fuzzyNameJoin(spark: SparkSession, sfDir: String): DataFrame =
-    ops.FuzzyJoin.fuzzyNamePairs(spark, sfDir)
-
-  /** Morton-interleave two key columns — the sort key for Z-ordered
-    * writes (`sources.Layout.writeZOrdered`), pruning on either key.
-    */
-  def zOrderKey(x: org.apache.spark.sql.Column, y: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sources.Layout.zOf(x, y)
-
-  /** Small-file compaction: rewrite a parquet dir into ~targetBytes
-    * files (scan cost back to per-byte, not per-file).
-    */
-  def compactTable(spark: SparkSession, path: String, targetBytes: Long): (Int, Int) =
-    sources.Maintenance.compact(spark, path, targetBytes)
-
-  /** Targeted erasure from a shard-partitioned table: rewrites ONLY the
-    * partitions that can contain the doomed keys (work ∝ affected
-    * shards, never table size).
-    */
-  def deleteKeys(spark: SparkSession, tablePath: String, keyCol: String, keys: Seq[Long]): Int =
-    sources.Maintenance.deleteKeys(spark, tablePath, keyCol, keys)
-
-  /** Exact grouped second-moment statistics (covariance/correlation from
-    * integer moments — order-independent, mergeable).
-    */
-  def momentStats(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Relational.qMomentStats(spark, sfDir)
-
-  /** Native session-window sessionization (batch; streaming twin:
-    * `streaming.Sessionize.sessionWindowStream`).
-    */
-  def sessionize(spark: SparkSession, sfDir: String): DataFrame =
-    streaming.Sessionize.sessionWindowSummaries(spark, sfDir)
-
-  /** HTML → clean text with the markup-density report — the extraction
-    * step ahead of every text filter.
-    */
-  def extractHtml(spark: SparkSession, sfDir: String): DataFrame =
-    text.Html.extraction(spark, sfDir)
-
-  /** Real image-container header decode over a binary payload column:
-    * (format, width, height, channels) without any codec library — the
-    * cheap first filter of a media pipeline (see
-    * `multimodal.Multimodal.decodeHeader`).
-    */
-  def imageHeader(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    multimodal.Multimodal.decodeHeader(content)
-
-  /** The full crawl ingest chain over (doc_id, blob `.warc.gz` BINARY,
-    * robots STRING): magic sniff → gunzip → WARC walk → HTTP split
-    * (chunked + content codings + charset) → HTML extract → NFC →
-    * canonical URL → RFC 9309 robots screen → hygiene verdict with the
-    * exact-dup split — ONE plan, one exchange. Streaming twin:
-    * [[crawlIngestStream]].
-    */
-  def crawlIngest(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.CrawlPipeline.crawl(spark, sfDir)
-
-  /** Per-micro-batch stateless crawl ingest: blobs in, robots-allowed
-    * hygiene-surviving pages out; no state store, no watermark.
-    */
-  def crawlIngestStream(raw: DataFrame): DataFrame =
-    pipelines.CrawlPipeline.ingestStream(raw)
-
-  /** Split a WARC response payload into its HTTP message parts:
-    * status, headers, content type/charset/encoding, decoded body.
-    */
-  def httpMessage(payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftColumnShim.column(
-      plans.HttpMessage(org.apache.spark.sql.GraftColumnShim.expression(payload)))
-
-  /** RFC 9309 evaluation: 1/0 fetch verdict for (robots_txt, agent,
-    * path), wildcards included.
-    */
-  def robotsAllowed(robots: org.apache.spark.sql.Column,
-      agent: org.apache.spark.sql.Column,
-      path: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Robots.robotsAllowed(robots, agent, path)
-
-  /** Crawl-politeness metadata from robots.txt: the matched group's
-    * crawl-delay (ms) and the file's sitemap listing.
-    */
-  def robotsMeta(robots: org.apache.spark.sql.Column,
-      agent: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Robots.robotsMeta(robots, agent)
-
-  /** Politeness-aware fetch schedule: per canonical host, each fetch's
-    * not_before_ms is the running sum of prior fetches' crawl-delays.
-    */
-  def fetchSchedule(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.CrawlPipeline.fetchSchedule(spark, sfDir)
-
-  /** Frontier seen-filter, exact core: discovered (doc_id, url_key)
-    * rows not present in the seen set — one LEFT ANTI join.
-    */
-  def frontierNew(today: DataFrame, seen: DataFrame): DataFrame =
-    pipelines.Frontier.newUrlsFrom(today, seen)
-
-  /** Frontier seen-filter, Bloom-prefiltered (bit-identical to
-    * [[frontierNew]]): a fixed-size sketch of the seen keys rejects
-    * definitely-new URLs map-side; only the maybe-seen sliver meets
-    * the seen set in the exact verify anti-join.
-    */
-  def frontierNewBloom(today: DataFrame, seen: DataFrame): DataFrame =
-    pipelines.Frontier.newUrlsBloomFrom(today, seen)
-
-  /** Conditional-recrawl frontier: sitemap-discovered URLs kept when
-    * new or when their lastmod postdates the stored fetch, fed through
-    * the politeness scheduler — one lazy plan.
-    */
-  def frontierRecrawl(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Frontier.recrawl(spark, sfDir)
-
-  /** Crawl snapshot diff: per-canonical-key added / removed / changed /
-    * unchanged classification between two snapshots.
-    */
-  def crawlDelta(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Frontier.snapshotDelta(spark, sfDir)
-
-  /** Bounded-hop redirect-chain resolution: Location edges from parsed
-    * 301 responses, K keyed self-joins, cycles and over-deep chains
-    * reported `unresolved`.
-    */
-  def redirectResolve(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Redirects.resolve(spark, sfDir)
-
-  /** `<url>` entries (loc, lastmod, priority) extracted from sitemap
-    * XML on a (doc_id, xml) frame.
-    */
-  def sitemapUrlEntries(df: DataFrame): DataFrame =
-    text.Sitemaps.urlEntries(df)
-
-  /** RSS 2.0 / Atom 1.0 entries (link, title, published_epoch) from
-    * feed XML on a (doc_id, xml) frame — both dialects sniffed off the
-    * root element, dates normalized to one epoch column.
-    */
-  def feedEntries(df: DataFrame): DataFrame =
-    text.Feeds.entries(df)
-
-  /** Feed autodiscovery over a (doc_id, base, html) frame: resolved
-    * rss/atom link-rel=alternate targets.
-    */
-  def feedDiscovery(df: DataFrame): DataFrame =
-    text.Feeds.autodiscover(df)
-
-  /** Page-level robots directives (X-Robots-Tag ∪ meta robots) over a
-    * (doc_id, raw) frame of HTTP responses: noindex/nofollow/noarchive.
-    */
-  def pageRobots(df: DataFrame): DataFrame =
-    text.PageRobots.directives(df)
-
-  /** RFC 3986 §6.2.2 percent-encoding normalization of a URL column. */
-  def pctNormalize(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Canonical.pctNormalize(c)
-
-  /** Percent-encode a raw path segment (RFC 3986 §3.3 grammar). */
-  def pctEncodePath(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Canonical.pctEncodePath(c)
-
-  /** Percent-encode a raw query value (unreserved-only grammar). */
-  def pctEncodeQuery(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Canonical.pctEncodeQuery(c)
-
-  /** IDN host → registry (ASCII/Punycode) form — the canonical crawl key. */
-  def idnAscii(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Canonical.idnAscii(c)
-
-  /** IDN host → display (Unicode) form. */
-  def idnUnicode(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Canonical.idnUnicode(c)
-
-  /** Per-user hourly series with gaps materialized and forward-filled. */
-  def hourlyGapFill(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Events.hourlyGapFill(spark, sfDir)
-
-  /** RFC 9309 §2.3.1 robots fetch-status policy screen. */
-  def robotsStatusScreen(spark: SparkSession, sfDir: String): DataFrame =
-    text.Robots.statusScreen(spark, sfDir)
-
-  /** Unicode script histogram + dominant script over (doc_id, text). */
-  def scriptDetect(df: DataFrame): DataFrame =
-    text.Scripts.detect(df)
-
-  /** Median + MAD + 3·MAD outlier count per key — exact integers,
-    * histogram-selection medians (no per-group row sort).
-    */
-  def robustStats(rows: DataFrame, key: org.apache.spark.sql.Column,
-      v: org.apache.spark.sql.Column): DataFrame =
-    ops.Quantiles.robustStats(rows, key, v)
-
-  /** HTTP 206 partial-content reassembly over a (url, raw) frame:
-    * parts stitched in range order with a tiling completeness verdict.
-    */
-  def rangeReassemble(df: DataFrame): DataFrame =
-    pipelines.RangeFetch.reassemble(df)
-
-  /** WARC revisit-record derivation between two crawl snapshots:
-    * unchanged refetches dedup to payload-free revisit records.
-    */
-  def warcRevisit(spark: SparkSession, sfDir: String): DataFrame =
-    sources.WarcWriter.revisitDerived(spark, sfDir)
-
-  /** HTML table cells as a relation over a (doc_id, html) frame. */
-  def htmlTableCells(df: DataFrame): DataFrame =
-    text.HtmlTables.cells(df)
-
-  /** NESTING-AWARE table extraction over a (doc_id, html) frame:
-    * every table at every depth with (depth, parent) tree edges,
-    * wrapper-cell text recovered. [[htmlTableCells]] is the
-    * innermost-only fast path.
-    */
-  def htmlTableTree(df: DataFrame): DataFrame =
-    text.HtmlTables.cellsNested(df)
-
-  /** Markdown linearization of a cell relation (from either
-    * extractor): (doc_id, tbl, md) — pipes escaped, header separator
-    * after a row-0 header.
-    */
-  def tableMarkdown(cells: DataFrame): DataFrame =
-    text.HtmlTables.markdown(cells)
-
-  /** T5-style span corruption over (doc_id, text): (doc_id, input,
-    * target, n_spans) — bit-reproducible sentinel masking, lossless
-    * (target splices back into input).
-    */
-  def spanCorrupt(docs: DataFrame): DataFrame =
-    text.Objectives.spanCorrupt(docs)
-
-  /** Fill-in-the-middle (PSM) samples over (doc_id, text): (doc_id,
-    * psm, p1, p2); sub-3-token docs carry no sample.
-    */
-  def fimSamples(docs: DataFrame): DataFrame =
-    text.Objectives.fim(docs)
-
-  /** Per-language tokenizer fertility: (lang, words, bpe_toks,
-    * fertility_bp) — the multilingual vocab-audit table.
-    */
-  def bpeFertility(spark: SparkSession, sfDir: String): DataFrame =
-    text.Bpe.fertility(spark, sfDir)
-
-  /** Per-document cross-corpus n-gram novelty: (doc_id, windows,
-    * novel, novelty_bp) — low = template/near-copy mass.
-    */
-  def noveltyScores(docs: DataFrame): DataFrame =
-    text.Signals.novelty(docs)
-
-  /** Token-coverage curve: smallest frequency-ranked vocab reaching
-    * 50/75/90/95/99/100% of occurrences.
-    */
-  def vocabCoverage(docs: DataFrame): DataFrame =
-    text.Signals.vocabCoverage(docs)
-
-  /** Dedup-impact report: cluster-size histogram with doc/token
-    * savings — predicts the apply step exactly.
-    */
-  def dedupReport(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.clusterReport(spark, sfDir)
-
-  /** Title / description / OpenGraph metadata over a (doc_id, html)
-    * frame, with the og-falls-back-to-title card rule.
-    */
-  def pageMeta(df: DataFrame): DataFrame =
-    text.PageMeta.extract(df)
-
-  /** hreflang language-variant clusters over a (doc_id, html) frame. */
-  def hreflangClusters(df: DataFrame): DataFrame =
-    text.PageMeta.hreflang(df)
-
-  /** Integer-exact Gale–Church (1993) segment alignment of two
-    * `array<int>` length columns → ordered bead structs
-    * (a_start, a_count, b_start, b_count); per-row, codegen'd.
-    */
-  def galeChurchAlign(a: org.apache.spark.sql.Column,
-                      b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.ParallelText.galeChurch(a, b)
-
-  /** Parallel-text bead pairs over the planted hreflang clusters:
-    * pivot language aligned against every variant via
-    * [[galeChurchAlign]] — (cluster, lang_a, lang_b, bead, spans,
-    * seg_a, seg_b).
-    */
-  def hreflangAligned(spark: SparkSession, sfDir: String): DataFrame =
-    text.ParallelText.hreflangAligned(spark, sfDir)
-
-  /** Measured recall/precision (basis points) of the CDC duplicated-
-    * span scrub against exact planted spans — the Lee et al. 2022
-    * proxy claim as a number.
-    */
-  def cdcSpanRecall(spark: SparkSession, sfDir: String): DataFrame =
-    Dedup.Cdc.spanRecall(spark, sfDir)
-
-  /** Crawl-trap report over a (url, fp) crawl log: per (host,
-    * URL-template) family URL count vs content diversity, trap flag.
-    */
-  def crawlTraps(df: DataFrame): DataFrame =
-    pipelines.Traps.trapReport(df)
-
-  /** Trap-screened frontier admission over a (url, fp) crawl log:
-    * candidates minus trap-family members (broadcast anti-join).
-    */
-  def trapScreen(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Traps.screened(spark, sfDir)
-
-  /** Anchor-text rollup per resolved link target over a (base, html)
-    * frame: in-links, distinct source hosts, consensus anchor.
-    */
-  def anchorText(df: DataFrame): DataFrame =
-    text.Anchors.anchorReport(text.Anchors.anchorEdges(df))
-
-  /** Mirror-host report over a (host, fp) frame: host pairs sharing
-    * most of their content fingerprints, stop-fp capped.
-    */
-  def mirrorHosts(df: DataFrame): DataFrame =
-    pipelines.Mirrors.mirrorReport(df)
-
-  /** HITS hubs/authorities over a (src, dst) BIGINT edge list — exact
-    * fixed-point integers, bit-reproducible.
-    */
-  def hits(edges: DataFrame, iters: Int = ops.Graph.Iters): DataFrame =
-    ops.Graph.hitsOf(edges, iters)
-
-  /** Reconciled sitemap+feed discovery table keyed on the canonical
-    * URL: per-source announcement counts, earliest announced instant.
-    */
-  def discoveryMerge(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Discovery.merged(spark, sfDir)
-
-  /** Corpus-wide paragraph dedup over a (doc_id, text) frame with
-    * blank-line paragraphs: global keep-first, reassembled survivors.
-    */
-  def paragraphDedup(df: DataFrame): DataFrame =
-    text.Paragraphs.dedupParagraphs(df)
-
-  /** Streaming politeness gate: per-host courtesy delay held across
-    * micro-batches (stateful; watermark-evicted host state).
-    */
-  def politenessStream(
-      candidates: org.apache.spark.sql.Dataset[streaming.PolitenessStream.Candidate],
-      lateness: String = "1 hour")
-      : org.apache.spark.sql.Dataset[streaming.PolitenessStream.Scheduled] =
-    streaming.PolitenessStream.scheduleStream(candidates, lateness)
-
-  /** Per-key change-rate estimation across snapshot generations:
-    * integer obs/changes counts bucketed hot/warm/cold/unknown — the
-    * revisit-interval heuristic of an incremental crawler.
-    */
-  def revisitPolicy(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Frontier.revisitPolicy(spark, sfDir)
-
-  /** Serialize one WARC/1.0 record (byte framing + sha-256 payload
-    * digest) — the write half of the WARC story; `uri` may be null.
-    */
-  def warcWriteRecord(recType: org.apache.spark.sql.Column,
-      uri: org.apache.spark.sql.Column,
-      payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sources.WarcWriter.record(recType, uri, payload)
-
-  /** One record as its own gzip member — concat members for the
-    * CommonCrawl `.warc.gz` shard layout.
-    */
-  def warcWriteGzMember(recType: org.apache.spark.sql.Column,
-      uri: org.apache.spark.sql.Column,
-      payload: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    sources.WarcWriter.gzMember(recType, uri, payload)
-
-  /** WET derivation: 200-responses out of `.warc.gz`, HTML-extracted,
-    * re-serialized as `conversion` records and parsed back.
-    */
-  def wetRecords(spark: SparkSession, sfDir: String): DataFrame =
-    sources.WarcWriter.wetRecords(spark, sfDir)
-
-  /** WAT derivation: per-response fetch metadata + resolved outlinks +
-    * the JSON envelope.
-    */
-  def watRecords(spark: SparkSession, sfDir: String): DataFrame =
-    sources.WarcWriter.watRecords(spark, sfDir)
-
-  /** CDX index: SURT-keyed, globally-ordered capture index with shard
-    * assignments, running byte offsets and payload digests.
-    */
-  def cdxIndex(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.CdxIndex.index(spark, sfDir)
-
-  /** RFC 9111 freshness decision per stored response: max-age/Age,
-    * no-cache, Expires against the pinned clock, Last-Modified
-    * heuristic — all integer seconds.
-    */
-  def cacheFreshness(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Revalidate.freshness(spark, sfDir)
-
-  /** Conditional-fetch outcome merge: 304 keeps the stored copy, 200
-    * replaces it, 404 tombstones it.
-    */
-  def revalidateMerge(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Revalidate.merge(spark, sfDir)
-
-  /** Conditional request per stale copy (RFC 9110 §13.1): skip when
-    * fresh, If-None-Match / If-Modified-Since from the stored
-    * validators otherwise.
-    */
-  def conditionalRequests(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.Revalidate.conditionalRequests(spark, sfDir)
-
-  /** Per-host page-budget allocation over the host report —
-    * largest-remainder method, Σ alloc == budget exactly.
-    */
-  def crawlBudget(spark: SparkSession, sfDir: String): DataFrame =
-    pipelines.CrawlPipeline.crawlBudget(spark, sfDir)
-
-  /** Write the planted `.warc.gz` archive (one gzip member per record,
-    * CDX-ordered shards) plus its member-offset sidecar index.
-    */
-  def writeWarcArchive(spark: SparkSession, sfDir: String, outDir: String): Unit =
-    sources.WarcArchive.writeArchive(spark, sfDir, outDir)
-
-  /** GDPR erasure over a written archive: byte-splice the doomed
-    * members out of ONLY the shards that contain them (untouched
-    * shards stay bit-identical), reverify survivors through the
-    * reader. Returns shards rewritten.
-    */
-  def eraseWarcDocs(spark: SparkSession, archiveDir: String, docIds: Seq[Long]): Int =
-    sources.WarcArchive.erase(spark, archiveDir, docIds)
-
-  /** Read an archive back through the multi-member gunzip + WARC walk:
-    * (doc_id, uri, content_length, digest).
-    */
-  def readWarcArchive(spark: SparkSession, archiveDir: String): DataFrame =
-    sources.WarcArchive.readArchive(spark, archiveDir)
-
-  /** EXACT duplicated-substring removal (Lee et al. 2022 ExactSubstr
-    * semantics at token granularity): every duplicated span ≥ k tokens
-    * cut from every occurrence — recall 1 by construction, unlike the
-    * CDC proxy. (doc_id, clean, removed_tokens, n_spans).
-    */
-  def scrubExactSpans(docs: DataFrame,
-                      k: Int = dedup.ExactSpans.KTokens): DataFrame =
-    dedup.ExactSpans.scrub(docs, k)
-
-  /** Whitespace-exact ExactSubstr: duplicate spans matched over the
-    * whitespace-normalized token stream, surviving text spliced back
-    * from the ORIGINAL bytes — tabs/newlines/multi-space round-trip
-    * exactly and a span-free document returns byte-identical. The
-    * recall-1 default for real (unnormalized) corpora.
-    */
-  def scrubExactSpansWs(docs: DataFrame,
-                        k: Int = dedup.ExactSpans.KTokens): DataFrame =
-    dedup.ExactSpans.scrubWs(docs, k)
-
-  /** Token-BUDGETED corpus mix (the complement of [[mixCorpus]]'s
-    * rate recipe): exact largest-remainder token quotas per source,
-    * hash-order selection. (doc_id, source, toks).
-    */
-  def mixBudget(docs: DataFrame): DataFrame =
-    ops.Mixing.mix(docs)
-
-  /** Temperature-balanced multilingual mix (α = ½): per-language
-    * quotas ∝ isqrt(tokens) by largest remainder, hash-order
-    * selection. (doc_id, lang, toks).
-    */
-  def mixTemperature(docs: DataFrame): DataFrame =
-    ops.Mixing.mixTemperature(docs)
-
-  /** The temperature-mix quota table: (lang, avail_toks, w, quota,
-    * share_bp, prop_bp) — share vs proportional makes the α-curve
-    * reshaping visible.
-    */
-  def mixTemperatureReport(docs: DataFrame): DataFrame =
-    ops.Mixing.temperatureQuotas(docs)
-
-  /** Per-source budget-mix report: quota, picked docs/tokens, visible
-    * shortfall for availability-capped sources.
-    */
-  def mixBudgetReport(docs: DataFrame): DataFrame =
-    ops.Mixing.mixReport(docs)
-
-  /** Rule-based sentence segmentation of a (doc_id, text) frame:
-    * (doc_id, seg_idx, segment) — abbreviation / initial / lowercase-
-    * continuation boundaries merged back.
-    */
-  def segmentSentences(docs: DataFrame): DataFrame =
-    text.Sentences.segments(docs)
-
-  /** Smallest token window containing all query terms, per document —
-    * the proximity signal next to [[graft.text.Retrieval]]'s BM25.
-    */
-  def minWindowProximity(spark: SparkSession, sfDir: String): DataFrame =
-    text.Proximity.minWindow(spark, sfDir)
-
-  /** IDN homograph screen over a (doc_id, host) frame: UTS #39-style
-    * confusable skeleton, per-label mixed-script test, spoof flag
-    * against the protected-name list.
-    */
-  def screenConfusables(hosts: DataFrame): DataFrame =
-    text.Confusables.screen(hosts)
-
-  /** Weekly cohort retention matrix over the events table. */
-  def cohortRetention(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Events.cohortRetention(spark, sfDir)
-
-  /** Ordered view→click→purchase funnel with a 24h per-hop horizon. */
-  def funnelStages(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Events.funnel(spark, sfDir)
-
-  /** Bucketed interval-containment join of events into per-user
-    * windows — chunk-replicated, equi-joined, never a cartesian.
-    */
-  def intervalJoin(spark: SparkSession, sfDir: String): DataFrame =
-    ops.IntervalJoin.joined(spark, sfDir)
-
-  /** Streaming funnel: per-user stage transitions over an event
-    * stream, state evicted by event-time timeout.
-    */
-  def funnelStream(events: org.apache.spark.sql.Dataset[streaming.FunnelStream.Ev])
-      : org.apache.spark.sql.Dataset[streaming.FunnelStream.StageReached] =
-    streaming.FunnelStream.funnelStream(events)
-
-  /** JSONL parse with malformed-line quarantine over a (doc_id, line)
-    * frame: (doc_id, is_valid, fields…) — invalid lines flagged, never
-    * dropped or thrown.
-    */
-  def parseJsonLines(lines: DataFrame): DataFrame =
-    sources.JsonLines.parse(lines)
-
-  // ---- round-12 closing-session surface ------------------------------
-
-  /** EXACT set-similarity join (recall 1): every pair with shingle-set
-    * Jaccard ≥ τ, prefix-filtered + exact-copy-collapsed.
-    */
-  def setSimJoin(docs: DataFrame, tauBp: Int = dedup.SetSim.TauBp): DataFrame =
-    dedup.SetSim.similarityJoin(docs, tauBp)
-
-  /** Measured MinHash-LSH recall against the exact pair list. */
-  def lshRecall(spark: SparkSession, sfDir: String): DataFrame =
-    dedup.SetSim.lshRecall(spark, sfDir)
-
-  /** Keep each near-dup cluster's highest-QUALITY member. */
-  def qualityRepresentatives(spark: SparkSession, sfDir: String): DataFrame =
-    dedup.Dedup.qualityReps(spark, sfDir)
-
-  /** Chat-template rendering of (conv_id, turn_idx, role, content). */
-  def renderChat(messages: DataFrame): DataFrame =
-    text.ChatTemplate.render(messages)
-
-  /** Assistant loss-mask [start, end) character spans per turn. */
-  def chatLossSpans(messages: DataFrame): DataFrame =
-    text.ChatTemplate.lossSpans(messages)
-
-  /** SCD type-2 dimension build over an event stream. */
-  def scd2(events: DataFrame): DataFrame = ops.Scd.scd2(events)
-
-  /** Banded Hamming near-dup join over (media_id, width, height,
-    * dhash) perceptual image fingerprints.
-    */
-  def imageNearDups(dh: DataFrame): DataFrame =
-    multimodal.ImageHash.hammingPairs(dh)
-
-  /** Energy-envelope audio fingerprint near-dup join. */
-  def audioNearDups(fp: DataFrame): DataFrame =
-    multimodal.AudioSegments.fpPairs(fp)
-
-  /** USTAR member walk (WebDataset shard reading) over binary shards. */
-  def tarMembers(shard: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftColumnShim.column(plans.TarMembers(
-      org.apache.spark.sql.GraftColumnShim.expression(shard)))
-
-  /** RM3 pseudo-relevance-feedback rerank over the fixture corpus. */
-  def rm3TopK(docs: DataFrame): DataFrame = text.Retrieval.rm3TopKOf(docs)
-
-  /** Linkage-preserving e-mail pseudonymization of a text column. */
-  def pseudonymize(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Pseudonym.pseudonymize(c)
-
-  /** Order-independent dataset fingerprint (XOR of row digests). */
-  def tableFingerprint(docs: DataFrame): DataFrame =
-    ops.Versioning.fingerprint(docs)
-
-  /** Keyed three-way diff between two dataset versions. */
-  def versionDiff(a: DataFrame, b: DataFrame): DataFrame =
-    ops.Versioning.versionDiff(a, b)
-
-  /** Near-dup pairs crossing train/val/test boundaries. */
-  def splitLeakage(spark: SparkSession, sfDir: String): DataFrame =
-    ops.CorpusOps.splitLeakage(spark, sfDir)
-
-  /** Streaming SCD-2 twin with TTL retirement. */
-  def scdStream(events: org.apache.spark.sql.Dataset[streaming.ScdStream.Ev])
-      : org.apache.spark.sql.Dataset[streaming.ScdStream.VersionRow] =
-    streaming.ScdStream.scdStream(events)
-
-  // ---- round-13 surface ----------------------------------------------
-
-  /** Undo Latin-1/cp1252 mojibake exactly (ftfy core); genuine text
-    * passes through untouched.
-    */
-  def fixMojibake(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Mojibake.fixOf(c)
-
-  /** Word-free garbage signal: (n_chars, distinct_chars, entropy_q)
-    * struct — repetition ≈ 1 bit/char, language ≈ 4, blobs ≈ 6.
-    */
-  def charEntropy(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Entropy.entropyOf(c)
-
-  /** Leftmost-longest blocklist scrub: (clean, n_replaced) struct. */
-  def scrubBlocklist(c: org.apache.spark.sql.Column,
-                     patterns: Seq[String]): org.apache.spark.sql.Column =
-    text.Blocklist.multiReplace(c, patterns)
-
-  /** Bitext pair hygiene verdicts over (pair_id, src, tgt). */
-  def screenBitext(pairs: DataFrame): DataFrame = text.Bitext.screen(pairs)
-
-  /** DPO pairs from rated completions (prompt_id, cand_id, rating). */
-  def preferencePairs(cands: DataFrame): DataFrame =
-    text.Preference.pairsOf(cands)
-
-  /** GPT-2 byte-level pretokens (array<string>), losslessly mapped. */
-  def bytePretokenize(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.BytePretok.pretokensOf(c)
-
-  /** Length-bucketed batch report (pad_waste per batch). */
-  def lengthBatches(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Batching.batches(spark, sfDir)
-
-  /** Last-touch view→purchase attribution over the events table. */
-  def attributionLastTouch(spark: SparkSession, sfDir: String): DataFrame =
-    ops.Attribution.lastTouch(spark, sfDir)
-
-  /** Watermarked stream-stream attribution candidates. */
-  def attributionStream(views: DataFrame, purchases: DataFrame): DataFrame =
-    streaming.AttributionStream.candidatePairs(views, purchases)
-
-  /** Perceptual fingerprints for the other two image codecs. */
-  def jpegDhash(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    multimodal.ImageHash.jpegDhashOf(content)
-  def gifDhash(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    multimodal.ImageHash.gifDhashOf(content)
-
-  /** Video fingerprint: per-frame dHash signature struct. */
-  def videoDhash(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    multimodal.VideoHash.aviDhashOf(content)
-
-  /** Near-dup clusters keep the most TRUSTED source's member. */
-  def sourceRepresentatives(spark: SparkSession, sfDir: String): DataFrame =
-    dedup.Dedup.sourceReps(spark, sfDir)
-
-  /** Strict IDN registry form (BIDI + CONTEXTJ enforced; null = reject). */
-  def idnAsciiStrict(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    text.Canonical.idnAsciiStrict(c)
-
-  // ---- round-14 surface ----
-
-  /** Resize-invariant banded Hamming pairs over a (media_id, width,
-    * height, dhash) fingerprint table — aspect-class keyed, so
-    * thumbnails meet their originals (X230).
-    */
-  def imageNearDupsRescaled(dh: DataFrame, bits: Int): DataFrame =
-    multimodal.ImageHash.hammingPairs(dh, bits = bits)
-
-  /** Long-video near-dup pairs: frame-range-banded hash arrays with the
-    * exact zip_with XOR popcount verify (X231).
-    */
-  def videoNearDupsLong(spark: SparkSession, sfDir: String): DataFrame =
-    multimodal.VideoHash.nearDupPairsLong(spark, sfDir)
-
-  /** ±1-frame trim-tolerant video near-dup pairs (X232). */
-  def videoNearDupsTrim(spark: SparkSession, sfDir: String): DataFrame =
-    multimodal.VideoHash.nearDupPairsTrim(spark, sfDir)
-
-  /** Amplitude stats over a FLAC blob — same schema as the WAV path
-    * (n_samples, sum_abs, peak, clip_count); all-null struct on non-FLAC
-    * input (X233).
-    */
-  def flacStats(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftColumnShim.column(plans.FlacPcmStats(
-      org.apache.spark.sql.GraftColumnShim.expression(content)))
-
-  /** Envelope fingerprint of a FLAC blob — identical bits to the WAV
-    * fingerprint of the same samples (X234).
-    */
-  def flacFingerprint(content: org.apache.spark.sql.Column,
-                      cells: Int = multimodal.AudioSegments.Fp32Cells): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftColumnShim.column(plans.FlacFingerprint(
-      org.apache.spark.sql.GraftColumnShim.expression(content), cells))
-
-  /** Resample-invariant (keyless) audio near-dup pairs over a
-    * (media_id, afp) fingerprint table at `bits` envelope bits (X235).
-    */
-  def audioNearDupsResampled(fp: DataFrame,
-                             bits: Int = multimodal.AudioSegments.Fp32Cells): DataFrame =
-    multimodal.AudioSegments.fpPairs(fp, bits = bits,
-      maxHam = multimodal.AudioSegments.Fp32MaxHam)
-
-  /** Zstandard decode: concatenated frames → text; null on malformed /
-    * dictionary / over-cap input (X236).
-    */
-  def zstdText(content: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftColumnShim.column(plans.ZstdText(
-      org.apache.spark.sql.GraftColumnShim.expression(content)))
-
-  /** Stored-mode zstd frame around a string's UTF-8 bytes. */
-  def zstdStoreBytes(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.GraftColumnShim.column(plans.ZstdStoreBytes(
-      org.apache.spark.sql.GraftColumnShim.expression(c)))
-
-  /** Release the operator-registered caches (fingerprint/member
-    * tables) created by THIS thread's invocations — for long-lived
-    * sessions embedding many invocations. Thread-scoped so concurrent
-    * pipelines sharing one SparkSession can never drop each other's
-    * still-in-use caches; [[releaseAllCaches]] is the global sweep.
-    */
-  def releaseCaches(): Unit = ops.Caches.release()
-
-  /** Release every operator-registered cache across all threads — call
-    * only when no other query on the session is executing (session
-    * teardown, end of a harness run).
-    */
-  def releaseAllCaches(): Unit = ops.Caches.releaseAll()
 }

@@ -1,12 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan-audit dump: writes `explain("formatted")` output of every
   * registered query to `<outDir>/<name>.plan.txt`. The artifact the
   * scale review reads — pushed filters, exchange placement, codegen
   * stages, broadcast choices — without re-running anything by hand.
+  * Runs on the same session as [[Bench]], so the plans are the plans
+  * the bench times.
   *
   * Usage: `sbt "runMain graft.Plans /root/testdata/sf0.001 /tmp/plans [only=q_a,q_b]"`
   * — `only=` restricts to the named queries (targeted before/after plan
@@ -14,19 +15,10 @@ import java.nio.file.{Files, Paths}
   */
 object Plans {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args.filterNot(_.startsWith("only=")).take(2)
-    val only: Option[Set[String]] = args.find(_.startsWith("only="))
-      .map(_.stripPrefix("only=").split(",").toSet)
-    val spark = Graft.configure(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (Seq(sfDir, outDir), queries) = Harness.queries(args.toSeq)
+    val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try {
         val qe = fn(spark, sfDir).queryExecution
         val txt = qe.explainString(org.apache.spark.sql.execution.FormattedMode)

@@ -1,8 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+import Harness.jstr
 
 /** 10× scale experiment over the FULL query registry: key-offset unions
   * of the sf0.1 fixtures → time every registered query at 1× and 10× →
@@ -15,7 +16,8 @@ import java.nio.file.{Files, Paths}
   *
   * Usage: `sbt "runMain graft.ScaleProbe [outFile] [only=q_a,q_b]"` —
   * `only=` restricts to the named queries (targeted re-measure after a
-  * fix, without the full-registry run).
+  * fix, without the full-registry run). Runs at `SPARK_GRAFT_CPUS` like
+  * every harness main.
   */
 object ScaleProbe {
 
@@ -32,13 +34,9 @@ object ScaleProbe {
   val GrowthBound = 13.0
 
   def main(args: Array[String]): Unit = {
-    val outFile = args.filterNot(_.startsWith("only=")).headOption.getOrElse("SCALE_r03.json")
-    val only: Option[Set[String]] = args.find(_.startsWith("only="))
-      .map(_.stripPrefix("only=").split(",").toSet)
-    val spark = Graft.configure(SparkSession.builder()).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (positional, queries) = Harness.queries(args.toSeq)
+    val outFile = positional.headOption.getOrElse("SCALE_r03.json")
+    val spark = Harness.session()
     val src = "/root/testdata/sf0.1"
     val dst = "/tmp/sf1_synth"
     val copies = 10
@@ -74,13 +72,6 @@ object ScaleProbe {
       out.repartition(32).write.mode("overwrite").parquet(s"$dst/events.parquet")
     }
 
-    def fullEval(df: DataFrame): Unit =
-      { df.select(bit_xor(xxhash64(struct(df.columns.map(col): _*)))).collect(); () }
-
-    def timed(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-
     // Min over passes, cold cache each pass — a single timed pass let a
     // one-off stall (GC, page-cache eviction after a heavy neighbor)
     // masquerade as super-linear growth: one run recorded q_asof_join's
@@ -88,38 +79,36 @@ object ScaleProbe {
     // passes, matching Bench — whose measured evidence is that min-of-2
     // is NOT enough on this host (a min-of-2 artifact still carried a
     // stall-shaped q5_local_volume t1 4× its true cost).
-    def timedMin(passes: Int)(f: => Unit): Double =
-      (1 to passes).map { _ => spark.catalog.clearCache(); timed(f) }.min
+    def timedMin(passes: Int)(df: => DataFrame): Double =
+      (1 to passes).map(_ => Harness.coldRun(spark)(df)).min
 
     println(s"rows: docs=${spark.read.parquet(s"$dst/documents.parquet").count()}, " +
       s"lineitem=${spark.read.parquet(s"$dst/lineitem.parquet").count()}")
 
-    val rows = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .flatMap { case (name, fn) =>
+    val rows = queries.map { case (name, fn) =>
       try {
         // warm up EACH scale before timing it: JIT + codegen for t1, and
         // any per-corpus one-time materialization (e.g. Dedup.PairTable's
         // checkpoint) for BOTH sides — otherwise a query whose warmup only
         // touched 1× would charge the 10× pass with setup cost and fake a
         // super-linear ratio.
-        spark.catalog.clearCache()
-        fullEval(fn(spark, src))
-        val t1 = timedMin(3)(fullEval(fn(spark, src)))
-        spark.catalog.clearCache()
-        fullEval(fn(spark, dst))
-        val t10 = timedMin(3)(fullEval(fn(spark, dst)))
+        Harness.releaseCaches(spark)
+        Harness.fullEval(fn(spark, src))
+        val t1 = timedMin(3)(fn(spark, src))
+        Harness.releaseCaches(spark)
+        Harness.fullEval(fn(spark, dst))
+        val t10 = timedMin(3)(fn(spark, dst))
         val ratio = t10 / math.max(t1, 1e-3)
         // Locale.ROOT: the default-locale f-interpolator renders 0,507 in
         // comma-decimal locales — invalid JSON
         def num(x: Double, prec: Int) =
           String.format(java.util.Locale.ROOT, s"%.${prec}f", Double.box(x))
         println(s"SCALE $name: 1x=${num(t1, 2)} s 10x=${num(t10, 2)} s ratio=${num(ratio, 1)}")
-        Some(s"""  "$name": {"t1_sec": ${num(t1, 3)}, "t10_sec": ${num(t10, 3)}, "ratio": ${num(ratio, 2)}, "super_linear": ${ratio > GrowthBound}}""")
+        s"""  ${jstr(name)}: {"t1_sec": ${num(t1, 3)}, "t10_sec": ${num(t10, 3)}, "ratio": ${num(ratio, 2)}, "super_linear": ${ratio > GrowthBound}}"""
       } catch {
         case e: Throwable =>
           System.err.println(s"SCALE $name FAILED: ${e.getMessage}")
-          Some(s"""  "$name": {"error": "${e.getClass.getSimpleName}"}""")
+          s"""  ${jstr(name)}: {"error": ${jstr(e.getClass.getSimpleName)}}"""
       }
     }
     // measured skew evidence (VERDICT r8 #8): max task shuffle-read for
@@ -131,7 +120,7 @@ object ScaleProbe {
     } catch {
       case e: Throwable =>
         System.err.println(s"SKEW PROOF FAILED: ${e.getMessage}")
-        s"""  "_skew_proof": {"error": "${e.getClass.getSimpleName}"}"""
+        s"""  "_skew_proof": {"error": ${jstr(e.getClass.getSimpleName)}}"""
     }
     // Bloom-frontier sliver evidence (VERDICT r9 #7, re-planted per
     // VERDICT r10 #3): at the 10× corpus, how many of today's rows
@@ -165,10 +154,10 @@ object ScaleProbe {
     } catch {
       case e: Throwable =>
         System.err.println(s"BLOOM SLIVER FAILED: ${e.getMessage}")
-        s"""  "_bloom_sliver": {"error": "${e.getClass.getSimpleName}"}"""
+        s"""  "_bloom_sliver": {"error": ${jstr(e.getClass.getSimpleName)}}"""
     }
     val json = (rows :+ skewRow :+ bloomRow).mkString(
-      s"""{\n  "_meta": {"copies": $copies, "src": "$src", "growth_bound": $GrowthBound},\n""",
+      s"""{\n  "_meta": {"copies": $copies, "src": ${jstr(src)}, "growth_bound": $GrowthBound},\n""",
       ",\n", "\n}")
     Files.writeString(Paths.get(outFile), json)
     println(s"wrote $outFile")

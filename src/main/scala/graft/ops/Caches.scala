@@ -14,8 +14,9 @@ import org.apache.spark.storage.StorageLevel
   * point inside them (unlike [[Graph]], which iterates internally and
   * releases each round's caches itself). Instead every such persist is
   * REGISTERED here, and the session owner releases them at its natural
-  * seam: the Verify/Bench harnesses call `spark.catalog.clearCache()`
-  * between queries (which already drops these blocks); a library user
+  * seam: the harness mains call [[graft.Harness.releaseCaches]] between
+  * queries (`clearCache`, which already drops these blocks, then
+  * [[releaseAll]], which empties the registry); a library user
   * embedding many invocations in one session calls [[release]] after
   * consuming each result. Entries are idempotent to release twice —
   * `unpersist` on an already-unpersisted frame is a no-op.
@@ -69,7 +70,7 @@ object Caches {
   def release(): Unit = drain(registries.remove(Thread.currentThread.getId))
 
   /** Unpersist every registered frame across ALL threads — the harness
-    * seam (end of a Verify/Bench run, session teardown). Must not run
+    * seam (between queries of a harness run, session teardown). Must not run
     * while another query on the same session is executing, or that
     * query's caches recompute mid-flight (safe, but the expensive
     * decode passes run twice).

@@ -33,6 +33,14 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.parseQueriesBlock("""{"value":3.0}""") == Map.empty[String, Double])
   }
 
+  test("jstr escapes every control character and round-trips through parseQueriesBlock") {
+    val name = (0 until 0x20).map(_.toChar).mkString + "\"\\q"
+    val escaped = Harness.jstr(name)
+    assert(!escaped.exists(_ < ' '), s"raw control character in $escaped")
+    assert(Bench.parseQueriesBlock(s"""{"queries":{$escaped:1.5,"q_b":0.25}}""") ==
+      Map(name -> 1.5, "q_b" -> 0.25))
+  }
+
   test("driftedQueries flags >limit× regressions and nothing else") {
     val prev = Map("q_slow" -> 0.40, "q_same" -> 1.00, "q_faster" -> 2.00,
       "q_err_prev" -> -1.0, "q_mild" -> 1.00)

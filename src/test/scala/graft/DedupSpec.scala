@@ -243,6 +243,24 @@ class DedupSpec extends SparkSuite {
     val reps = Dedup.repsOf(clusters, quality).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(reps == Map(1L -> (2L, 99L), 7L -> (7L, 5L)))
+
+    // the same rule over recall-1 SetSim pairs: 1 and 2 share a 40-token
+    // body (2 is longer, so scores higher), 3 is unique; the cluster keeps
+    // its best-scoring member, never simply the lowest doc_id
+    val shared = (0 until 40).map(i => s"w$i").mkString(" ")
+    val docs = Seq(
+      (1L, shared),
+      (2L, s"$shared extra context tokens improving coverage here today"),
+      (3L, "entirely different content about something else altogether"))
+      .toDF("doc_id", "text")
+    val q = docs.select(col("doc_id"),
+      text.Analysis.qualityQFromTokens(text.TextOps.tokenize(col("text"))).as("q"))
+    val qs = q.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val pairs = graft.dedup.SetSim.similarityJoin(docs, 6000)
+      .select(col("a").as("doc_a"), col("b").as("doc_b"))
+    val setSimReps = Dedup.repsOf(Dedup.Components.of(pairs), q)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(setSimReps == Set(if (qs(2L) > qs(1L)) 2L else 1L))
   }
 
   test("fixture quality reps cover every cluster exactly once") {

@@ -83,6 +83,12 @@ class HtmlTablesSpec extends SparkSuite {
       (0, 0, -1, 0, 0, 0, "L0a"), (0, 0, -1, 0, 1, 0, ""), (0, 0, -1, 0, 2, 0, "L0b"),
       (1, 1, 0, 0, 0, 0, "L1"), (1, 1, 0, 0, 1, 0, ""),
       (2, 2, 1, 0, 0, 1, "L2")))
+    val twoLevel = HtmlTables.cellsNested(Seq((2L,
+      "<table><tr><td><table><tr><td>x</td></tr></table></td></tr></table>"))
+      .toDF("doc_id", "html"))
+    assert(twoLevel.columns.toSeq == Seq("doc_id", "tbl", "depth", "parent", "row",
+      "colidx", "header", "cell"))
+    assert(twoLevel.count() == 2, "one wrapper cell, one inner cell")
   }
 
   test("tree parser: outer-cell text AROUND a nested table is recovered") {

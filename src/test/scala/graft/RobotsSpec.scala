@@ -113,6 +113,12 @@ class RobotsSpec extends SparkSuite {
       "absent delay is null, not zero")
     assert(meta("User-agent: *\nCrawl-delay: soon\n", "bot")._1 == None,
       "unparsable delay is null, never a throw")
+    import spark.implicits._
+    val viaColumn = Seq("Sitemap: https://a/s.xml\nUser-agent: *\nCrawl-delay: 1\n").toDF("r")
+      .select(Robots.robotsMeta(col("r"), lit("bot")).as("m"))
+      .select("m.crawl_delay_ms", "m.sitemaps").head()
+    assert(viaColumn.getInt(0) == 1000 && viaColumn.getSeq[String](1) == Seq("https://a/s.xml"),
+      "whole-second delay in ms through the column API")
   }
 
   test("gated query agrees with a direct reading of the planted rules") {

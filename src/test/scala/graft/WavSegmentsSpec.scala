@@ -103,6 +103,17 @@ class WavSegmentsSpec extends SparkSuite {
     fp.unpersist()
     assert(got == brute)
     assert(brute.exists(_._3 == 0L), "seed-paired identical audio must appear")
+
+    // resampled twins: media 2d at 1x and 2d+1 at 2x differ in duration
+    // but not in envelope, so the keyless 32-bit join pairs every one
+    val originals = graft.multimodal.AudioSegments
+      .fingerprintsCell(spark, Sf, 1, col("doc_id") * 2)
+      .collect().map(_.getLong(0)).toSet
+    val twins = graft.multimodal.AudioSegments.resamplePairs(spark, Sf).collect()
+      .collect { case r if r.getLong(2) == 0L && r.getLong(1) == r.getLong(0) + 1 =>
+        r.getLong(0) }.toSet
+    assert(originals.nonEmpty && originals.subsetOf(twins),
+      s"resampled twins missed: ${(originals -- twins).take(5)}")
   }
 
   test("refactored WavPcm stats unchanged on a mixed stream") {

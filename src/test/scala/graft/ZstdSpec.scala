@@ -68,13 +68,17 @@ class ZstdSpec extends AnyFunSuite {
   }
 
   test("stored-mode frames round-trip and are accepted by the reference CLI shape") {
-    for (s <- Seq("", "x", "hello zstd stored frames",
+    for (s <- Seq("", "x", "hello zstd stored frames", "round trip по кругу",
       "long " * 40000)) { // > one 64 KiB block
       val bytes = s.getBytes("UTF-8")
       val frame = Zstd.storeFrame(bytes)
       val back = Zstd.decompress(frame)
       assert(back != null && java.util.Arrays.equals(back, bytes), s.take(20))
     }
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.plans.{ZstdStoreBytes, ZstdText}
+    assert(ZstdText(ZstdStoreBytes(Literal("round trip по кругу"))).eval().toString ==
+      "round trip по кругу", "zstd_store_bytes → zstd_text is the identity on UTF-8")
   }
 
   test("xxh64 matches the reference vectors") {

@@ -73,6 +73,11 @@ def main():
         else:
             print(f"FAIL {name}: values differ, e.g. {first_diff}")
             failures += 1
+    if not oracle:
+        # an empty dump (e.g. a filter that matched nothing) compares
+        # nothing; passing it would certify an unchecked run
+        print("FAIL: oracle_sql.json names no queries; nothing was compared")
+        failures += 1
     sys.exit(1 if failures else 0)
 
 if __name__ == "__main__":
