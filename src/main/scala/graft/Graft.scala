@@ -61,6 +61,18 @@ object Graft {
       // 1.40→1.51 s (wide per-user window wants the extra parallelism —
       // acceptable against the across-the-board win).
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      // `file:` paths go through sources.NioLocalFileSystem. Without the
+      // native Hadoop library, Hadoop 3.4's RawLocalFileSystem starts a
+      // `chmod` process for every directory it creates and every file it
+      // opens for writing (a parquet part file and its .crc sidecar: two).
+      // Measured on a 4-CPU Linux host without the native library,
+      // local[3], 200 operations x 3 repetitions: mkdirs
+      // 4.3-5.1 ms stock vs 0.10-0.29 ms in-process, create+close
+      // 9.7-10.4 ms vs 0.88-1.40 ms, same modes (755 dirs, 644 files).
+      // Caveat: Hadoop's FileSystem cache is JVM-wide and keyed by scheme
+      // (and user), not by configuration, so a `file:` filesystem created
+      // in this JVM before the graft session keeps the stock class.
+      .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
 
   // ---- the three reference pipelines ----
 

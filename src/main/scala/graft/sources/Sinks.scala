@@ -77,27 +77,34 @@ object Sinks {
     fs.delete(p, true)
   }
 
-  /** S5 sink, whole-table form: merge updates into the table at `path`
-    * (reads existing if present, plain write otherwise) — the ES
-    * `upsert`+append write. Rewrites the WHOLE table per batch (staged,
-    * then swapped), which is only appropriate for small dimension-sized
-    * tables; the 100 TB path is [[writeMergedPartitioned]], which bounds
-    * the rewrite to the batch's touched partitions the same way the
-    * reference's ES upsert touches only the batch's keys.
+  /** S5 sink, whole-table form: merge updates into the table at `path` —
+    * the ES `upsert`+append write. One table write per batch:
+    *
+    *   - no table at `path` yet: nothing reads from it, so the batch
+    *     (one row per key) is written straight to `path`;
+    *   - a table exists: the merge reads it, so it is written to
+    *     `path__staging` first; then `path` is deleted and the staging
+    *     directory renamed to `path` through the Hadoop `FileSystem`. A
+    *     failed staged write leaves the old table untouched.
+    *
+    * Rewrites the WHOLE table per batch, which is only appropriate for
+    * small dimension-sized tables; the 100 TB path is
+    * [[writeMergedPartitioned]], which bounds the rewrite to the batch's
+    * touched partitions the same way the reference's ES upsert touches
+    * only the batch's keys.
     */
   def writeMerged(spark: SparkSession, updates: DataFrame, key: String, version: String,
                   path: String): Unit = {
-    val merged =
-      if (pathExists(spark, path)) {
-        val existing = spark.read.parquet(path)
-        mergeByKey(existing, updates, key, version)
-      } else keepOne(updates, key, version)
-    // overwrite of a source being read: materialize through a temp dir
-    val tmp = path + "__staging"
-    merged.write.mode("overwrite").parquet(tmp)
-    val out = spark.read.parquet(tmp)
-    out.write.mode("overwrite").parquet(path)
-    deletePath(spark, tmp)
+    val (fs, p) = hfs(spark, path)
+    if (!fs.exists(p)) keepOne(updates, key, version).write.mode("overwrite").parquet(path)
+    else {
+      val staging = new org.apache.hadoop.fs.Path(path + "__staging")
+      mergeByKey(spark.read.parquet(path), updates, key, version)
+        .write.mode("overwrite").parquet(staging.toString)
+      fs.delete(p, true)
+      if (!fs.rename(staging, p))
+        throw new java.io.IOException(s"merged table left at $staging: rename to $p failed")
+    }
   }
 
   /** S5 sink, partition-bounded form — the scale path. The table is laid

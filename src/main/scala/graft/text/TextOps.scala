@@ -11,9 +11,11 @@ import org.apache.spark.sql.functions._
   * lemmatization=True)`) — external C code we deliberately do NOT
   * reproduce bit-for-bit (SURVEY.md §7 "UD2 fidelity"). Instead the
   * operator SHAPE (tokenize/stop/lemma over string → array<string>) runs
-  * as Catalyst higher-order functions (`filter`/`transform` lambdas),
-  * which stay codegen-friendly and shuffle-free — a per-row map over the
-  * scan at any scale.
+  * as Catalyst higher-order functions (`filter`/`transform` lambdas):
+  * shuffle-free, a per-row map over the scan at any scale. They are NOT
+  * compiled into the stage's generated code: in Spark 4.1 `ArrayFilter`
+  * and `ArrayTransform` mix in `CodegenFallback`, so each call is
+  * interpreted row by row (the per-row cost of `preprocessAllMonths`).
   *
   * Stopword-set fidelity: the reference customizes spaCy's set with
   * `by`→stop, `hi`→stop, `not`→NOT a stopword

@@ -42,16 +42,34 @@ class SinksSpec extends SparkSuite {
     assert(merged.length == 1 && merged(0).getString(2) == "new")
   }
 
+  private def stagingLeft(path: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(path + "__staging")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
+  }
+
+  private def readMerged(path: String): Map[String, String] =
+    spark.read.parquet(path).collect().map(r => r.getString(0) -> r.getString(2)).toMap
+
   test("S5 sink round-trip: first write creates, second merges") {
     import spark.implicits._
     val path = tmpDir() + "/merged"
     Sinks.writeMerged(spark,
       Seq(("k1", "2020-01-01", "v1")).toDF("id", "ver", "payload"), "id", "ver", path)
+    assert(!stagingLeft(path), "the first write goes straight to the table")
     Sinks.writeMerged(spark,
       Seq(("k1", "2020-02-02", "v2"), ("k2", "2020-01-01", "w1")).toDF("id", "ver", "payload"),
       "id", "ver", path)
-    val out = spark.read.parquet(path).collect().map(r => r.getString(0) -> r.getString(2)).toMap
-    assert(out === Map("k1" -> "v2", "k2" -> "w1"))
+    assert(!stagingLeft(path), "the staged merge is renamed into place")
+    assert(readMerged(path) === Map("k1" -> "v2", "k2" -> "w1"))
+
+    // a batch whose updates fail while the staged write runs, not at analysis
+    val boom = udf((s: String) => if (s != null) throw new IllegalStateException("boom") else s)
+    val failing = spark.range(2).select(concat(lit("k"), col("id").cast("string")).as("id"),
+      lit("2030-01-01").as("ver"), boom(col("id").cast("string")).as("payload"))
+    intercept[org.apache.spark.SparkException] {
+      Sinks.writeMerged(spark, failing, "id", "ver", path)
+    }
+    assert(readMerged(path) === Map("k1" -> "v2", "k2" -> "w1"), "the old table is untouched")
   }
 
   test("S5 merge fails loudly on schema drift instead of silently dropping columns") {
@@ -70,9 +88,9 @@ class SinksSpec extends SparkSuite {
       Seq(("k1", "2020-01-01", "v1")).toDF("id", "ver", "payload"), "id", "ver", path)
     Sinks.writeMerged(spark,
       Seq(("k1", "2020-02-02", "v2")).toDF("id", "ver", "payload"), "id", "ver", path)
-    val out = spark.read.parquet(path).collect().map(r => r.getString(0) -> r.getString(2)).toMap
-    assert(out === Map("k1" -> "v2"),
+    assert(readMerged(path) === Map("k1" -> "v2"),
       "an existence check that misses the file: table would re-init instead of merging")
+    assert(!stagingLeft(path), "delete and rename resolve the file: URI too")
   }
 
   test("S5 partition-bounded merge rewrites ONLY touched partitions") {
