@@ -94,10 +94,11 @@ object Bench {
       } else if (!errors.contains(name) || !spark.sparkContext.isStopped)
         errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
 
-    // warmup: evaluate everything once, untimed; remember what failed so the
-    // timed pass skips it (a throw mid-pass would distort neighbors).
+    // warmup: evaluate everything once, untimed, from released caches
+    // like the timed passes; remember what failed so the timed pass skips
+    // it (a throw mid-pass would distort neighbors).
     queries.iterator.takeWhile(_ => fatal.isEmpty).foreach { case (name, fn) =>
-      try Harness.fullEval(fn(spark, sfDir))
+      try Harness.coldRun(spark)(fn(spark, sfDir))
       catch { case e: Throwable => record(name, e) }
     }
 

@@ -94,21 +94,13 @@ object Harness {
     ()
   }
 
-  /** Drop every cache a query left behind: the session's cached plans
-    * and the operator caches registered in [[ops.Caches]]. Run between
-    * queries so a full-registry run never holds more than one query's
-    * caches, and a re-built query never reads a warm cache.
-    */
-  def releaseCaches(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    ops.Caches.releaseAll()
-  }
-
-  /** Seconds to build and fully evaluate `df` from released caches; only
-    * JVM and codegen warm-up carry over from earlier runs.
+  /** Seconds to build and fully evaluate `df` after [[ops.Caches.release]]
+    * (every main builds its queries on its own thread, so this drops
+    * all the last query cached); only JVM and codegen warm-up carry over
+    * from earlier runs.
     */
   def coldRun(spark: SparkSession)(df: => DataFrame): Double = {
-    releaseCaches(spark)
+    ops.Caches.release()
     val t0 = System.nanoTime()
     fullEval(df)
     (System.nanoTime() - t0) / 1e9

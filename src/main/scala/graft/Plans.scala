@@ -27,6 +27,8 @@ object Plans {
       } catch {
         case e: Throwable => System.err.println(s"[plans] $name failed: ${e.getMessage}")
       }
+      // the next query's plan must not read this one's caches
+      ops.Caches.release()
     }
     spark.stop()
   }

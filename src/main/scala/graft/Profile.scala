@@ -24,7 +24,7 @@ object Profile {
 
     queries.foreach { case (name, fn) =>
       // one untimed warmup (JIT/codegen), then cold timed passes
-      Harness.fullEval(fn(spark, sfDir))
+      Harness.coldRun(spark)(fn(spark, sfDir))
       val times = (1 to passes).map { i =>
         val dt = Harness.coldRun(spark)(fn(spark, sfDir))
         println(f"$name pass$i: $dt%.2f s")

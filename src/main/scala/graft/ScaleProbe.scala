@@ -92,10 +92,10 @@ object ScaleProbe {
         // checkpoint) for BOTH sides — otherwise a query whose warmup only
         // touched 1× would charge the 10× pass with setup cost and fake a
         // super-linear ratio.
-        Harness.releaseCaches(spark)
+        ops.Caches.release()
         Harness.fullEval(fn(spark, src))
         val t1 = timedMin(3)(fn(spark, src))
-        Harness.releaseCaches(spark)
+        ops.Caches.release()
         Harness.fullEval(fn(spark, dst))
         val t10 = timedMin(3)(fn(spark, dst))
         val ratio = t10 / math.max(t1, 1e-3)

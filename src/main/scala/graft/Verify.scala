@@ -19,10 +19,7 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // queries that persist model inputs (Phrases.pass, SemDedup.pairs,
-      // Similarity.serve*) release them here, so a full-registry run
-      // never accumulates more than one query's caches
-      Harness.releaseCaches(spark)
+      ops.Caches.release()
     }
     val names = queries.map(_._1).toSet
     val json = SparkEntry.oracleSql

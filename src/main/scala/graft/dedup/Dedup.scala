@@ -223,8 +223,8 @@ object Dedup {
       // cached table then serves the membership expansions (narrow) and
       // the representative set (filter) without re-running the hashing
       val w = Window.partitionBy(col("hv"))
-      val withRep = hashed.withColumn("rep", min(col("doc_id")).over(w))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val withRep = graft.ops.Caches.persist(
+        hashed.withColumn("rep", min(col("doc_id")).over(w)))
       val membership = withRep.select(col("rep"), col("doc_id"))
       // The representative table feeds four plan branches (both band
       // sides, both verify joins); persist it and the band rows so the
@@ -232,7 +232,7 @@ object Dedup {
       // the same fan-out points. At cluster scale the same role is played
       // by checkpointing the signature table.
       val uniq = withRep.filter(col("doc_id") === col("rep")).select(col("doc_id"), col("hv"))
-      val b = banded(uniq, cfg).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val b = graft.ops.Caches.persist(banded(uniq, cfg))
       val candidates = b.as("x").join(b.as("y"),
           col("x.band") === col("y.band") && col("x.band_hash") === col("y.band_hash") &&
             col("x.doc_id") < col("y.doc_id"))
@@ -357,10 +357,10 @@ object Dedup {
       * double-count against the index append.
       */
     def incrementalKeep(spark: SparkSession, dir: String): DataFrame = {
-      val hashed = graft.ops.ScaleOps.widen(Tables.documents(spark, dir))
-        .select(col("doc_id"), shingleHashes(col("text")).as("hv"))
-        .filter(size(col("hv")) > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val hashed = graft.ops.Caches.persist(
+        graft.ops.ScaleOps.widen(Tables.documents(spark, dir))
+          .select(col("doc_id"), shingleHashes(col("text")).as("hv"))
+          .filter(size(col("hv")) > 0))
       val isBatch = col("doc_id") % 10 === 0
       val batch = hashed.filter(isBatch)
       val index = hashed.filter(!isBatch)
@@ -474,10 +474,10 @@ object Dedup {
     val MaxRounds = 64
 
     def of(pairs: DataFrame): DataFrame = {
-      val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        .distinct()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val edges = graft.ops.Caches.persist(
+        pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+          .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
+          .distinct())
       var labels = graft.sources.Checkpoints.truncateLineage(
         edges.select(col("src").as("doc_id")).distinct()
           .withColumn("cluster_id", col("doc_id")))
@@ -672,8 +672,8 @@ object Dedup {
         .filter(size(col("ft")) > 0)
         .select(col("doc_id"), simhash48Of(col("ft")).as("sh"))
       val w = Window.partitionBy(col("sh"))
-      val withRep = sigs.withColumn("rep", min(col("doc_id")).over(w))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val withRep = graft.ops.Caches.persist(
+        sigs.withColumn("rep", min(col("doc_id")).over(w)))
       val membership = withRep.select(col("rep"), col("doc_id"))
       val uniq = withRep.filter(col("doc_id") === col("rep")).select(col("doc_id"), col("sh"))
       val bandArr = array((0 until NumBands).map(j =>

@@ -117,7 +117,7 @@ object SetSim {
     */
   def similarityJoin(docs: DataFrame, tauBp: Int = TauBp, k: Int = K): DataFrame = {
     val w = Window.partitionBy(col("fp"))
-    val withRep = docs
+    val withRep = graft.ops.Caches.persist(docs
       .select(col("doc_id"),
         org.apache.spark.sql.GraftColumnShim.column(graft.plans.ShingleMd5(
           org.apache.spark.sql.GraftColumnShim.expression(col("text")),
@@ -125,18 +125,15 @@ object SetSim {
       .select(col("doc_id"), array_sort(array_distinct(col("hs"))).as("hv"))
       .filter(size(col("hv")) > 0)
       .withColumn("fp", md5(array_join(col("hv"), "|")))
-      .withColumn("rep", min(col("doc_id")).over(w))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("rep", min(col("doc_id")).over(w)))
     val memb = withRep.select(col("rep"), col("doc_id"))
     val uniq = withRep.filter(col("doc_id") === col("rep"))
       .select(col("doc_id"), col("hv"))
-    val sets = uniq.select(col("doc_id"), explode(col("hv")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sets = graft.ops.Caches.persist(uniq.select(col("doc_id"), explode(col("hv")).as("h")))
     // set size is the ARRAY's size — hv is already distinct — so no
     // count-aggregate pass over the exploded stream is needed
     val sized = uniq.select(col("doc_id"), size(col("hv")).cast("long").as("sz"))
-    val p = prefixes(sets, tauBp)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val p = graft.ops.Caches.persist(prefixes(sets, tauBp))
     // verify straight off the cached ARRAYS (optimization r15, guide
     // §2.4): the exploded form joined candidates×sets twice, aggregated
     // the intersection with a (a, b)-keyed exchange, then joined two
@@ -264,8 +261,7 @@ object SetSim {
             org.apache.spark.sql.GraftColumnShim.expression(lit(k)))).as("hs"))
         .select(col("doc_id"), array_sort(array_distinct(col("hs"))).as("hv"))
         .filter(size(col("hv")) > 0))
-    val sets = docsHv.select(col("doc_id"), explode(col("hv")).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sets = graft.ops.Caches.persist(docsHv.select(col("doc_id"), explode(col("hv")).as("h")))
     val df = sets.groupBy(col("h")).agg(count(lit(1)).as("df"))
     val isBatch = col("doc_id") % 10 === 0
     val batch = sets.filter(isBatch)
@@ -325,17 +321,15 @@ object SetSim {
     */
   def lshRecall(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.ops.ScaleOps.widen(Tables.documents(spark, dir))
-    val ex = similarityJoin(docs.select(col("doc_id"), col("text")))
-      .select(col("a"), col("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ex = graft.ops.Caches.persist(similarityJoin(docs.select(col("doc_id"), col("text")))
+      .select(col("a"), col("b")))
     // the LSH pair table feeds TWO branches (the hit semi-join and its
     // own count) — unpersisted, the candidate+verify+expansion joins
     // above MinHashLSH's internal seams run twice (the r15 plan audit
     // measured the un-cached form as a 2441-line plan with the pair
     // subtree duplicated); same C1 fan-out discipline as `ex` above
-    val ls = Dedup.MinHashLSH.nearDupPairs(spark, dir)
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ls = graft.ops.Caches.persist(Dedup.MinHashLSH.nearDupPairs(spark, dir)
+      .select(col("doc_a").as("a"), col("doc_b").as("b")))
     val hit = ex.join(ls, Seq("a", "b"), "left_semi")
     ex.agg(count(lit(1)).as("n_exact"))
       .crossJoin(broadcast(ls.agg(count(lit(1)).as("n_lsh"))))

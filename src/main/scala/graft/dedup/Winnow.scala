@@ -95,7 +95,6 @@ object Winnow {
 
   private def collapse(spark: SparkSession, dir: String): Collapsed = {
     import org.apache.spark.sql.expressions.Window
-    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val docsFps = graft.ops.ScaleOps.widen(Tables.documents(spark, dir))
       .select(col("doc_id"), winnowCol(col("text")).as("fps"))
       .filter(size(col("fps")) > 0)
@@ -103,16 +102,15 @@ object Winnow {
     // oracle groups on too): the exchange partitions/sorts on a 16-byte
     // fixed-width key instead of comparing whole fingerprint arrays
     val fpsKey = md5(concat_ws(",", col("fps").cast("array<string>")))
-    val withRep = docsFps
-      .withColumn("rep", min(col("doc_id")).over(Window.partitionBy(fpsKey)))
-      .persist(lvl)
+    val withRep = graft.ops.Caches.persist(docsFps
+      .withColumn("rep", min(col("doc_id")).over(Window.partitionBy(fpsKey))))
     val membership = withRep.select(col("rep"), col("doc_id"))
     val uniq = withRep.filter(col("doc_id") === col("rep"))
       .select(col("doc_id"), explode(col("fps")).as("fp"))
     val rare = uniq.groupBy(col("fp")).agg(count(lit(1)).as("ndocs"))
       .filter(col("ndocs") <= MaxDocsPerFp)
       .select(col("fp"))
-    val kept = uniq.join(rare, "fp").persist(lvl)
+    val kept = graft.ops.Caches.persist(uniq.join(rare, "fp"))
     val repCounts = kept.groupBy(col("doc_id").as("rep")).agg(count(lit(1)).as("nrare"))
     val sizes = membership.groupBy(col("rep")).agg(count(lit(1)).as("g"))
     Collapsed(membership, kept, repCounts, sizes)

@@ -105,9 +105,7 @@ object ImageHash {
     // the fingerprint table feeds BOTH sides of the self-join: persist
     // it or the whole upstream (decode passes for the planted gates)
     // runs twice — the C1 multi-branch fan-out discipline, same seam
-    // as nearDupPairsOn's band table; registered in Caches so a
-    // multi-invocation session can release (Verify/Bench clearCache
-    // between queries already does)
+    // as nearDupPairsOn's band table
     val hashed = graft.ops.Caches.persist(keyed)
     val banded = hashed.select(col("media_id") +: keyCols.map(col) :+
       col("dhash") :+ posexplode(bandArr).as(Seq("band", "bv")): _*)
@@ -197,14 +195,13 @@ object ImageHash {
     * only, never the image table.
     */
   def clusters(spark: SparkSession, dir: String): DataFrame =
-    graft.dedup.Dedup.Components.of(
+    // label propagation is iterative: without an eager checkpoint
+    // every round would re-run the plant + decode + banded join
+    // (wordClusters feeds Components a MATERIALIZED pair table; a
+    // live pipeline must checkpoint at the same seam)
+    graft.dedup.Dedup.Components.of(graft.sources.Checkpoints.truncateLineage(
       hammingPairs(plantedDhash(spark, dir, expr("doc_id DIV 2")))
-        .select(col("a").as("doc_a"), col("b").as("doc_b"))
-        // label propagation is iterative: without an eager checkpoint
-        // every round would re-run the plant + decode + banded join
-        // (wordClusters feeds Components a MATERIALIZED pair table; a
-        // live pipeline must checkpoint at the same seam)
-        .localCheckpoint(true))
+        .select(col("a").as("doc_a"), col("b").as("doc_b"))))
 
   def clustersOracle: String =
     graft.dedup.Dedup.Components.oracleOn(

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 
@@ -68,10 +67,9 @@ object Graph {
   def pagerankOf(edgesIn: DataFrame, iters: Int = Iters): DataFrame = {
     val edges = edgesIn.select(col("src"), col("dst")).distinct()
     val outd = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    val nodes = edges.select(col("src").as("node"))
+    val nodes = Caches.persist(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val n = nodes.count()
     val base = Scale / n
     // (src, dst, deg), partitioned by the per-iteration join key ONCE.
@@ -83,12 +81,9 @@ object Graph {
     // (measured at the 10x probe). Forcing either side was measured
     // SLOWER at both scales; hitsOf needs its explicit modes only
     // because its statless checkpoint side starves the optimizer.
-    val edgesDeg = edges.join(outd, "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val danglers = nodes
-      .join(outd.select(col("src").as("node")), Seq("node"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val edgesDeg = Caches.persist(edges.join(outd, "src").repartition(col("src")))
+    val danglers = Caches.persist(nodes
+      .join(outd.select(col("src").as("node")), Seq("node"), "left_anti"))
 
     // lineage truncation per round; spark.graft.iter.checkpointDir flips
     // this to reliable FS checkpoints (see Checkpoints.truncateLineage —
@@ -220,14 +215,12 @@ object Graph {
     * truncation that drains them.
     */
   def hitsOf(edgesIn: DataFrame, iters: Int = Iters): DataFrame = {
-    val edges = edgesIn.select(col("src"), col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val bySrc = edges.repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
-    val byDst = edges.repartition(col("dst")).persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = edges.select(col("src").as("node"))
+    val edges = Caches.persist(edgesIn.select(col("src"), col("dst")).distinct())
+    val bySrc = Caches.persist(edges.repartition(col("src")))
+    val byDst = Caches.persist(edges.repartition(col("dst")))
+    val nodes = Caches.persist(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val n = nodes.count()
     val base = Scale / n
     val broadcastScores = n <= MaxBroadcastScoreRows
@@ -248,15 +241,13 @@ object Graph {
     var auths: DataFrame = null
     val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (it <- 1 to iters) {
-      val araw = halfStep(hubs, "h", "src", "dst", "ar")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val araw = Caches.persist(halfStep(hubs, "h", "src", "dst", "ar"))
       roundCaches += araw
       val qa = araw.agg(expr(s"greatest(1L, coalesce(sum(ar) DIV ${Scale}L, 1L)) AS q"))
       auths = nodes.join(araw.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .crossJoin(broadcast(qa))
         .select(col("node"), expr("coalesce(ar, 0L) DIV q").as("a"))
-      val hraw = halfStep(auths, "a", "dst", "src", "hr")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val hraw = Caches.persist(halfStep(auths, "a", "dst", "src", "hr"))
       roundCaches += hraw
       val qh = hraw.agg(expr(s"greatest(1L, coalesce(sum(hr) DIV ${Scale}L, 1L)) AS q"))
       hubs = nodes.join(hraw.withColumnRenamed("src", "node"), Seq("node"), "left")

@@ -64,9 +64,8 @@ object Packing {
     val parts = df.sparkSession.sessionState.conf.numShufflePartitions
     val keyCols = orderKeys.map(col)
 
-    val ranged = df.repartitionByRange(parts, keyCols: _*)
-      .withColumn("pid", spark_partition_id())
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranged = Caches.persist(df.repartitionByRange(parts, keyCols: _*)
+      .withColumn("pid", spark_partition_id()))
 
     val offs = ranged.groupBy(col("pid")).agg(sum(col("n_tokens")).as("ptot"))
       .withColumn("poff", coalesce(

@@ -22,8 +22,7 @@ import graft.Tables
 object SkewProfile {
 
   def profile(rows: DataFrame, key: String): DataFrame = {
-    val cnts = rows.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cnts = Caches.persist(rows.groupBy(col(key).as("k")).agg(count(lit(1)).as("cnt")))
     val stats = cnts.agg(count(lit(1)).as("n_keys"),
       sum(col("cnt")).as("total_rows"), max(col("cnt")).as("max_rows"))
     val hot = cnts.join(broadcast(stats.select(col("max_rows"))),

@@ -378,8 +378,7 @@ object CrawlPipeline {
     * broadcast back. No corpus-sized data crosses any of it.
     */
   def crawlBudget(spark: SparkSession, dir: String, budget: Long = PageBudget): DataFrame = {
-    val rep = hostReport(spark, dir).select(col("host"), col("n_clean"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rep = graft.ops.Caches.persist(hostReport(spark, dir).select(col("host"), col("n_clean")))
     val total = rep.agg(sum(col("n_clean"))).collect()(0).getLong(0)
     val floored = rep
       .withColumn("fl", expr(s"($budget * n_clean) DIV $total"))

@@ -100,7 +100,7 @@ object Frontier {
     // four actions over the same lineage: persist once, not four
     // replant+canonicalize passes (probe-path cost, but the widened
     // plant is the expensive part of the 10× corpus)
-    today.persist(); seen.persist()
+    graft.ops.Caches.persist(today); graft.ops.Caches.persist(seen)
     try {
       val bf = sketchOf(seen)
       val t = today.count()

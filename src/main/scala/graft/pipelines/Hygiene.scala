@@ -130,8 +130,7 @@ object Hygiene {
     // no arrays): both downstream branches read it, so the text-feature
     // pipeline — the expensive part — runs exactly once per corpus scan
     // instead of once per branch
-    val pre = preVerdicts(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pre = graft.ops.Caches.persist(preVerdicts(docs))
 
     // dedup over filter survivors only (production order); the exchange
     // carries (fp, doc_id), group-local keep-first

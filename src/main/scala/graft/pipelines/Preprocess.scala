@@ -4,9 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
-import graft.ops.SrData
+import graft.ops.{Caches, SrData}
 import graft.text.{Normalize, TextOps}
 
 /** The reference's richest pipeline — `preprocess_and_store_parquets.py`
@@ -125,7 +124,7 @@ object Preprocess {
   def gatherChunksFaithful(df: DataFrame, chunkSize: Int): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val persisted = df.persist(StorageLevel.MEMORY_AND_DISK) // C1 ↔ :218
+    val persisted = Caches.persist(df)                       // C1 ↔ :218
     val total = persisted.count()                            // A1 ↔ :205-206
     persisted.createOrReplaceTempView("preprocessed")        // C6 ↔ :216
     val emptySeed = spark.createDataFrame(                   // S7 ↔ :217

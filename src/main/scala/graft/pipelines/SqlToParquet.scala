@@ -2,9 +2,8 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.ops.SrData
+import graft.ops.{Caches, SrData}
 import graft.sources.Sinks
 import graft.text.Keyword
 
@@ -43,7 +42,7 @@ object SqlToParquet {
     * logged action, `:94`).
     */
   def run(spark: SparkSession, dir: String, outBase: String): Long = {
-    val df = shaped(spark, dir).persist(StorageLevel.MEMORY_AND_DISK) // C1 ↔ :83
+    val df = Caches.persist(shaped(spark, dir))                       // C1 ↔ :83
     val n = df.count()                                                // A1 ↔ :94
     df.show(5, truncate = false)                                      // O3 ↔ :93
     Sinks.SchemaRegistry.register(IndexName, df.schema)               // S6 mapping

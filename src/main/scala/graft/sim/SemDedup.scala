@@ -32,14 +32,6 @@ object SemDedup {
   /** Within-cluster pairs at/above [[Similarity.NearDupThreshold]]:
     * (list_id, vec_a, vec_b, cos_sim), vec_a < vec_b. The self-join key
     * is the coarse list — vectors never meet outside their cluster.
-    */
-  def pairs(spark: SparkSession, dir: String,
-      k: Int = Similarity.NumSeeds): DataFrame =
-    pairsManaged(spark, dir, k)._1
-
-  /** [[pairs]] plus the cleanup for its persist (the
-    * [[Similarity.serveMany]] thunk contract); gate invocations lean on
-    * the `Verify`/`Bench` clearCache sweep instead.
     *
     * `k` is THE scale knob (the SemDeDup paper's own answer): growing it
     * with the corpus keeps per-cluster size c bounded, so candidate work
@@ -48,24 +40,22 @@ object SemDedup {
     * (`q_semantic_neardup_k64`); `SemDedupSpec` pins that larger k
     * strictly shrinks candidate-pair work on the fixture.
     */
-  def pairsManaged(spark: SparkSession, dir: String,
-      k: Int = Similarity.NumSeeds): (DataFrame, () => Unit) = {
+  def pairs(spark: SparkSession, dir: String,
+      k: Int = Similarity.NumSeeds): DataFrame = {
     // quantized vectors feed assignment AND both pair sides — persist so
     // quantization and the assignment's two passes run once
-    val docs = Similarity.quantized(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = graft.ops.Caches.persist(Similarity.quantized(spark, dir))
     val assigned = Similarity.coarseAssigned(docs, k)
     def side(n: String) = assigned.select(
       col("list_id"), col("vec_id").as(s"vec_$n"),
       col("q").as(s"q_$n"), col("n2").as(s"n2_$n"))
-    val out = side("a").join(side("b"), "list_id")
+    side("a").join(side("b"), "list_id")
       .filter(col("vec_a") < col("vec_b"))
       .select(col("list_id"), col("vec_a"), col("vec_b"),
         Similarity.cosFromInts(
           Similarity.dotq(col("q_a"), col("q_b")),
           col("n2_a"), col("n2_b")).as("cos_sim"))
       .filter(col("cos_sim") >= Similarity.NearDupThreshold)
-    (out, () => { docs.unpersist(); () })
   }
 
   /** The kept corpus: every vector that is not the GREATER member of a

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.ops.Caches
 
 /** Similarity search over the `embeddings` table (`ArrayType(FloatType)`,
   * 64-d, unit-norm) — the ANN family a training-data pipeline needs:
@@ -256,13 +257,11 @@ object Similarity {
     * the best [[NProbe]] lists.
     */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val docs = quantized(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = Caches.persist(quantized(spark, dir))
     // trained assignment embeds a corpus aggregate + refine pass and
     // feeds both the summary branch and the scoring join — persist, as
     // the PQ path does
-    val assigned = coarseAssigned(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = Caches.persist(coarseAssigned(docs))
     val sums = listSummaries(assigned)
     val qs = docs.filter(col("vec_id") < NumQueries)
       .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("qn2"))
@@ -314,8 +313,7 @@ object Similarity {
     * window over probed candidates, exactly as [[ivfTopK]].
     */
   def ivfPqTopK(spark: SparkSession, dir: String): DataFrame =
-    ivfPqTopKOn(quantized(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    ivfPqTopKOn(Caches.persist(quantized(spark, dir)))
 
   /** Width- and norm-agnostic core of [[ivfPqTopK]] over any quantized
     * frame (vec_id, q, n2) — separated so tests can drive it with
@@ -325,8 +323,7 @@ object Similarity {
   def ivfPqTopKOn(docs: DataFrame): DataFrame = {
     // assigned feeds the summary aggregate, the scale aggregate, and the
     // residual computation — persist so the trained assignment runs once
-    val assigned = coarseAssigned(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val assigned = Caches.persist(coarseAssigned(docs))
     val sums = listSummaries(assigned)
     val codes = pqEncodeOn(assigned, sums)
     val qs = docs.filter(col("vec_id") < NumQueries)
@@ -489,8 +486,7 @@ object Similarity {
     // quantized vectors feed four plan branches (both band sides, both
     // verify joins) — persist so quantization runs once (see
     // Dedup.MinHashLSH.nearDupPairs for the same pattern).
-    val docs = quantized(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = Caches.persist(quantized(spark, dir))
     val bitsPerBand = SignBits / SignBands
     val bandCols = (0 until SignBands).map { j =>
       val bits = (0 until bitsPerBand).map { r =>
@@ -853,10 +849,9 @@ object Similarity {
       val d = graft.sources.Checkpoints.digest(dir)
       graft.sources.Checkpoints.materializeMany(spark, DirConf, "_graft_index",
         Seq(d + "_pqsums", d + "_pqcodes")) {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val docs = quantized(spark, dir).persist(lvl)
-        val assigned = coarseAssigned(docs).persist(lvl)
-        val sums = listSummaries(assigned).persist(lvl)
+        val docs = Caches.persist(quantized(spark, dir))
+        val assigned = Caches.persist(coarseAssigned(docs))
+        val sums = Caches.persist(listSummaries(assigned))
         (Seq(sums, pqEncodeOn(assigned, sums)),
           () => { sums.unpersist(); assigned.unpersist(); docs.unpersist(); () })
       }
@@ -873,10 +868,9 @@ object Similarity {
       val d = graft.sources.Checkpoints.digest(dir)
       graft.sources.Checkpoints.materializeMany(spark, DirConf, "_graft_index",
         Seq(d + "_pqsums_base", d + "_pqcodes_base")) {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val docs = quantized(spark, dir).filter(!isIncBatch).persist(lvl)
-        val assigned = coarseAssigned(docs).persist(lvl)
-        val sums = listSummaries(assigned).persist(lvl)
+        val docs = Caches.persist(quantized(spark, dir).filter(!isIncBatch))
+        val assigned = Caches.persist(coarseAssigned(docs))
+        val sums = Caches.persist(listSummaries(assigned))
         (Seq(sums, pqEncodeOn(assigned, sums)),
           () => { sums.unpersist(); assigned.unpersist(); docs.unpersist(); () })
       }

@@ -5,7 +5,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.Tables
 import graft.pipelines.{CdxIndex, CrawlPipeline, Preprocess}
@@ -217,20 +216,18 @@ object WarcArchive {
     // the doomed bytes BEFORE each member — pure integer arithmetic,
     // so the index agrees with the spliced files by construction and
     // the re-verify below proves it against the actual bytes
-    val affIdx = idx
+    val affIdx = graft.ops.Caches.persist(idx
       .filter(col("shard_id").isin(affected.map(Long.box): _*))
-      .join(broadcast(doomed.withColumn("is_doomed", lit(true))), Seq("doc_id"), "left")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .join(broadcast(doomed.withColumn("is_doomed", lit(true))), Seq("doc_id"), "left"))
     val wBefore = Window.partitionBy(col("shard_id")).orderBy(col("member_offset"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val newIdx = affIdx
+    val newIdx = graft.ops.Caches.persist(affIdx
       .withColumn("removed_before", coalesce(sum(
         when(col("is_doomed"), col("member_bytes")).otherwise(lit(0L))).over(wBefore), lit(0L)))
       .filter(col("is_doomed").isNull)
       .select(col("doc_id"), col("surt"),
         (col("member_offset") - col("removed_before")).as("member_offset"),
-        col("member_bytes"), col("digest"), col("shard_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        col("member_bytes"), col("digest"), col("shard_id")))
 
     // splice each affected shard ON EXECUTORS: the per-shard survivor
     // ranges travel as one grouped row per shard (never via the

@@ -77,8 +77,7 @@ object Dsir {
   def importanceWeightsOf(docs: DataFrame): DataFrame = {
     // the feature stream feeds the model build and the scoring join;
     // now that it is map-only there is no Exchange for AQE to reuse, so
-    // the C1 fan-out discipline applies: persist via the Caches registry
-    // (Bench/Verify clearCache between queries is the release seam).
+    // the C1 fan-out discipline applies: persist via the Caches registry.
     // TOTALS are the model's column sums — a [[Buckets]]-row aggregate
     // over the persisted model, never a third corpus pass (the old
     // window form paid one full scan each for model, totals, scoring).

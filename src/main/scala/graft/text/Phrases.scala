@@ -166,21 +166,11 @@ object Phrases {
     * 100 TB the equivalent is checkpointing the merged stream between
     * passes (the X5b build-once index discipline).
     */
-  def pass(tokDf: DataFrame): DataFrame = passManaged(tokDf)._1
-
-  /** [[pass]] plus the cleanup for its persist (the
-    * [[graft.sim.Similarity.serveMany]] thunk contract): the caller
-    * releases the input cache once the merged output is materialized.
-    * Gate invocations lean on the harness sweep instead —
-    * `Verify`/`Bench` clearCache between queries — so a long-lived JVM
-    * retains at most one query's caches either way.
-    */
-  def passManaged(tokDf: DataFrame): (DataFrame, () => Unit) = {
-    val in = tokDf.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  def pass(tokDf: DataFrame): DataFrame = {
+    val in = graft.ops.Caches.persist(tokDf)
     val phrases = model(in).select(concat_ws(" ", col("a"), col("b")))
       .collect().map(_.getString(0)).toSeq
-    (in.select(col("doc_id"), mergeTokens(col("toks"), phrases).as("toks")),
-      () => { in.unpersist(); () })
+    in.select(col("doc_id"), mergeTokens(col("toks"), phrases).as("toks"))
   }
 
   /** Streaming ingest twin: rewrite each arriving document's token
@@ -210,13 +200,13 @@ object Phrases {
   /** Gate: the stream after two passes — trigrams finished. Pass 2's
     * model collect materializes pass 1's output cache, after which pass
     * 1's INPUT cache is unreachable from the final plan — released
-    * eagerly here, so the invocation retains one cache (the merged
-    * pass-1 stream), swept by the harness clearCache.
+    * eagerly here (`pass` persists the frame it is given), so the
+    * invocation keeps one cache: the merged pass-1 stream.
     */
   def applyTrigrams(spark: SparkSession, dir: String): DataFrame = {
-    val (m1, release1) = passManaged(tokenArrays(spark, dir))
-    val (m2, _) = passManaged(m1) // persists + (via the collect) materializes m1
-    release1()
+    val toks = tokenArrays(spark, dir)
+    val m2 = pass(pass(toks)) // pass 2 persists + (via the collect) materializes pass 1
+    toks.unpersist()
     stream(m2)
   }
 

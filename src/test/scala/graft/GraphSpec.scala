@@ -79,14 +79,22 @@ class GraphSpec extends SparkSuite {
   test("component propagation honors the same checkpoint switch") {
     import spark.implicits._
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    // the image near-dup clusters truncate their pair table through the
+    // same switch before propagating
+    def imageClusters() =
+      try graft.multimodal.ImageHash.clusters(spark, Sf).orderBy("doc_id").collect().toSeq
+      finally graft.ops.Caches.release()
     val local = graft.dedup.Dedup.Components.of(pairs)
       .orderBy("doc_id").collect().toSeq
+    val localImages = imageClusters()
+    assert(localImages.nonEmpty)
     val dir = java.nio.file.Files.createTempDirectory("graft-iter-ckpt2").toString
     spark.conf.set(graft.sources.Checkpoints.IterCheckpointDirKey, dir)
     try {
       val reliable = graft.dedup.Dedup.Components.of(pairs)
         .orderBy("doc_id").collect().toSeq
       assert(reliable == local)
+      assert(imageClusters() == localImages)
     } finally {
       spark.conf.unset(graft.sources.Checkpoints.IterCheckpointDirKey)
     }

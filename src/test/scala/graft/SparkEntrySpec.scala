@@ -6,6 +6,59 @@ package graft
   */
 class SparkEntrySpec extends SparkSuite {
 
+  /** What one build of a registry query at [[Sf]] showed: whether it
+    * returned no rows, the float/decimal hazards of its schema, its
+    * non-scalar top-level columns, and whether a cache entry survived
+    * [[ops.Caches.release]] after it ran.
+    */
+  private final case class Swept(empty: Boolean, hazards: Seq[String],
+                                 nonScalar: Seq[String], leaksCache: Boolean)
+
+  /** The float and decimal columns anywhere inside `dt`, as paths. */
+  private def hazards(dt: org.apache.spark.sql.types.DataType, path: String): Seq[String] = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case _: DecimalType         => Seq(s"$path(decimal)")
+      case DoubleType | FloatType => Seq(s"$path(float)")
+      case s: StructType          => s.fields.flatMap(f => hazards(f.dataType, s"$path.${f.name}")).toSeq
+      case a: ArrayType           => hazards(a.elementType, s"$path[]")
+      case m: MapType             => hazards(m.keyType, s"$path<k>") ++ hazards(m.valueType, s"$path<v>")
+      case _                      => Nil
+    }
+  }
+
+  /** The whole registry, each query built ONCE, in name order. A query
+    * that throws keeps its failure, so every test reading it fails
+    * with the original exception.
+    */
+  private lazy val sweep: Seq[(String, scala.util.Try[Swept])] = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // other suites leave `.cache()` entries behind in the shared session
+    spark.catalog.clearCache()
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      val built = scala.util.Try {
+        val df = fn(spark, Sf)
+        (df.schema.fields.toSeq, df.isEmpty)
+      }
+      ops.Caches.release()
+      val leaksCache = !cacheManager.isEmpty
+      // a leak must not be charged to the queries after it
+      spark.catalog.clearCache()
+      name -> built.map { case (fields, empty) =>
+        Swept(empty, fields.flatMap(f => hazards(f.dataType, f.name)),
+          fields.collect {
+            case f if f.dataType.isInstanceOf[ArrayType] ||
+                      f.dataType.isInstanceOf[MapType] ||
+                      f.dataType.isInstanceOf[StructType] =>
+              s"${f.name}: ${f.dataType.simpleString}"
+          },
+          leaksCache)
+      }
+    }
+  }
+
   test("every registered query has a matching oracle (and no orphan oracles)") {
     assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
   }
@@ -15,9 +68,7 @@ class SparkEntrySpec extends SparkSuite {
   }
 
   test("every query returns rows at the smoke scale factor") {
-    val empty = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (_, fn) =>
-      fn(spark, Sf).isEmpty
-    }.map(_._1)
+    val empty = sweep.collect { case (name, r) if r.get.empty => name }
     assert(empty.isEmpty, s"queries with empty smoke results: $empty")
   }
 
@@ -44,28 +95,15 @@ class SparkEntrySpec extends SparkSuite {
       "q_semantic_neardup", "q_semantic_neardup_k64", "q_similarity_ivf",
       "q_similarity_ivfpq", "q_similarity_ivfpq_apply",
       "q_similarity_ivfpq_incremental", "q_similarity_topk")
-    import org.apache.spark.sql.types.{DataType, DecimalType, DoubleType, FloatType, StructType}
     // DECIMAL is banned with NO whitelist: the driver hasher canonicalizes
     // decimal128 differently across engines even when values are bit-exact
     // (q_moment_stats, round 6 — second typing hazard class after HUGEINT).
     // Fold decimals mod 1e9+7 to BIGINT before gating instead.
-    def hazards(dt: DataType, path: String): Seq[String] = dt match {
-      case _: DecimalType               => Seq(s"$path(decimal)")
-      case DoubleType | FloatType       => Seq(s"$path(float)")
-      case s: StructType                => s.fields.flatMap(f => hazards(f.dataType, s"$path.${f.name}")).toSeq
-      case a: org.apache.spark.sql.types.ArrayType => hazards(a.elementType, s"$path[]")
-      case m: org.apache.spark.sql.types.MapType =>
-        hazards(m.keyType, s"$path<k>") ++ hazards(m.valueType, s"$path<v>")
-      case _                            => Nil
-    }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val bad = fn(spark, Sf).schema.fields.flatMap { f =>
-          val h = hazards(f.dataType, f.name)
-          // floats may be whitelisted per-query; decimals never are
-          if (whitelisted(name)) h.filter(_.endsWith("(decimal)")) else h
-        }
-        if (bad.nonEmpty) Some(s"$name: ${bad.mkString(",")}") else None
+    val offenders = sweep.flatMap { case (name, r) =>
+      val h = r.get.hazards
+      // floats may be whitelisted per-query; decimals never are
+      val bad = if (whitelisted(name)) h.filter(_.endsWith("(decimal)")) else h
+      if (bad.nonEmpty) Some(s"$name: ${bad.mkString(",")}") else None
     }
     assert(offenders.isEmpty,
       s"hash-hazardous column types in gated outputs:\n  ${offenders.mkString("\n  ")}")
@@ -77,19 +115,20 @@ class SparkEntrySpec extends SparkSuite {
     // and crashes the gate before comparison (round-9 q_warc_http /
     // q_robots_meta). Nested data must be array_join'd (U+0001 separator
     // by convention) or exploded to (idx, value) rows before gating.
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val bad = fn(spark, Sf).schema.fields.collect {
-          case f if f.dataType.isInstanceOf[ArrayType] ||
-                    f.dataType.isInstanceOf[MapType] ||
-                    f.dataType.isInstanceOf[StructType] =>
-            s"${f.name}: ${f.dataType.simpleString}"
-        }
-        if (bad.nonEmpty) Some(s"$name -> ${bad.mkString(", ")}") else None
+    val offenders = sweep.flatMap { case (name, r) =>
+      val bad = r.get.nonScalar
+      if (bad.nonEmpty) Some(s"$name -> ${bad.mkString(", ")}") else None
     }
     assert(offenders.isEmpty,
       s"non-scalar top-level columns in gated outputs:\n  ${offenders.mkString("\n  ")}")
+  }
+
+  test("no registry query leaves a cache entry after Caches.release()") {
+    // every persist goes through ops.Caches, so the release a library
+    // user calls after consuming a result drops everything it cached
+    val leaks = sweep.collect { case (name, r) if r.get.leaksCache => name }
+    assert(leaks.isEmpty,
+      s"queries still cached after Caches.release() (${leaks.size}): ${leaks.mkString(", ")}")
   }
 
   test("query names are unique across module registries (no silent overwrite)") {
