@@ -62,26 +62,6 @@ object Harness {
       case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
     } + "\""
 
-  /** The body of a JSON string literal, unescaped (the inverse of [[jstr]]). */
-  def unjstr(body: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (c != '\\' || i + 1 == body.length) { sb += c; i += 1 }
-      else {
-        body.charAt(i + 1) match {
-          case 'n' => sb += '\n'; case 'r' => sb += '\r'; case 't' => sb += '\t'
-          case 'u' if i + 6 <= body.length =>
-            sb += Integer.parseInt(body.substring(i + 2, i + 6), 16).toChar; i += 4
-          case other => sb += other
-        }
-        i += 2
-      }
-    }
-    sb.toString
-  }
-
   /** Force full evaluation of every row and column: hash each row to one
     * 64-bit value and XOR-fold (bit_xor never overflows under ANSI mode,
     * unlike sum over 64-bit hashes). Nothing is prunable — under a bare

@@ -118,11 +118,7 @@ object SparkEntry {
       (graft.sources.Zip.queries, graft.sources.Zip.oracleSql),
       (graft.pipelines.CdxIndex.queries, graft.pipelines.CdxIndex.oracleSql),
       (graft.pipelines.Revalidate.queries, graft.pipelines.Revalidate.oracleSql),
-      (Map[String, (SparkSession, String) => DataFrame](
-        "q_range_join" -> ((s, dir) => graft.streaming.Sessionize.assignEventsToSessions(s, dir)),
-        "q_session_window" -> ((s, dir) => graft.streaming.Sessionize.sessionWindowSummaries(s, dir))),
-        Map("q_range_join" -> graft.streaming.Sessionize.assignOracle,
-          "q_session_window" -> graft.streaming.Sessionize.sessionWindowOracle)),
+      (graft.ops.Sessionize.queries, graft.ops.Sessionize.oracleSql),
       (Multimodal.queries, Multimodal.oracleSql)
     )
 

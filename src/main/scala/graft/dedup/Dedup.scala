@@ -88,9 +88,6 @@ object Dedup {
     array_distinct(shingled)
   }
 
-  def charShinglesSql(c: String, n: Int): String =
-    s"list_distinct(list_transform(range(1, greatest(length($c) - ${n - 2}, 1)), i -> substring($c, i, $n)))"
-
   /** Exact set Jaccard of two shingle-set columns: |∩| / |∪| as the ratio
     * of two integers — bit-identical across engines.
     */

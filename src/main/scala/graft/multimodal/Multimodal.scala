@@ -2,7 +2,6 @@ package graft.multimodal
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 import graft.Tables
 
@@ -34,15 +33,6 @@ import graft.Tables
   * media — never shuffle the blobs.
   */
 object Multimodal {
-
-  /** The media-table schema a real pipeline would carry. */
-  val MediaSchema: StructType = new StructType()
-    .add("media_id", LongType)
-    .add("media_type", StringType)
-    .add("content", BinaryType)
-    .add("meta", new StructType()
-      .add("source", StringType)
-      .add("n_bytes", LongType))
 
   /** REAL decode of the container header: magic bytes → (format, width,
     * height, channels) via the codegen'd [[graft.plans.ImageHeader]]

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 
-/** LAST-TOUCH attribution (X229, batch side) — the ad/analytics
+/** LAST-TOUCH attribution (X229) — the ad/analytics
   * workload behind every "which impression drove this purchase"
   * report: each purchase attributes to the MOST RECENT view by the
   * same user within the [[HorizonUs]] lookback, ties broken by the
@@ -19,8 +19,7 @@ import graft.Tables
   * riding post-join (the X20 range-join discipline); last-touch is a
   * max(struct) partial aggregate — no second shuffle, no window over
   * the join output. Candidate fan-out is bounded by views-per-user
-  * within one horizon, the same bound the streaming twin's state
-  * carries ([[graft.streaming.AttributionStream]]).
+  * within one horizon.
   */
 object Attribution {
 
@@ -37,8 +36,7 @@ object Attribution {
         unix_micros(col("ts")).as("pus"))
 
   /** Attribution candidates: every (purchase, view) of one user with
-    * the view inside the lookback — the exact pair set the streaming
-    * stream-stream join emits.
+    * the view inside the lookback.
     */
   def candidates(spark: SparkSession, dir: String): DataFrame =
     purchases(spark, dir).join(views(spark, dir), Seq("user_id"))

@@ -90,9 +90,8 @@ object CrawlPipeline {
   /** The STATELESS chain over (doc_id, blob `.warc.gz` BINARY, robots
     * STRING): sniff → gunzip → WARC walk → HTTP split → extract → NFC →
     * canonicalize → robots verdict → hygiene per-row features. Every
-    * stage is a per-row expression, so this runs unchanged on a
-    * STREAMING frame; output adds (status, canon, allowed, text, fp,
-    * pre_stage).
+    * stage is a per-row expression (no shuffle); output adds (status,
+    * canon, allowed, text, fp, pre_stage).
     */
   private def statelessStages(raw: DataFrame): DataFrame =
     Hygiene.withVerdict(statelessWide(raw)
@@ -157,20 +156,6 @@ object CrawlPipeline {
       .select(col("doc_id"), col("status"), col("canon"), col("allowed"),
         col("stage"), col("text").as("clean_text"))
   }
-
-  /** Streaming ingest twin — the whole crawl chain at the stream edge:
-    * blobs in, robots-allowed hygiene-surviving pages out, per
-    * micro-batch, with NO state store and no watermark (every stage is
-    * stateless per-row; exact dedup deliberately stays out — its
-    * streaming form is `dropDuplicatesWithinWatermark`, which needs
-    * event-time state this filter must not impose on stateless
-    * consumers; the [[Hygiene.filterStream]] discipline). Input schema:
-    * (doc_id, blob BINARY of `.warc.gz`, robots STRING).
-    */
-  def ingestStream(raw: DataFrame): DataFrame =
-    statelessStages(raw)
-      .filter(col("allowed") === 1 && col("pre_stage").isNull)
-      .select(col("doc_id"), col("status"), col("canon"), col("text"))
 
   /** Politeness-aware fetch schedule — the step between frontier
     * discovery and fetching: canonical hosts partition the queue, and

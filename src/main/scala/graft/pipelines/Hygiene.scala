@@ -78,11 +78,10 @@ object Hygiene {
   }
 
   /** Input columns + `fp` + `pre_stage` over any documents frame —
-    * stages 1-5 as pure per-row expressions (works unchanged on a
-    * streaming frame; the stateless part of the recipe). `pre_stage`
-    * NULL = survived filters. The token/gram arrays are bound in
-    * intermediate projections (the [[Repetition]] lambda discipline) and
-    * dropped before return.
+    * stages 1-5 as pure per-row expressions (the stateless part of the
+    * recipe). `pre_stage` NULL = survived filters. The token/gram arrays
+    * are bound in intermediate projections (the [[Repetition]] lambda
+    * discipline) and dropped before return.
     */
   def withVerdict(docs: DataFrame): DataFrame = {
     // one scan: tokens + gram arrays bound once, every gate reads them
@@ -114,16 +113,6 @@ object Hygiene {
   /** Narrow batch verdict table: (doc_id, fp, pre_stage). */
   def preVerdicts(docs: DataFrame): DataFrame =
     withVerdict(docs).select(col("doc_id"), col("fp"), col("pre_stage"))
-
-  /** Streaming ingest filter — stages 1-5 applied at the stream edge
-    * (stateless per-row expressions over each micro-batch: no join, no
-    * watermark, no state store). Exact dedup is deliberately NOT fused
-    * here: its streaming twin is `EventsStream.dedupStream`
-    * (`dropDuplicatesWithinWatermark`), which needs event-time state this
-    * filter should not impose on stateless consumers.
-    */
-  def filterStream(docs: DataFrame): DataFrame =
-    withVerdict(docs).filter(col("pre_stage").isNull).drop("fp", "pre_stage")
 
   private def stagedOn(docs: DataFrame): DataFrame = {
     // persist the NARROW verdict table (doc_id, fp, pre_stage — no text,

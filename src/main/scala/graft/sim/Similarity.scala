@@ -391,27 +391,6 @@ object Similarity {
               floor(x.cast("double") * 127 / col("a")).cast("long"))))).as("code"))
   }
 
-  /** STREAMING ingest into the served ANN index — the streaming twin of
-    * [[VecIndex.incPqCodes]]: each micro-batch of arriving vectors
-    * (vec_id, q, n2) PQ-encodes against the FROZEN base index inside
-    * `foreachBatch` (work ∝ micro-batch; summaries and scales are the
-    * same broadcast sides as the batch path) and appends its codes to
-    * `targetPath`. Serving reads (base codes ∪ target path) — the
-    * every-cycle production loop with no rebuild anywhere. Exactly the
-    * batch append's arithmetic, so stream-arrived codes are bit-equal
-    * to batch-encoded ones (spec-pinned).
-    */
-  def streamIndexAppend(vectors: DataFrame, sums: DataFrame, scales: DataFrame,
-                        targetPath: String, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        pqAppendOn(batch, sums, scales)
-          .write.mode("append").parquet(targetPath)
-        ()
-      }
-      .start()
-
   /** Serve top-k from the base index PLUS an appended batch — base build
     * and batch delta are both checkpointed ([[VecIndex]]); a serving
     * query pays probe selection over the frozen summaries and ADC over

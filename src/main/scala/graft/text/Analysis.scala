@@ -34,18 +34,17 @@ object Analysis {
   private def hits(toks: Column, markers: Seq[String]): Column =
     size(filter(toks, t => t.isin(markers: _*)))
 
-  /** Predicted language code; 'und' for NULL text or when no marker hits
-    * at all (a NULL guard keeps missing text from falling through every
+  /** Predicted language code of text `c` over its pre-materialized token
+    * array `toks`; 'und' for NULL text or when no marker hits at all (a
+    * NULL guard keeps missing text from falling through every
     * unknown-valued comparison into the last branch).
     *
     * The argmax when-chain references each language's score ~|langs| times;
-    * queries should materialize the token array first and call
-    * [[langIdFromTokens]] so those references re-filter a bound array
-    * instead of re-running the tokenization (Catalyst inlines the full
-    * sub-tree per reference — the lambda-substitution trap).
+    * callers materialize the token array first so those references
+    * re-filter a bound array instead of re-running the tokenization
+    * (Catalyst inlines the full sub-tree per reference — the
+    * lambda-substitution trap).
     */
-  def langId(c: Column): Column = langIdFromTokens(c, tokens(c))
-
   def langIdFromTokens(c: Column, toks: Column): Column = {
     val scores = LangMarkers.map { case (lang, m) => lang -> hits(toks, m) }
     val total = scores.map(_._2).reduce(_ + _)
@@ -89,12 +88,9 @@ object Analysis {
     * bit-for-bit. Ratios are guarded with `n > 0` so empty/null docs emit
     * NULL on both engines (DuckDB's list_sum([]) is NULL and 0/0.0 is NaN,
     * Spark's would be NULL and NULL — unguarded they diverge).
-    */
-  def qualityColumns(c: Column): Seq[(String, Column)] =
-    qualityColumnsFromTokens(c, tokens(c))
-
-  /** Variant over a pre-materialized token column — six output columns
-    * each reference the tokens, so queries should bind them once (see
+    *
+    * Takes a pre-materialized token column — six output columns each
+    * reference the tokens, so queries bind them once (see
     * [[langIdFromTokens]]).
     */
   def qualityColumnsFromTokens(c: Column, toks: Column): Seq[(String, Column)] = {

@@ -47,15 +47,15 @@ object Dsir {
     * (bigram, space-joined) — (doc_id, lang, f) rows.
     *
     * MAP-ONLY (optimization r15, guide §2.4): bigrams are built from the
-    * token ARRAY with the same slice/zip_with idiom [[scoreStream]] uses
-    * — the lag-window form shuffled and sorted every token row by doc_id
-    * before a single feature existed (one corpus-sized Exchange + Sort
-    * that explain showed THREE times in q_dsir_weights: scoring, model,
-    * totals). The emitted (doc_id, lang, f) multiset is identical —
-    * unigrams are all tokens, bigrams all adjacent pairs — and every
-    * consumer aggregates, so row order is immaterial. The token array is
-    * bound once as a lambda variable (the CollapseProject HOF-inlining
-    * trap — Phrases.mergeTokens documents the failure mode).
+    * token ARRAY with slice/zip_with — the lag-window form shuffled and
+    * sorted every token row by doc_id before a single feature existed
+    * (one corpus-sized Exchange + Sort that explain showed THREE times
+    * in q_dsir_weights: scoring, model, totals). The emitted (doc_id,
+    * lang, f) multiset is identical — unigrams are all tokens, bigrams
+    * all adjacent pairs — and every consumer aggregates, so row order is
+    * immaterial. The token array is bound once as a lambda variable
+    * (the CollapseProject HOF-inlining trap — Phrases.mergeTokens
+    * documents the failure mode).
     */
   private def features(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), col("lang"),
@@ -172,63 +172,6 @@ object Dsir {
        |SELECT doc_id, w.lang, weight_bits, threshold
        |FROM w JOIN thr ON thr.lang = w.lang
        |WHERE weight_bits >= threshold""".stripMargin
-  }
-
-  /** The bucket model as a driver artifact for the stream edge: bits per
-    * bucket, plus the smoothed default for buckets the training corpus
-    * never hit (cnt_r = cnt_t = 0 ⇒ msb(1) terms cancel to the totals
-    * difference). 256 rows by construction — the model-collect
-    * discipline.
-    */
-  def collectModel(spark: SparkSession, dir: String): (Map[Long, Long], Long) =
-    collectModelOf(Tables.documents(spark, dir))
-
-  def collectModelOf(docs: DataFrame): (Map[Long, Long], Long) = {
-    val feats = features(docs).withColumn("bucket", bucketOf(col("f")))
-    val isTarget = (col("lang") === TargetLang).cast("long")
-    val rows = feats.groupBy(col("bucket"))
-      .agg(count(lit(1)).as("cnt_r"), sum(isTarget).as("cnt_t"))
-      .crossJoin(broadcast(
-        feats.agg(count(lit(1)).as("tot_r"), sum(isTarget).as("tot_t"))))
-      .select(col("bucket"),
-        (msb(col("cnt_t") + 1L) - msb(col("tot_t") + Buckets)
-          - msb(col("cnt_r") + 1L) + msb(col("tot_r") + Buckets)).as("bits"),
-        (msb(lit(1L)) - msb(col("tot_t") + Buckets)
-          - msb(lit(1L)) + msb(col("tot_r") + Buckets)).as("dflt"))
-      .collect()
-    (rows.map(r => r.getLong(0) -> r.getLong(1)).toMap, rows.head.getLong(2))
-  }
-
-  /** Streaming ingest scorer — the [[importanceWeights]] verdict as ONE
-    * stateless per-row expression over a FROZEN model (no explode, no
-    * window, no aggregate, no state store): unigrams+bigrams rebuilt
-    * with slice/zip_with (identical adjacent-pair content to the batch
-    * lag window), each feature md5-bucketed in-expression and looked up
-    * in the literal model map with the smoothed default for unseen
-    * buckets. Docs with no tokens have no features and are dropped —
-    * the batch contract (absent = no verdict). `DsirSpec` pins the
-    * stream score equal to the batch gate's per doc.
-    */
-  def scoreStream(docs: DataFrame, model: Map[Long, Long], dflt: Long): DataFrame = {
-    val ks = model.keys.toArray.sorted
-    val wmap = map_from_arrays(lit(ks), lit(ks.map(model)))
-    val toks = TextOps.tokenize(col("text"))
-    val n = size(toks)
-    val bigrams = zip_with(slice(toks, lit(1), greatest(n - 1, lit(0))),
-      slice(toks, lit(2), greatest(n - 1, lit(0))),
-      (a, b) => concat(a, lit(" "), b))
-    val bitsArr = transform(concat(toks, bigrams),
-      f => coalesce(element_at(wmap, bucketOf(f)), lit(dflt)))
-    // bind the bits array ONCE as a lambda variable (the CollapseProject
-    // HOF-inlining trap — Phrases.mergeTokens documents the failure mode)
-    val scored = element_at(transform(array(bitsArr), a =>
-      struct(size(a).cast("long").as("n_feats"),
-        aggregate(a, lit(0L), (acc, v) => acc + v).as("weight_bits"))), 1)
-    docs
-      .withColumn("s", scored)
-      .filter(col("s.n_feats") > 0)
-      .select(col("doc_id"), col("lang"),
-        col("s.n_feats").as("n_feats"), col("s.weight_bits").as("weight_bits"))
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -115,54 +115,6 @@ object LangProfile {
       .select(col("doc_id"), col("lang").as("lang_pred"), col("score"))
   }
 
-  /** The profile table as a driver map — the model artifact for the
-    * stream edge (lang-count × gram-count entries, model-sized; the
-    * [[QualityModel.collectWeights]] discipline).
-    */
-  def collectProfiles(profile: DataFrame): Map[(String, String), Long] =
-    profile.select(col("lang"), col("gram"), col("f")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-
-  /** Streaming/ingest classifier twin — the [[classify]] verdict as ONE
-    * stateless per-row expression (no explode, no aggregate, no state):
-    * per-language scores fold over the token array against literal
-    * gram→f maps, the argmax resolves in the same expression, ties
-    * break by language name (equal score prefers the smaller name —
-    * matching [[classify]]'s ASC tie-break), and no-evidence rows get
-    * NULL (the batch operator's absent-row contract, column form;
-    * declared edge: a document whose ONLY matched grams carry
-    * per-million frequency 0 scores 0 here and counts as no evidence,
-    * where the batch join would still emit it). Adds `lang_pred` to
-    * the frame. `LangProfileSpec` pins stream-vs-batch parity per
-    * document on the planted corpus.
-    */
-  def classifyStream(docs: DataFrame, model: Map[(String, String), Long]): DataFrame = {
-    val langs = model.keys.map(_._1).toSeq.distinct.sorted
-    val toks = filter(split(col("text"), " "), w => length(w) >= 2)
-    val gramArr = flatten(transform(toks, tok =>
-      transform(sequence(lit(1), length(tok) - 1), i => tok.substr(i, lit(2)))))
-    // bind the gram array once as a lambda variable (the CollapseProject
-    // HOF-inlining trap — see QualityModel.filterStream), fold per
-    // language over literal gram→f maps, argmax in the same expression
-    val scored = element_at(transform(array(gramArr), g => {
-      val perLang = langs.map { l =>
-        val entries = model.collect { case ((`l`, gr), f) => gr -> f }.toSeq.sortBy(_._1)
-        val m = map_from_arrays(
-          lit(entries.map(_._1).toArray), lit(entries.map(_._2).toArray))
-        struct(lit(l).as("lang"),
-          aggregate(g, lit(0L),
-            (acc, gr) => acc + coalesce(element_at(m, gr), lit(0L))).as("score"))
-      }
-      aggregate(array(perLang: _*),
-        struct(lit("").as("lang"), lit(Long.MinValue).as("score")),
-        (acc, cand) => when(cand.getField("score") > acc.getField("score")
-          || (cand.getField("score") === acc.getField("score")
-            && cand.getField("lang") < acc.getField("lang")), cand).otherwise(acc))
-    }), 1)
-    docs.withColumn("lang_pred",
-      when(scored.getField("score") > 0L, scored.getField("lang")))
-  }
-
   /** q_lang_profile_model: profiles trained on the EVEN planted docs. */
   def plantedProfiles(spark: SparkSession, dir: String): DataFrame =
     profilesFrom(planted(spark, dir).filter(col("doc_id") % 2 === 0))

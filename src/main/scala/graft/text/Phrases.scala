@@ -173,17 +173,6 @@ object Phrases {
     in.select(col("doc_id"), mergeTokens(col("toks"), phrases).as("toks"))
   }
 
-  /** Streaming ingest twin: rewrite each arriving document's token
-    * stream with a FROZEN phrase model (the collected "a b" strings a
-    * batch run produced) — one stateless per-row `phrase_merge` scan,
-    * no aggregate, no state store; the streaming sibling of the frozen-
-    * quantizer ANN append (X5c): models train in batch, apply at the
-    * edge. Output schema (doc_id, toks) matches [[pass]]'s.
-    */
-  def streamApply(docs: DataFrame, phrases: Seq[String]): DataFrame =
-    docs.select(col("doc_id"),
-      mergeTokens(TextOps.tokenize(lower(col("text"))), phrases).as("toks"))
-
   private def stream(tokDf: DataFrame): DataFrame =
     tokDf.select(col("doc_id"),
         posexplode(col("toks")).as(Seq("pos", "term")))

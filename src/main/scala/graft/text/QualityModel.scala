@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -94,58 +94,6 @@ object QualityModel {
         expr("(1000 * sum_w - pmod(1000 * sum_w, n_toks)) DIV n_toks").as("score_q"),
         (expr("(1000 * sum_w - pmod(1000 * sum_w, n_toks)) DIV n_toks")
           > KeepThreshold).as("keep"))
-  }
-
-  /** The weight table as a driver map — the model artifact a deploy
-    * ships to the stream edge (vocab-sized by construction, exactly like
-    * a fasttext model file; the [[graft.text.Phrases]] model-collect
-    * discipline).
-    */
-  def collectWeights(spark: SparkSession, dir: String): Map[Long, Long] =
-    weights(spark, dir).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-  /** Streaming ingest filter — the same verdict as [[score]] computed as
-    * ONE stateless per-row expression (no explode, no aggregate, no
-    * state store): token weights come from a literal map of the
-    * collected model, summed with a fold over the token array. Keeps
-    * rows whose score clears [[KeepThreshold]]; docs with no tokens have
-    * no features and are dropped, matching the batch contract (absent =
-    * no verdict = not kept). `StreamParity` in `QualityModelSpec` pins
-    * the stream verdict equal to the batch gate's per doc.
-    */
-  def filterStream(docs: DataFrame, model: Map[Long, Long]): DataFrame = {
-    val ks = model.keys.toArray.sorted
-    val wmap = map_from_arrays(lit(ks), lit(ks.map(model)))
-    // WEIGHTED tokens only — the exact batch contract: score's inner join
-    // excludes tokens whose slot has no weight row from BOTH n_toks and
-    // sum_w, so the stream drops unweighted tokens too (element_at is
-    // NULL for a missing slot → filtered out, never summed as NULL) and
-    // divides by the weighted count, not size(toks). Docs with zero
-    // weighted tokens have no batch verdict and are dropped here alike.
-    val ws = filter(
-      transform(TextOps.preprocess(col("text")),
-        t => element_at(wmap, DocEmbedding.slotOf(t))),
-      w => w.isNotNull)
-    def longCol(c: Column) = org.apache.spark.sql.GraftColumnShim.expression(c)
-    // bind the weighted-weight array ONCE as a lambda variable so the
-    // preprocess→transform→filter producer is evaluated once per row, not
-    // once per reference (the CollapseProject HOF-inlining trap —
-    // [[graft.text.Phrases.mergeTokens]] documents the failure mode)
-    val keep = element_at(transform(array(ws), a => {
-      val sumw = aggregate(a, lit(0L), (acc, v) => acc + v)
-      // exact integral FLOOR division (the batch score_q contract): the
-      // numerator less pmod(x, n) is exactly divisible, so IntegralDivide
-      // returns floor(x/n) for any sign — same pmod trick as scoreDocs.
-      // greatest(n,1): the n=0 row fails the size(a)>0 conjunct either
-      // way, but the divide must never see a zero under ANSI evaluation
-      val n = greatest(size(a), lit(1)).cast("long")
-      val x = lit(1000L) * sumw
-      val scoreQ = org.apache.spark.sql.GraftColumnShim.column(
-        new org.apache.spark.sql.catalyst.expressions.IntegralDivide(
-          longCol(x - pmod(x, n)), longCol(n)))
-      size(a) > 0 && scoreQ > KeepThreshold
-    }), 1)
-    docs.filter(keep)
   }
 
   def scoreOracle: String =

@@ -34,38 +34,4 @@ class AttributionSpec extends SparkSuite {
     assert(!plan.contains("WindowExec") && !plan.contains("Window "),
       s"last-touch must be a max(struct) aggregate, not a ranking window:\n$plan")
   }
-
-  test("stream-stream join emits the batch candidate set across batch splits") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.sql.Timestamp.valueOf("2026-01-01 10:00:00")
-    def ts(minutes: Int) = new java.sql.Timestamp(base.getTime + minutes * 60000L)
-    // views: user 1 at t0 and t30; user 2 at t0. purchases: user 1 at
-    // t40 (two candidates), user 1 at t85 (one: t30 is 55 min back,
-    // t0 is 85 — outside), user 2 at t70 (none: 70 min > horizon)
-    val vs = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val ps = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, Long, java.sql.Timestamp)]
-    val out = graft.streaming.AttributionStream.candidatePairs(
-      vs.toDF().toDF("view_id", "user_id", "vts"),
-      ps.toDF().toDF("purchase_id", "user_id", "pts"))
-    val q = out.writeStream.format("memory").queryName("attr_stream")
-      .outputMode("append").start()
-    // batch 1: the views and ONE purchase
-    vs.addData((101L, 1L, ts(0)), (102L, 1L, ts(30)), (201L, 2L, ts(0)))
-    ps.addData((901L, 1L, ts(40)))
-    q.processAllAvailable()
-    // batch 2: late purchases joining against batch-1 view state
-    ps.addData((902L, 1L, ts(85)), (903L, 2L, ts(70)))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.sql("SELECT purchase_id, view_id, gap_us FROM attr_stream")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val M = 60L * 1000000L
-    assert(got == Set(
-      (901L, 101L, 40 * M), (901L, 102L, 10 * M), // both views qualify
-      (902L, 102L, 55 * M)), // cross-batch pair; 101 is outside the hour
-      s"got $got")
-  }
 }

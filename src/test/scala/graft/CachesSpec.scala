@@ -3,12 +3,14 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
 
 import org.apache.spark.storage.StorageLevel
 
 /** The persistence discipline of [[ops.Caches]]: no other library file
   * persists or checkpoints a DataFrame, and [[ops.Caches.release]] drops
-  * exactly the calling thread's caches.
+  * exactly the calling thread's caches. The same source scan keeps the
+  * library batch only.
   */
 class CachesSpec extends SparkSuite {
 
@@ -61,23 +63,42 @@ class CachesSpec extends SparkSuite {
     Seq("b.persist", "c.cache", "nested", "d */", "f.cache").foreach(w => assert(!code.contains(w), w))
   }
 
-  test("only ops/Caches persists and only sources/Checkpoints checkpoints in src/main") {
+  /** Every library source under `src/main/scala`, as (path relative to
+    * it, [[codeOnly]] text).
+    */
+  private lazy val library: Seq[(String, String)] = {
     val root = Paths.get("src/main/scala")
     val files = Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
     assert(files.size > 100, s"expected the library sources under $root")
-    def rel(p: Path) = root.relativize(p).toString.replace('\\', '/')
-    val rules = Seq(
-      // Caches.persist itself is the allowed call
-      "(?<!Caches)\\.persist\\(|\\.cache\\(\\)|\\bStorageLevel\\b".r -> "graft/ops/Caches.scala",
-      "\\.localCheckpoint\\(|\\.checkpoint\\(".r -> "graft/sources/Checkpoints.scala")
-    val offenders = for {
-      f <- files
-      code = codeOnly(new String(Files.readAllBytes(f), "UTF-8"))
-      (pattern, owner) <- rules if rel(f) != owner
+    files.map(f => root.relativize(f).toString.replace('\\', '/') ->
+      codeOnly(new String(Files.readAllBytes(f), "UTF-8")))
+  }
+
+  /** `path:line: match (why)` for each match of `pattern` in a library
+    * file other than `owner`.
+    */
+  private def offenders(pattern: Regex, owner: Option[String], why: String): Seq[String] =
+    for {
+      (path, code) <- library if !owner.contains(path)
       m <- pattern.findAllMatchIn(code)
-    } yield s"${rel(f)}:${code.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched} (only $owner may)"
-    if (offenders.nonEmpty) fail(offenders.mkString("\n  ", "\n  ", ""))
+    } yield s"$path:${code.substring(0, m.start).count(_ == '\n') + 1}: ${m.matched} ($why)"
+
+  test("only ops/Caches persists and only sources/Checkpoints checkpoints in src/main") {
+    val found =
+      // Caches.persist itself is the allowed call
+      offenders("(?<!Caches)\\.persist\\(|\\.cache\\(\\)|\\bStorageLevel\\b".r,
+        Some("graft/ops/Caches.scala"), "only graft/ops/Caches.scala may") ++
+      offenders("\\.localCheckpoint\\(|\\.checkpoint\\(".r,
+        Some("graft/sources/Checkpoints.scala"), "only graft/sources/Checkpoints.scala may")
+    if (found.nonEmpty) fail(found.mkString("\n  ", "\n  ", ""))
+  }
+
+  test("src/main is batch only: no Structured Streaming source, sink, watermark or state") {
+    val found = offenders(("\\b(readStream|writeStream|withWatermark|flatMapGroupsWithState|" +
+      "mapGroupsWithState|foreachBatch|GroupState)\\b|\\borg\\.apache\\.spark\\.sql\\.streaming\\b").r,
+      None, "graft is a batch engine")
+    if (found.nonEmpty) fail(found.mkString("\n  ", "\n  ", ""))
   }
 
   test("release() drops only the calling thread's caches, and twice is a no-op") {

@@ -27,41 +27,6 @@ class CrawlPipelineSpec extends SparkSuite {
     }
   }
 
-  test("streaming ingest twin: whole chain per micro-batch, stateless, agrees with batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // batch-build the same blobs the gate plants, for a slice of docs
-    val fixtures = {
-      import org.apache.spark.sql.functions._
-      val docs = Tables.documents(spark, Sf).filter(col("doc_id") < 40)
-      val body = concat(graft.text.Html.plantHtml, lit(" ẍend"))
-      docs.select(col("doc_id"),
-          org.apache.spark.sql.GraftColumnShim.column(graft.plans.GzipBytes(
-            org.apache.spark.sql.GraftColumnShim.expression(
-              graft.sources.Warc.plantHttpWarc(body, CrawlPipeline.plantUri)))).as("blob"),
-          graft.text.Robots.plantRobots.as("robots"))
-        .collect().map(r => (r.getLong(0), r.getAs[Array[Byte]]("blob"), r.getString(2)))
-    }
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Byte], String)]
-    val out = CrawlPipeline.ingestStream(mem.toDF().toDF("doc_id", "blob", "robots"))
-    val q = out.writeStream.format("memory").queryName("crawl_stream")
-      .outputMode("append").start()
-    mem.addData(fixtures.toIndexedSeq: _*)
-    q.processAllAvailable()
-    q.stop()
-    assert(!q.lastProgress.toString.contains("stateOperators\" : [ {"),
-      "the stateless chain must not create a state store")
-    val streamed = spark.sql("SELECT doc_id FROM crawl_stream")
-      .collect().map(_.getLong(0)).toSet
-    // batch twin: the same docs, allowed by robots and surviving stages 1-5
-    val batch = CrawlPipeline.crawl(spark, Sf)
-      .filter(org.apache.spark.sql.functions.col("doc_id") < 40)
-      .filter("allowed = 1 AND stage >= 6")
-      .collect().map(_.getLong(0)).toSet
-    assert(streamed == batch, s"stream $streamed vs batch $batch")
-    assert(streamed.nonEmpty, "slice must have survivors")
-  }
-
   test("fetch schedule: per-host running-delay offsets, one scheduling exchange") {
     val rows = CrawlPipeline.fetchSchedule(spark, Sf)
       .orderBy("host", "seq").collect()

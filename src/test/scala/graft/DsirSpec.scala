@@ -60,26 +60,6 @@ class DsirSpec extends SparkSuite {
     graft.ops.Caches.release()
   }
 
-  test("stream twin: frozen-model per-row score equals the batch gate per doc") {
-    val (model, dflt) = Dsir.collectModel(spark, Sf)
-    assert(model.nonEmpty && model.size <= Dsir.Buckets)
-    val docs = Tables.documents(spark, Sf)
-    val batch = Dsir.importanceWeights(spark, Sf).collect()
-      .map(r => r.getLong(0) -> ((r.getAs[Long]("n_feats"), r.getAs[Long]("weight_bits"))))
-      .toMap
-    val stream = Dsir.scoreStream(docs, model, dflt).collect()
-      .map(r => r.getLong(0) -> ((r.getAs[Long]("n_feats"), r.getAs[Long]("weight_bits"))))
-      .toMap
-    assert(stream.keySet == batch.keySet)
-    batch.foreach { case (d, v) =>
-      assert(stream(d) == v, s"doc $d: stream ${stream(d)} != batch $v")
-    }
-    // and the per-row path is genuinely stateless: no exchange anywhere
-    val p = Dsir.scoreStream(docs, model, dflt)
-      .queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
-    assert(!p.contains("Exchange"), s"stream scorer must be shuffle-free:\n$p")
-  }
-
   test("per-language p75 selection keeps each language's own top slice") {
     val sel = Dsir.selectTop(spark, Sf).persist()
     val w = Dsir.importanceWeights(spark, Sf).persist()

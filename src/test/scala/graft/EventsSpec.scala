@@ -1,9 +1,7 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.ops.Events
-import graft.streaming.EventsStream
 
 class EventsSpec extends SparkSuite {
 
@@ -13,56 +11,6 @@ class EventsSpec extends SparkSuite {
     val minuteParts = out.select(minute(col("hour_start"))).distinct().collect().map(_.getInt(0))
     assert(minuteParts.toSeq == Seq(0), "tumbling 1h windows start on the hour")
     assert(out.filter(col("sum_k").isNull).count() === 0)
-  }
-
-  test("writeStream lands append-mode results in checkpointed parquet (production sink path)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("graft-stream").toString
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double, String)]
-    val q = EventsStream.hourlyJsonAggStream(mem.toDF().toDF("ts", "event_type", "value", "props"))
-      .writeStream.format("parquet")
-      .option("path", s"$base/out")
-      .option("checkpointLocation", s"$base/ckpt")
-      .outputMode("append")
-      .start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    mem.addData((ts("2024-01-01 10:10:00"), "click", 1.00, """{"k": 2}"""))
-    q.processAllAvailable()
-    mem.addData((ts("2024-01-01 15:00:00"), "view", 0.0, """{"k": 0}""")) // advances watermark
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.read.parquet(s"$base/out")
-    assert(out.count() === 1, "exactly the closed 10:00 window is committed")
-    val r = out.collect()(0)
-    assert(r.getAs[String]("event_type") == "click" && r.getAs[Long]("sum_k") == 2L)
-    assert(new java.io.File(s"$base/ckpt").exists(), "checkpoint directory materialized")
-  }
-
-  test("streaming twin produces the same rows as batch once the source is exhausted") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(java.sql.Timestamp, String, Double, String)]
-    val streamDf = mem.toDF().toDF("ts", "event_type", "value", "props")
-    val q = EventsStream.hourlyJsonAggStream(streamDf)
-      .writeStream.format("memory").queryName("ev_agg").outputMode("append").start()
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    mem.addData(
-      (ts("2024-01-01 10:05:00"), "click", 1.25, """{"k": 3}"""),
-      (ts("2024-01-01 10:45:00"), "click", 2.50, """{"k": 4}"""),
-      (ts("2024-01-01 11:10:00"), "view", 0.75, """{"k": 1}"""))
-    q.processAllAvailable()
-    // advance watermark far enough to close the 10:00 and 11:00 windows
-    mem.addData((ts("2024-01-01 15:00:00"), "view", 0.0, """{"k": 0}"""))
-    q.processAllAvailable()
-    val rows = spark.sql("SELECT * FROM ev_agg ORDER BY hour_start, event_type").collect()
-    q.stop()
-    assert(rows.length === 2, s"two closed windows expected, got ${rows.toSeq}")
-    val click = rows(0)
-    assert(click.getString(1) == "click" && click.getLong(2) == 2 &&
-      click.getLong(3) == 7 && click.getDouble(4) == 3.75)
-    val view = rows(1)
-    assert(view.getString(1) == "view" && view.getLong(2) == 1 && view.getLong(3) == 1)
   }
 
   test("gap fill: contiguous per-user hour series, forward-carried values") {

@@ -97,25 +97,6 @@ class HygieneBpeSpec extends SparkSuite {
       Seq(("a a", 3L), ("a b", 1L)))
   }
 
-  test("streaming ingest filter: stages 1-5 per micro-batch, stateless, schema preserved") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val out = Hygiene.filterStream(mem.toDF().toDF("doc_id", "text"))
-    assert(out.columns.toSeq == Seq("doc_id", "text")) // verdict cols dropped
-    val q = out.writeStream.format("memory").queryName("hyg_stream")
-      .outputMode("append").start()
-    val good = "the " + (1 to 99).map(i => f"word$i%02d").mkString(" ")
-    mem.addData(
-      (1L, good),                                        // survives
-      (2L, "too short"),                                 // stage 2
-      (3L, (1 to 40).map(i => s"zz$i").mkString(" ")))   // no markers -> stage 3
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.sql("SELECT doc_id FROM hyg_stream").collect().map(_.getLong(0)).toSet
-    assert(ids == Set(1L))
-  }
-
   test("bpe encode: subwords reassemble each word; merges shrink the token count") {
     import org.apache.spark.sql.functions._
     val enc = graft.text.Bpe.encode(spark, Sf).cache()

@@ -55,27 +55,6 @@ class LangProfileSpec extends SparkSuite {
     assert(got == Set(8L), s"unseen-script doc must be absent, got $got")
   }
 
-  test("stream twin: one-expression verdict equals the batch classifier per doc") {
-    val docs = LangProfile.planted(spark, Sf).select(col("doc_id"), col("text"))
-      .unionByName(Seq((1000001L, "χψω ωψχ"), (1000002L, ""))
-        .toDF("doc_id", "text"))
-    val model = LangProfile.collectProfiles(profile)
-    val stream = LangProfile.classifyStream(docs, model)
-      .select(col("doc_id"), col("lang_pred"))
-      .collect().map(r => r.getLong(0) -> Option(r.getString(1))).toMap
-    val batch = LangProfile.classify(docs, profile)
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    docs.collect().map(_.getLong(0)).foreach { id =>
-      assert(stream(id) == batch.get(id),
-        s"doc $id: stream ${stream(id)} vs batch ${batch.get(id)}")
-    }
-    assert(stream(1000001L).isEmpty && stream(1000002L).isEmpty)
-    // stateless: no shuffle, no state store in the plan
-    val plan = LangProfile.classifyStream(docs, model)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"), plan.take(1500))
-  }
-
   test("plan shape: classification joins the profile by BROADCAST, no sort-merge") {
     val plan = LangProfile.plantedClassify(spark, Sf)
       .queryExecution.executedPlan.toString

@@ -104,27 +104,6 @@ class PhrasesSpec extends SparkSuite {
       s"$builds set builds for $n rows — the foldable-side hoist is not engaging")
   }
 
-  test("streaming apply merges phrases per micro-batch with a frozen model") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val out = Phrases.streamApply(mem.toDF().toDF("doc_id", "text"),
-      Seq("machine learning", "new york"))
-    val q = out.writeStream.format("memory").queryName("ph_stream")
-      .outputMode("append").start()
-    mem.addData(
-      (1L, "we like Machine Learning a lot"),
-      (2L, "new york times prints daily"),
-      (3L, "nothing to merge here"))
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.sql("SELECT doc_id, toks FROM ph_stream").collect()
-      .map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
-    assert(got(1L) === Seq("we", "like", "machine_learning", "a", "lot"))
-    assert(got(2L) === Seq("new_york", "times", "prints", "daily"))
-    assert(got(3L) === Seq("nothing", "to", "merge", "here"))
-  }
-
   test("the merge itself adds no shuffle: model-sized collect, per-row fold") {
     // the apply plan's exchanges all come from the model build (counts) —
     // the merged-stream side is the widen round-robin + per-row fold only

@@ -33,27 +33,6 @@ class QualityModelSpec extends SparkSuite {
     assert(!plan.contains("SortMergeJoin"), s"token stream must not shuffle to the join:\n$plan")
   }
 
-  test("streaming filter verdict equals the batch gate's, per document") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val model = QualityModel.collectWeights(spark, Sf)
-    val batch = QualityModel.score(spark, Sf)
-      .select("doc_id", "keep").collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val docs = Tables.documents(spark, Sf).select("doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getString(1)))
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-    val out = QualityModel.filterStream(mem.toDF().toDF("doc_id", "text"), model)
-    val q = out.writeStream.format("memory").queryName("qm_stream")
-      .outputMode("append").start()
-    mem.addData(docs.take(60).toSeq: _*)
-    mem.addData((9999L, "the of and to in")) // stopwords only: no tokens, dropped
-    q.processAllAvailable()
-    q.stop()
-    val kept = spark.sql("SELECT doc_id FROM qm_stream").collect().map(_.getLong(0)).toSet
-    val expect = docs.take(60).collect { case (id, _) if batch.getOrElse(id, false) => id }.toSet
-    assert(kept === expect)
-  }
-
   test("weights are deterministic across evaluations") {
     val a = QualityModel.weights(spark, Sf).orderBy("slot").collect().toSeq
     val b = QualityModel.weights(spark, Sf).orderBy("slot").collect().toSeq

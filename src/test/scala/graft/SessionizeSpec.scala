@@ -1,65 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import graft.streaming.Sessionize
-import graft.streaming.Sessionize.{Event, Session}
+import graft.ops.Sessionize
+import graft.ops.Sessionize.Session
 
 class SessionizeSpec extends SparkSuite {
-
-  private def ts(s: String) = java.sql.Timestamp.valueOf(s)
-
-  test("streaming sessionization closes sessions on gap and emits once") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[Event]
-    val q = Sessionize.sessionize(mem.toDS())
-      .writeStream.format("memory").queryName("sessions").outputMode("append").start()
-    // user 1: two events 10 min apart (one session), then 2h silence, one more
-    mem.addData(
-      Event(1L, ts("2024-01-01 10:00:00"), 1.00),
-      Event(1L, ts("2024-01-01 10:10:00"), 2.50),
-      Event(2L, ts("2024-01-01 10:05:00"), 5.00))
-    q.processAllAvailable()
-    mem.addData(Event(1L, ts("2024-01-01 12:30:00"), 0.25)) // gap -> closes session 1
-    q.processAllAvailable()
-    // push watermark + timeout far forward so remaining sessions close
-    mem.addData(Event(9L, ts("2024-01-02 00:00:00"), 0.0))
-    q.processAllAvailable()
-    mem.addData(Event(9L, ts("2024-01-03 00:00:00"), 0.0))
-    q.processAllAvailable()
-    val rows = spark.sql("SELECT * FROM sessions WHERE user_id IN (1, 2) ORDER BY user_id, session_start")
-      .as[Session].collect()
-    q.stop()
-    assert(rows.length >= 3, s"expected user1 x2 + user2 x1 closed sessions, got ${rows.toSeq}")
-    val u1 = rows.filter(_.user_id == 1L)
-    assert(u1(0).n_events == 2 && u1(0).sum_value == 3.50)
-    assert(u1(0).session_end == ts("2024-01-01 10:10:00"))
-    assert(u1(1).n_events == 1 && u1(1).sum_value == 0.25)
-    val u2 = rows.filter(_.user_id == 2L)
-    assert(u2(0).n_events == 1 && u2(0).sum_value == 5.00)
-  }
-
-  test("streaming session_window: sessions emit once the watermark passes their close") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp)]
-    val q = Sessionize.sessionWindowStream(mem.toDF().toDF("user_id", "ts"))
-      .writeStream.format("memory").queryName("sw_stream").outputMode("append").start()
-    // user 1: two events 10 min apart (one session), then one 2 h later (new session)
-    mem.addData((1L, ts("2024-01-01 10:00:00")), (1L, ts("2024-01-01 10:10:00")))
-    q.processAllAvailable()
-    mem.addData((1L, ts("2024-01-01 12:00:00")))
-    q.processAllAvailable()
-    mem.addData((9L, ts("2024-01-02 00:00:00"))) // advance watermark far past both
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.sql("SELECT user_id, session_start, n_events FROM sw_stream")
-      .collect().filter(_.getLong(0) == 1L)
-      .map(r => r.getTimestamp(1) -> r.getLong(2)).toMap
-    assert(out == Map(ts("2024-01-01 10:00:00") -> 2L, ts("2024-01-01 12:00:00") -> 1L))
-  }
 
   test("batch twin sessionizes the fixture with positive session lengths") {
     val s = Sessionize.sessionizeBatch(spark, Sf).cache()

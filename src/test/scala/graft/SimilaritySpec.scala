@@ -208,46 +208,6 @@ class SimilaritySpec extends SparkSuite {
     } finally spark.conf.unset(Similarity.VecIndex.DirConf)
   }
 
-  test("streaming index append: stream-arrived codes bit-equal the batch append") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import spark.implicits._
-    val docs = Similarity.quantized(spark, Sf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val assigned = Similarity.coarseAssigned(docs.filter(!Similarity.isIncBatch))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val sums = Similarity.listSummaries(assigned)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val scales = Similarity.scalesOf(Similarity.pqEncodeOn(assigned, sums))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val batchRows = docs.filter(Similarity.isIncBatch)
-        .select("vec_id", "q", "n2").as[(Long, Seq[Long], Long)].collect()
-
-      val tmp = java.nio.file.Files.createTempDirectory("graft-stream-index")
-      val target = tmp.resolve("codes").toString
-      val mem = MemoryStream[(Long, Seq[Long], Long)]
-      val q = Similarity.streamIndexAppend(
-        mem.toDF().toDF("vec_id", "q", "n2"), sums, scales,
-        target, tmp.resolve("ckpt").toString)
-      try {
-        val (a, b) = batchRows.splitAt(batchRows.length / 2)
-        mem.addData(a.toSeq); q.processAllAvailable()
-        mem.addData(b.toSeq); q.processAllAvailable()
-      } finally q.stop()
-
-      def keyed(df: org.apache.spark.sql.DataFrame) = df
-        .select("vec_id", "list_id", "cnt", "n2", "a", "code")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getSeq[Long](5).toList)).toSet
-      val streamed = keyed(spark.read.parquet(target))
-      val direct = keyed(Similarity.pqAppendOn(
-        docs.filter(Similarity.isIncBatch), sums, scales))
-      assert(streamed === direct)
-      sums.unpersist(); scales.unpersist(); assigned.unpersist()
-    } finally docs.unpersist()
-  }
-
   test("incremental append plan: batch-sized work, base side broadcast, codes never shuffle") {
     val docs = Similarity.quantized(spark, Sf)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
