@@ -47,12 +47,12 @@ object Preprocess {
 
   /** normalize(trim(concat_ws(' ', Summary, Description))) with the
     * empty-string→null rewrite (F8) applied — the per-row text path.
+    * `nullif` evaluates the chain once per row: Spark rewrites it to a
+    * projection of its argument, so the lambdas of [[TextOps.preprocess]]
+    * downstream see a column, not another copy of the chain.
     */
-  private def normed: Column = {
-    val result = trim(concat_ws(" ", col("Summary"), col("Description")))
-    val norm = Normalize.normalizeText(result)
-    when(norm === "", lit(null)).otherwise(norm)
-  }
+  private[graft] def normed: Column =
+    nullif(Normalize.normalizeText(trim(concat_ws(" ", col("Summary"), col("Description")))), lit(""))
 
   /** Month-filtered, federal-excluded, normalized, non-null rows:
     * (Incident_Number, norm). ↔ `preprocess_and_store_parquets.py:187-202`.

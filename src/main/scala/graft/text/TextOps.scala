@@ -15,7 +15,11 @@ import org.apache.spark.sql.functions._
   * shuffle-free, a per-row map over the scan at any scale. They are NOT
   * compiled into the stage's generated code: in Spark 4.1 `ArrayFilter`
   * and `ArrayTransform` mix in `CodegenFallback`, so each call is
-  * interpreted row by row (the per-row cost of `preprocessAllMonths`).
+  * interpreted row by row. Keep their argument a column or a cheap
+  * expression: an interpreted lambda re-evaluates whatever its argument
+  * computes, out of reach of subexpression elimination (why
+  * `Preprocess.normed` wraps the normalize chain in `nullif`, which Spark
+  * evaluates once, below the lambdas).
   *
   * Stopword-set fidelity: the reference customizes spaCy's set with
   * `by`→stop, `hi`→stop, `not`→NOT a stopword

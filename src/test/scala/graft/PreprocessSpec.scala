@@ -63,13 +63,39 @@ class PreprocessSpec extends SparkSuite {
     import spark.implicits._
     val df = Seq(("1-1", "  ", ""), ("1-2", "alpha beta", "gamma")).toDF("Incident_Number", "Summary", "Description")
       .withColumn("is_federal", lit(false))
-    // replicate the pipeline's normed+filter steps over a controlled frame
+    // the pipeline's own normed expression + filter over a controlled frame
     val normed = df
-      .select(col("Incident_Number"),
-        when(graft.text.Normalize.normalizeText(trim(concat_ws(" ", col("Summary"), col("Description")))) === "", lit(null))
-          .otherwise(graft.text.Normalize.normalizeText(trim(concat_ws(" ", col("Summary"), col("Description"))))).as("norm"))
+      .select(col("Incident_Number"), Preprocess.normed.as("norm"))
       .filter(col("norm").isNotNull)
-    assert(normed.collect().map(_.getString(0)).toSeq == Seq("1-2"))
+    assert(normed.collect().map(r => (r.getString(0), r.getString(1))).toSeq ==
+      Seq(("1-2", "alpha beta gamma")))
+  }
+
+  test("the normalize chain runs natively: never under a lambda, at most filter plus project") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, RegExpReplace}
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    import graft.plans.NormalizeChain
+    def isChain(e: Expression) = e.isInstanceOf[RegExpReplace] || e.isInstanceOf[NormalizeChain]
+    // a regexp_replace fold counts once: the walk stops at the outermost step
+    def chains(e: Expression): Int = if (isChain(e)) 1 else e.children.map(chains).sum
+    def interpretedChains(e: Expression): Seq[Expression] = e match {
+      case f: CodegenFallback => f.children.flatMap(_.collect { case c if isChain(c) => c })
+      case _ => e.children.flatMap(interpretedChains)
+    }
+    // q_preprocess_monthly numbers rows through an RDD, so its own plan
+    // starts at the numbered rows; the chain lives in `base`
+    val frames = Seq(
+      "preprocessAllMonths" -> Preprocess.preprocessAllMonths(spark, Sf),
+      "q_preprocess_monthly" -> SparkEntry.queries("q_preprocess_monthly")(spark, Sf),
+      "base" -> Preprocess.base(spark, Sf, bucket))
+    for ((name, df) <- frames) {
+      val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      val interpreted = exprs.flatMap(interpretedChains)
+      assert(interpreted.isEmpty,
+        s"$name: ${interpreted.size} chain nodes under a CodegenFallback expression")
+      val n = exprs.map(chains).sum
+      assert(n <= 2, s"$name: the normalize chain appears $n times")
+    }
   }
 
   test("month-partitioned sink writes one directory per month_year") {

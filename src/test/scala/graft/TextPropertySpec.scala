@@ -130,7 +130,11 @@ class TextPropertySpec extends SparkSuite {
   test("UDF registration surface: registered normalize UDF equals the expression form") {
     import spark.implicits._
     spark.udf.register("normalize_text", Normalize.normalizeTextScala)
-    val samples = Gen.listOfN(50, textGen).sample.get
+    // Spark's trim strips spaces only: control characters at either end,
+    // NBSP, U+2003 and tabs must survive or collapse exactly as there
+    val samples = Gen.listOfN(50, textGen).sample.get ++ Seq(
+      "\u0001abc", "abc\u0002", "\u0001 Encounter ID 42 \u0002", "\u00a0nbsp\u00a0",
+      "em\u2003space\u2003", "\ttab\tseparated\t", " \t mixed \u00a0\u2003 ")
     val df = samples.toDF("text")
     df.createOrReplaceTempView("prop_texts")
     val viaUdf = spark.sql("SELECT normalize_text(text) AS n FROM prop_texts")
