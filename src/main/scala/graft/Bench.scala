@@ -10,8 +10,11 @@ import Harness.jstr
   *     not count(): under a bare count Catalyst prunes deterministic
   *     projections, so md5/regex/tokenize work was never executed and text
   *     queries benched as pure scan time.
-  *   - One untimed warmup pass per query first (JVM/JIT + codegen + parquet
-  *     footer caching), so the first timed query doesn't eat cluster warmup.
+  *   - One untimed warmup pass per query first (JVM/JIT + codegen + the
+  *     session's fixture schemas, resolved once by [[Tables.table]]), so
+  *     the first timed query doesn't eat cluster warmup and no timed run
+  *     pays for schema inference. [[ops.Caches.release]] before each run
+  *     drops cached data, not that per-session metadata.
   *   - Failures are not swallowed into small timings: a failing query records
   *     value -1 and an "errors" entry, and the process exits non-zero after
   *     still printing the JSON line (so the driver always gets a parse).

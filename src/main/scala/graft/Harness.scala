@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
-/** The core the five harness mains ([[Bench]], [[Verify]], [[Plans]],
-  * [[Profile]], [[ScaleProbe]]) share: one session, one `only=` query
+/** The core the four harness mains ([[Bench]], [[Verify]], [[Plans]],
+  * [[ScaleProbe]]) share: one session, one `only=` query
   * filter, one JSON string escaper, one full-evaluation action and one
   * cold timed run. Every main measures or dumps the same configuration.
   */
@@ -76,8 +76,10 @@ object Harness {
 
   /** Seconds to build and fully evaluate `df` after [[ops.Caches.release]]
     * (every main builds its queries on its own thread, so this drops
-    * all the last query cached); only JVM and codegen warm-up carry over
-    * from earlier runs.
+    * all the last query cached). What carries over from earlier runs is
+    * JVM and codegen warm-up and the session's fixture schemas, which
+    * [[Tables.table]] resolves once per session: after a warm-up, a cold
+    * run pays for no schema-inference job.
     */
   def coldRun(spark: SparkSession)(df: => DataFrame): Double = {
     ops.Caches.release()

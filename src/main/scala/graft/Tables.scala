@@ -1,15 +1,70 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Fixture-table loaders. Every query receives a scale-factor directory
   * (e.g. /root/testdata/sf0.01) holding one parquet file per table; Spark's
   * vectorized parquet reader + Catalyst column pruning / filter pushdown do
-  * the heavy lifting, so loaders stay bare `spark.read.parquet`.
+  * the heavy lifting.
+  *
+  * A bare `spark.read.parquet(path)` runs a one-task Spark job to read the
+  * footer and infer the schema, on every call. [[table]] instead resolves
+  * the schema of a single parquet file once per session and reads it with
+  * `spark.read.schema(resolved).parquet(path)`, which only lists the file
+  * on the driver: building a query over fixture tables starts no job.
+  *   - The memo key is the session (held weakly), the file's qualified
+  *     path, its modification time and length, and the session's parquet
+  *     settings (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`). A
+  *     rewritten file is re-inferred; a session with other parquet
+  *     settings infers its own schema.
+  *   - A directory, a glob or a missing path is read as
+  *     `spark.read.parquet(path)`, unmemoized (and a missing path fails
+  *     as it always did).
+  *   - The memo is session metadata, not cached data:
+  *     [[ops.Caches.release]] and `spark.catalog.clearCache()` leave it.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** One parquet file as the schema memo sees it. */
+  private final case class FileKey(path: String, modified: Long, length: Long,
+                                   parquetConf: Map[String, String])
+
+  /** Resolved schemas per session; a stopped, unreferenced session drops out. */
+  private val schemas =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[FileKey, StructType]]())
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    fileKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) =>
+        val memo = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[FileKey, StructType]())
+        spark.read.schema(memo.computeIfAbsent(key, _ => spark.read.parquet(path).schema))
+          .parquet(path)
+    }
+  }
+
+  /** The memo key of `path` when it names one existing file and no glob. */
+  private def fileKey(spark: SparkSession, path: String): Option[FileKey] =
+    if (path.exists("{}[]*?\\".contains(_))) None
+    else {
+      val p = new Path(path)
+      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val status =
+        try Some(fs.getFileStatus(p))
+        catch { case _: java.io.FileNotFoundException => None }
+      status.filter(_.isFile).map { st =>
+        FileKey(fs.makeQualified(p).toString, st.getModificationTime, st.getLen,
+          spark.conf.getAll.filter { case (k, _) =>
+            k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+          })
+      }
+    }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")

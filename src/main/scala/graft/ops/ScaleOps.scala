@@ -63,10 +63,10 @@ object ScaleOps {
     * DuckDB's rounds half-even).
     */
   def saltedNationVolume(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val li = graft.Tables.lineitem(spark, dir)
       .select(col("l_suppkey").as("suppkey"),
         floor(col("l_quantity") * 100).cast("long").as("qty_cents"))
-    val sup = spark.read.parquet(s"$dir/supplier.parquet")
+    val sup = graft.Tables.supplier(spark, dir)
       .select(col("s_suppkey").as("suppkey"), col("s_nationkey"))
     saltedJoin(li, sup, "suppkey", salts = 8)
       .groupBy(col("s_nationkey"))

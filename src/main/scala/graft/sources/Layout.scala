@@ -92,7 +92,7 @@ object Layout {
     * (l_partkey, l_suppkey).
     */
   def zOrderCodes(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/lineitem.parquet")
+    graft.Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_linenumber"),
         col("l_partkey"), col("l_suppkey"),
         zOf(col("l_partkey"), col("l_suppkey")).as("z"))
@@ -133,7 +133,7 @@ object Layout {
     */
   def shardManifest(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.ops.ScaleOps.widen(
-      spark.read.parquet(s"$dir/documents.parquet"))
+      graft.Tables.documents(spark, dir))
     docs.select(
         shardOf(col("doc_id")).as("shard"),
         size(graft.text.TextOps.tokenize(col("text"))).cast("long").as("n_tokens"),

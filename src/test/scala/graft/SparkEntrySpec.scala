@@ -8,11 +8,47 @@ class SparkEntrySpec extends SparkSuite {
 
   /** What one build of a registry query at [[Sf]] showed: whether it
     * returned no rows, the float/decimal hazards of its schema, its
-    * non-scalar top-level columns, and whether a cache entry survived
-    * [[ops.Caches.release]] after it ran.
+    * non-scalar top-level columns, whether a cache entry survived
+    * [[ops.Caches.release]] after it ran, and how many jobs building it
+    * (the registry function call, before any action) started.
     */
   private final case class Swept(empty: Boolean, hazards: Seq[String],
-                                 nonScalar: Seq[String], leaksCache: Boolean)
+                                 nonScalar: Seq[String], leaksCache: Boolean,
+                                 buildJobs: Int)
+
+  /** The queries whose build starts jobs by design, each with the reason.
+    * Every other query must build with no job at all.
+    */
+  private val EagerBuild: Map[String, String] = Map(
+    // iterative graph operators: node count, then a localCheckpoint per iteration
+    "q_hits" -> "HITS iterations truncate lineage with a localCheckpoint each",
+    "q_pagerank" -> "counts the nodes, then checkpoints every PageRank iteration",
+    "q_image_clusters" -> "label propagation checkpoints every iteration",
+    // a model or filter collected to the driver before the query is planned
+    "q_bpe_encode" -> "collects the BPE merge list it encodes with",
+    "q_bpe_fertility" -> "collects the BPE merge list it encodes with",
+    "q_wordpiece" -> "collects the WordPiece vocabulary",
+    "q_unigram_segment" -> "collects the unigram piece model",
+    "q_phrase_apply" -> "collects each pass's phrase list before merging tokens",
+    "q_phrase_trigrams" -> "collects each pass's phrase list before merging tokens",
+    "q_frontier_new_bloom" -> "collects the Bloom filter of already-seen URLs",
+    "q_decontaminate_bloom" -> "collects the Bloom filter of benchmark n-grams",
+    "q_crawl_budget" -> "collects host totals to split the crawl budget",
+    // global row numbers: zipWithIndex counts each partition first
+    "q_preprocess_monthly" -> "numbers rows with zipWithIndex, which counts partitions",
+    "q_order_limit_chunks" -> "numbers rows with zipWithIndex, which counts partitions",
+    "q_cdx_index" -> "numbers records with zipWithIndex, which counts partitions",
+    // materialized intermediates (Checkpoints), written once, read back by path
+    "q_corpus_pipeline" -> "materializes its stages and reads them back",
+    "q_warc_erasure" -> "writes a WARC archive, then reads and erases from it",
+    "q_ann_recall_pq" -> "builds and writes the IVF-PQ index, then reads it back",
+    "q_similarity_ivfpq_incremental" -> "builds, appends to and reads back the IVF-PQ index",
+    "q_similarity_ivfpq_apply" -> "reads back the materialized IVF-PQ index",
+    "q_dedup_apply" -> "reads back the materialized word-pair components",
+    "q_dedup_clusters" -> "reads back the materialized word-pair components",
+    "q_dedup_rep_quality" -> "reads back the materialized word-pair components",
+    "q_dedup_rep_source" -> "reads back the materialized word-pair components",
+    "q_dedup_report" -> "reads back the materialized word-pair components")
 
   /** The float and decimal columns anywhere inside `dt`, as paths. */
   private def hazards(dt: org.apache.spark.sql.types.DataType, path: String): Seq[String] = {
@@ -37,26 +73,35 @@ class SparkEntrySpec extends SparkSuite {
       .sharedState.cacheManager
     // other suites leave `.cache()` entries behind in the shared session
     spark.catalog.clearCache()
-    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val built = scala.util.Try {
-        val df = fn(spark, Sf)
-        (df.schema.fields.toSeq, df.isEmpty)
+    // a fixture's schema is resolved once per session, not per build
+    fixtureTables.foreach(Tables.table(spark, Sf, _))
+    val counter = new JobCounter(spark)
+    try {
+      val swept = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+        val built = scala.util.Try {
+          val df = counter.under(s"build/$name")(fn(spark, Sf))
+          (df.schema.fields.toSeq, df.isEmpty)
+        }
+        ops.Caches.release()
+        val leaksCache = !cacheManager.isEmpty
+        // a leak must not be charged to the queries after it
+        spark.catalog.clearCache()
+        name -> built.map { case (fields, empty) =>
+          Swept(empty, fields.flatMap(f => hazards(f.dataType, f.name)),
+            fields.collect {
+              case f if f.dataType.isInstanceOf[ArrayType] ||
+                        f.dataType.isInstanceOf[MapType] ||
+                        f.dataType.isInstanceOf[StructType] =>
+                s"${f.name}: ${f.dataType.simpleString}"
+            },
+            leaksCache, buildJobs = 0)
+        }
       }
-      ops.Caches.release()
-      val leaksCache = !cacheManager.isEmpty
-      // a leak must not be charged to the queries after it
-      spark.catalog.clearCache()
-      name -> built.map { case (fields, empty) =>
-        Swept(empty, fields.flatMap(f => hazards(f.dataType, f.name)),
-          fields.collect {
-            case f if f.dataType.isInstanceOf[ArrayType] ||
-                      f.dataType.isInstanceOf[MapType] ||
-                      f.dataType.isInstanceOf[StructType] =>
-              s"${f.name}: ${f.dataType.simpleString}"
-          },
-          leaksCache)
+      counter.drain()
+      swept.map { case (name, r) =>
+        name -> r.map(_.copy(buildJobs = counter.jobs(s"build/$name")))
       }
-    }
+    } finally counter.close()
   }
 
   test("every registered query has a matching oracle (and no orphan oracles)") {
@@ -129,6 +174,19 @@ class SparkEntrySpec extends SparkSuite {
     val leaks = sweep.collect { case (name, r) if r.get.leaksCache => name }
     assert(leaks.isEmpty,
       s"queries still cached after Caches.release() (${leaks.size}): ${leaks.mkString(", ")}")
+  }
+
+  test("building a registry query starts no job unless it is declared eager") {
+    assert(EagerBuild.keySet.diff(SparkEntry.queries.keySet).isEmpty,
+      s"EagerBuild names unknown queries: ${EagerBuild.keySet.diff(SparkEntry.queries.keySet)}")
+    val jobs = sweep.map { case (name, r) => name -> r.get.buildJobs }
+    val undeclared = jobs.collect { case (name, n) if n > 0 && !EagerBuild.contains(name) =>
+      s"$name: $n jobs" }
+    assert(undeclared.isEmpty,
+      s"queries that start jobs while being built (${undeclared.size}):\n  ${undeclared.mkString("\n  ")}")
+    // a query that stopped being eager leaves the list
+    val lazyNow = jobs.collect { case (name, 0) if EagerBuild.contains(name) => name }
+    assert(lazyNow.isEmpty, s"declared eager but built with no job: ${lazyNow.mkString(", ")}")
   }
 
   test("query names are unique across module registries (no silent overwrite)") {
