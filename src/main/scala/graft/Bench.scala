@@ -61,8 +61,8 @@ object Bench {
     // warmup: evaluate everything once, untimed, from released caches
     // like the timed passes; remember what failed so the timed pass skips
     // it (a throw mid-pass would distort neighbors).
-    queries.iterator.takeWhile(_ => fatal.isEmpty).foreach { case (name, fn) =>
-      try Harness.coldRun(spark)(fn(spark, sfDir))
+    queries.iterator.takeWhile(_ => fatal.isEmpty).foreach { case (name, q) =>
+      try Harness.coldRun(spark)(q.build(spark, sfDir))
       catch { case e: Throwable => record(name, e) }
     }
 
@@ -81,15 +81,15 @@ object Bench {
     // previous pass's cache and under-report). Inside the try: releasing
     // caches on a stopped context throws too, and must route through the
     // same fatal path.
-    def timedRun(name: String, fn: Harness.Query): Option[Double] =
-      try Some(Harness.coldRun(spark)(fn(spark, sfDir)))
+    def timedRun(name: String, q: Query): Option[Double] =
+      try Some(Harness.coldRun(spark)(q.build(spark, sfDir)))
       catch { case e: Throwable => record(name, e); None }
 
     val timed = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
-    queries.iterator.takeWhile(_ => fatal.isEmpty).foreach { case (name, fn) =>
+    queries.iterator.takeWhile(_ => fatal.isEmpty).foreach { case (name, q) =>
       if (!errors.contains(name))
         timed(name) = (1 to TimedPasses).iterator
-          .takeWhile(_ => fatal.isEmpty).flatMap(_ => timedRun(name, fn)).toSeq
+          .takeWhile(_ => fatal.isEmpty).flatMap(_ => timedRun(name, q)).toSeq
     }
     // a fatal context death marks every query that never completed as
     // SKIPPED with the culprit's name — the artifact then reads as one

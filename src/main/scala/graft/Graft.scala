@@ -17,7 +17,9 @@ object Graft {
 
   /** A session configured the way every graft entry point expects:
     * UTC clock, right-sized shuffle partitions, and the extension pack
-    * (dot_long / ngram_poly_hash SQL functions + SargableMonthRule).
+    * ([[plans.GraftExtensions]]: the dot_long, simhash48, cdc_chunks,
+    * winnow_hashes and phrase_merge SQL functions, SargableMonthRule and
+    * AsofJoinStrategy).
     */
   def session(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = configure(SparkSession.builder())

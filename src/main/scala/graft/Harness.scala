@@ -10,8 +10,6 @@ import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
   */
 object Harness {
 
-  type Query = (SparkSession, String) => DataFrame
-
   /** The session every main runs on: [[Graft.session]] at
     * `local[SPARK_GRAFT_CPUS]` (default 4).
     */
@@ -37,13 +35,13 @@ object Harness {
     else Right(registry.toSeq.filter { case (k, _) => only.forall(_.contains(k)) }.sortBy(_._1))
   }
 
-  /** The positional arguments and the [[SparkEntry.queries]] selected by
+  /** The positional arguments and the [[SparkEntry.registry]] entries selected by
     * `only=`. An unknown query name exits with status 2: a typo must not
     * turn into a run that checks nothing.
     */
   def queries(args: Seq[String]): (Seq[String], Seq[(String, Query)]) = {
     val (positional, only) = parseArgs(args)
-    select(SparkEntry.queries, only) match {
+    select(SparkEntry.registry, only) match {
       case Right(qs) => (positional, qs)
       case Left(unknown) =>
         System.err.println(s"unknown queries: ${unknown.mkString(", ")}")

@@ -18,9 +18,9 @@ object Plans {
     val (Seq(sfDir, outDir), queries) = Harness.queries(args.toSeq)
     val spark = Harness.session()
     Files.createDirectories(Paths.get(outDir))
-    queries.foreach { case (name, fn) =>
+    queries.foreach { case (name, q) =>
       try {
-        val qe = fn(spark, sfDir).queryExecution
+        val qe = q.build(spark, sfDir).queryExecution
         val txt = qe.explainString(org.apache.spark.sql.execution.FormattedMode)
         Files.writeString(Paths.get(s"$outDir/$name.plan.txt"), txt)
         println(s"[plans] wrote $name")

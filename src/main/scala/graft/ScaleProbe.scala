@@ -85,7 +85,7 @@ object ScaleProbe {
     println(s"rows: docs=${spark.read.parquet(s"$dst/documents.parquet").count()}, " +
       s"lineitem=${spark.read.parquet(s"$dst/lineitem.parquet").count()}")
 
-    val rows = queries.map { case (name, fn) =>
+    val rows = queries.map { case (name, q) =>
       try {
         // warm up EACH scale before timing it: JIT + codegen for t1, and
         // any per-corpus one-time materialization (e.g. Dedup.PairTable's
@@ -93,11 +93,11 @@ object ScaleProbe {
         // touched 1× would charge the 10× pass with setup cost and fake a
         // super-linear ratio.
         ops.Caches.release()
-        Harness.fullEval(fn(spark, src))
-        val t1 = timedMin(3)(fn(spark, src))
+        Harness.fullEval(q.build(spark, src))
+        val t1 = timedMin(3)(q.build(spark, src))
         ops.Caches.release()
-        Harness.fullEval(fn(spark, dst))
-        val t10 = timedMin(3)(fn(spark, dst))
+        Harness.fullEval(q.build(spark, dst))
+        val t10 = timedMin(3)(q.build(spark, dst))
         val ratio = t10 / math.max(t1, 1e-3)
         // Locale.ROOT: the default-locale f-interpolator renders 0,507 in
         // comma-decimal locales — invalid JSON

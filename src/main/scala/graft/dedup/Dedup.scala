@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.{Analysis, TextOps}
 
 /** Deduplication operators over the `documents` table — the dedup family a
@@ -1113,52 +1113,38 @@ object Dedup {
        |    row_number() OVER (PARTITION BY cluster_id ORDER BY st.prio, cl.doc_id) AS rn
        |  FROM cl JOIN st USING (doc_id)) WHERE rn = 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dedup_exact" -> ((s, dir) => Exact.dedupExact(Tables.documents(s, dir))),
-    "q_dedup_rep_quality" -> ((s, dir) => qualityReps(s, dir)),
-    "q_dedup_rep_source" -> ((s, dir) => sourceReps(s, dir)),
-    "q_dedup_neardup" -> ((s, dir) => MinHashLSH.nearDupPairs(s, dir)),
-    "q_dedup_chargram" -> ((s, dir) => MinHashLSH.charGramPairs(s, dir)),
+  def queries: Seq[(String, Query)] = Seq(
+    "q_dedup_exact" -> Query((s, dir) => Exact.dedupExact(Tables.documents(s, dir)), Exact.oracle),
+    "q_dedup_rep_quality" -> Query((s, dir) => qualityReps(s, dir), qualityRepsOracle),
+    "q_dedup_rep_source" -> Query((s, dir) => sourceReps(s, dir), sourceRepsOracle),
+    "q_dedup_neardup" -> Query((s, dir) => MinHashLSH.nearDupPairs(s, dir), MinHashLSH.oracle),
+    "q_dedup_chargram" -> Query((s, dir) => MinHashLSH.charGramPairs(s, dir),
+      MinHashLSH.charGramOracle),
     // consumes the materialized pair TABLE (PairTable), not a re-run of
     // the LSH — q_dedup_neardup keeps the live pipeline so its bench
     // number stays honest, while apply demonstrates (and is timed as)
     // the checkpoint-reuse consumer: one anti-join over a tiny table.
-    "q_dedup_apply" -> ((s, dir) =>
+    "q_dedup_apply" -> Query((s, dir) =>
       dropNearDupsFromClusters(
         Tables.documents(s, dir).select("doc_id", "lang", "source"),
-        PairTable.wordClusters(s, dir))),
-    "q_dedup_clusters" -> ((s, dir) => PairTable.wordClusters(s, dir)),
-    "q_dedup_report" -> ((s, dir) => clusterReport(s, dir)),
-    "q_dedup_simhash" -> ((s, dir) =>
+        PairTable.wordClusters(s, dir)),
+      s"""SELECT doc_id, lang, source FROM documents
+         |WHERE doc_id NOT IN (${Components.dropSetSqlOn(MinHashLSH.oracle)})""".stripMargin),
+    "q_dedup_clusters" -> Query((s, dir) => PairTable.wordClusters(s, dir),
+      Components.oracleOn(MinHashLSH.oracle)),
+    "q_dedup_report" -> Query((s, dir) => clusterReport(s, dir), clusterReportOracle),
+    "q_dedup_simhash" -> Query((s, dir) =>
       Tables.documents(s, dir)
         .select(col("doc_id"), SimHash.tokenDigests(col("text")).as("dg"))
-        .select(col("doc_id"), SimHash.simhashOf(col("dg")))),
-    "q_simhash_neardup" -> ((s, dir) => SimHash.nearDupPairs48(s, dir)),
-    "q_cdc_chunks" -> ((s, dir) => Cdc.chunkTable(s, dir)),
-    "q_cdc_shared_chunks" -> ((s, dir) => Cdc.sharedChunks(s, dir)),
-    "q_cdc_scrub" -> ((s, dir) => Cdc.scrubSharedSpans(s, dir)),
-    "q_cdc_recall" -> ((s, dir) => Cdc.spanRecall(s, dir)),
-    "q_dedup_incremental" -> ((s, dir) => MinHashLSH.incrementalKeep(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_dedup_exact" -> Exact.oracle,
-    "q_dedup_rep_quality" -> qualityRepsOracle,
-    "q_dedup_rep_source" -> sourceRepsOracle,
-    "q_dedup_neardup" -> MinHashLSH.oracle,
-    "q_dedup_chargram" -> MinHashLSH.charGramOracle,
-    "q_dedup_apply" ->
-      s"""SELECT doc_id, lang, source FROM documents
-         |WHERE doc_id NOT IN (${Components.dropSetSqlOn(MinHashLSH.oracle)})""".stripMargin,
-    "q_dedup_clusters" -> Components.oracleOn(MinHashLSH.oracle),
-    "q_dedup_report" -> clusterReportOracle,
-    "q_dedup_simhash" ->
-      s"SELECT doc_id, CAST(${SimHash.simhashSql("text")} AS BIGINT) AS simhash FROM documents",
-    "q_simhash_neardup" -> SimHash.nearDup48Oracle,
-    "q_cdc_chunks" -> Cdc.chunkTableOracle,
-    "q_cdc_shared_chunks" -> Cdc.sharedChunksOracle,
-    "q_cdc_scrub" -> Cdc.scrubOracle,
-    "q_cdc_recall" -> Cdc.spanRecallOracle,
-    "q_dedup_incremental" -> MinHashLSH.incrementalOracle
+        .select(col("doc_id"), SimHash.simhashOf(col("dg"))),
+      s"SELECT doc_id, CAST(${SimHash.simhashSql("text")} AS BIGINT) AS simhash FROM documents"),
+    "q_simhash_neardup" -> Query((s, dir) => SimHash.nearDupPairs48(s, dir),
+      SimHash.nearDup48Oracle),
+    "q_cdc_chunks" -> Query((s, dir) => Cdc.chunkTable(s, dir), Cdc.chunkTableOracle),
+    "q_cdc_shared_chunks" -> Query((s, dir) => Cdc.sharedChunks(s, dir), Cdc.sharedChunksOracle),
+    "q_cdc_scrub" -> Query((s, dir) => Cdc.scrubSharedSpans(s, dir), Cdc.scrubOracle),
+    "q_cdc_recall" -> Query((s, dir) => Cdc.spanRecall(s, dir), Cdc.spanRecallOracle),
+    "q_dedup_incremental" -> Query((s, dir) => MinHashLSH.incrementalKeep(s, dir),
+      MinHashLSH.incrementalOracle)
   )
 }

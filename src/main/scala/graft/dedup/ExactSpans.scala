@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** EXACT duplicated-substring removal at token granularity — the real
   * Lee et al. 2022 "Deduplicating Training Data" ExactSubstr operation
@@ -306,13 +306,9 @@ object ExactSpans {
        |  CAST(CASE WHEN gc >= 2 THEN 1 ELSE 0 END AS BIGINT) AS n_spans
        |FROM gsz""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_exact_span_scrub" -> ((s, dir) => planted(s, dir)),
-    "q_exact_span_scrub_ws" -> ((s, dir) => plantedWsScrub(s, dir)),
-    "q_exact_span_scrub_k8" -> ((s, dir) => plantedShortScrub(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_exact_span_scrub" -> plantedOracle,
-    "q_exact_span_scrub_ws" -> plantedWsOracle,
-    "q_exact_span_scrub_k8" -> plantedShortOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_exact_span_scrub" -> Query((s, dir) => planted(s, dir), plantedOracle),
+    "q_exact_span_scrub_ws" -> Query((s, dir) => plantedWsScrub(s, dir), plantedWsOracle),
+    "q_exact_span_scrub_k8" -> Query((s, dir) => plantedShortScrub(s, dir), plantedShortOracle)
+  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Exact set-similarity join with PREFIX FILTERING — the recall-1 exact
   * counterpart of the MinHash-LSH family (X2): every pair of documents
@@ -358,19 +358,16 @@ object SetSim {
        |       THEN CAST((10000 * n_hit) // n_exact AS BIGINT) END AS recall_bp
        |FROM n""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dedup_lsh_recall" -> ((s, dir) => lshRecall(s, dir)),
-    "q_setsim_incremental" -> ((s, dir) => incrementalKeep(s, dir)),
-    "q_setsim_join" -> ((s, dir) => similarityJoin(
+  def queries: Seq[(String, Query)] = Seq(
+    "q_dedup_lsh_recall" -> Query((s, dir) => lshRecall(s, dir), lshRecallOracle),
+    "q_setsim_incremental" -> Query((s, dir) => incrementalKeep(s, dir), incrementalOracle()),
+    "q_setsim_join" -> Query((s, dir) => similarityJoin(
       graft.ops.ScaleOps.widen(Tables.documents(s, dir))
-        .select(col("doc_id"), col("text")))),
-    "q_setsim_sources" -> ((s, dir) => crossSourceMatrix(
+        .select(col("doc_id"), col("text"))),
+      oracle()),
+    "q_setsim_sources" -> Query((s, dir) => crossSourceMatrix(
       graft.ops.ScaleOps.widen(Tables.documents(s, dir))
-        .select(col("doc_id"), col("text"), col("source")))))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_dedup_lsh_recall" -> lshRecallOracle,
-    "q_setsim_incremental" -> incrementalOracle(),
-    "q_setsim_join" -> oracle(),
-    "q_setsim_sources" -> crossSourceOracle())
+        .select(col("doc_id"), col("text"), col("source"))),
+      crossSourceOracle())
+  )
 }

@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.plans.WinnowHashes
 
 /** Winnowing document fingerprints and the shared-fingerprint pair join —
@@ -262,15 +262,9 @@ object Winnow {
        |JOIN sizes s ON s.rep = m.rep AND s.g >= 2
        |JOIN rep_counts c ON c.rep = m.rep AND c.nrare >= $MinShared""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_winnow" -> ((s, dir) => fingerprints(s, dir)),
-    "q_winnow_pairs" -> ((s, dir) => sharedPairs(s, dir)),
-    "q_winnow_clusters" -> ((s, dir) => sharedClusters(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_winnow" -> fingerprintsOracle,
-    "q_winnow_pairs" -> sharedPairsOracle,
-    "q_winnow_clusters" -> sharedClustersOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_winnow" -> Query((s, dir) => fingerprints(s, dir), fingerprintsOracle),
+    "q_winnow_pairs" -> Query((s, dir) => sharedPairs(s, dir), sharedPairsOracle),
+    "q_winnow_clusters" -> Query((s, dir) => sharedClusters(s, dir), sharedClustersOracle)
   )
 }

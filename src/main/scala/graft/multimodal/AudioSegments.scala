@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Audio voice-activity segmentation (X196) — silence trimming and
   * utterance splitting, the first pass of every speech-data pipeline:
@@ -274,20 +274,15 @@ object AudioSegments {
        |  ON x.n_samples = y.n_samples AND x.media_id < y.media_id
        |WHERE bit_count(xor(x.afp, y.afp)) <= $FpMaxHam""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_audio_segments" -> ((s, dir) => segments(s, dir)),
-    "q_audio_afp" -> ((s, dir) => fingerprints(s, dir, col("doc_id"))),
-    "q_audio_neardup" -> ((s, dir) => fpPairs(
-      fingerprints(s, dir, expr("doc_id DIV 2")), keyCols = Seq("n_samples"))),
-    "q_audio_neardup_resample" -> ((s, dir) => resamplePairs(s, dir)),
-    "q_audio_neardup_mixed" -> ((s, dir) => mixedCodecPairs(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_audio_segments" -> segmentsOracle,
-    "q_audio_afp" -> fpOracle,
-    "q_audio_neardup" -> fpPairsOracle,
-    "q_audio_neardup_resample" -> resamplePairsOracle,
+  def queries: Seq[(String, Query)] = Seq(
+    "q_audio_segments" -> Query((s, dir) => segments(s, dir), segmentsOracle),
+    "q_audio_afp" -> Query((s, dir) => fingerprints(s, dir, col("doc_id")), fpOracle),
+    "q_audio_neardup" -> Query((s, dir) => fpPairs(
+      fingerprints(s, dir, expr("doc_id DIV 2")), keyCols = Seq("n_samples")),
+      fpPairsOracle),
+    "q_audio_neardup_resample" -> Query((s, dir) => resamplePairs(s, dir), resamplePairsOracle),
     // same closed form: WAV and FLAC carry identical samples, so the
     // oracle is the identical-afp twin table either way
-    "q_audio_neardup_mixed" -> resamplePairsOracle)
+    "q_audio_neardup_mixed" -> Query((s, dir) => mixedCodecPairs(s, dir), resamplePairsOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Perceptual image DEDUP (X191): the dHash difference fingerprint over
   * REAL decoded PNGs plus the banded Hamming join that finds near-dup
@@ -563,26 +563,20 @@ object ImageHash {
        |WHERE media_id % 10 = 0
        |  AND media_id NOT IN (SELECT media_id FROM dropped)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_image_dhash" -> ((s, dir) => plantedDhash(s, dir, col("doc_id"))),
-    "q_image_dhash_jpeg" -> ((s, dir) => plantedDhashJpeg(s, dir, col("doc_id"))),
-    "q_image_dhash_gif" -> ((s, dir) => plantedDhashGif(s, dir, col("doc_id"))),
-    "q_image_dhash_webp" -> ((s, dir) => plantedDhashWebp(s, dir, col("doc_id"))),
-    "q_image_neardup" -> ((s, dir) => hammingPairs(
-      plantedDhash(s, dir, expr("doc_id DIV 2")))),
-    "q_image_neardup_mixed" -> ((s, dir) => mixedPairs(s, dir)),
-    "q_image_neardup_rescale" -> ((s, dir) => rescalePairs(s, dir)),
-    "q_image_incremental" -> ((s, dir) => incrementalKeep(s, dir)),
-    "q_image_clusters" -> ((s, dir) => clusters(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_image_dhash" -> dhashOracle,
-    "q_image_dhash_jpeg" -> jpegDhashOracle,
-    "q_image_dhash_gif" -> gifDhashOracle,
-    "q_image_dhash_webp" -> webpDhashOracle,
-    "q_image_neardup" -> neardupOracle,
-    "q_image_neardup_mixed" -> mixedPairsOracle,
-    "q_image_neardup_rescale" -> rescalePairsOracle,
-    "q_image_incremental" -> incrementalOracle,
-    "q_image_clusters" -> clustersOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_image_dhash" -> Query((s, dir) => plantedDhash(s, dir, col("doc_id")), dhashOracle),
+    "q_image_dhash_jpeg" -> Query((s, dir) => plantedDhashJpeg(s, dir, col("doc_id")),
+      jpegDhashOracle),
+    "q_image_dhash_gif" -> Query((s, dir) => plantedDhashGif(s, dir, col("doc_id")),
+      gifDhashOracle),
+    "q_image_dhash_webp" -> Query((s, dir) => plantedDhashWebp(s, dir, col("doc_id")),
+      webpDhashOracle),
+    "q_image_neardup" -> Query((s, dir) => hammingPairs(
+      plantedDhash(s, dir, expr("doc_id DIV 2"))),
+      neardupOracle),
+    "q_image_neardup_mixed" -> Query((s, dir) => mixedPairs(s, dir), mixedPairsOracle),
+    "q_image_neardup_rescale" -> Query((s, dir) => rescalePairs(s, dir), rescalePairsOracle),
+    "q_image_incremental" -> Query((s, dir) => incrementalKeep(s, dir), incrementalOracle),
+    "q_image_clusters" -> Query((s, dir) => clusters(s, dir), clustersOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Multimodal-column plumbing: treat image/audio/video payloads as opaque
   * `binary` columns with typed metadata, and run decode / feature-extract /
@@ -709,39 +709,25 @@ object Multimodal {
        |    AS clip_count
        |FROM s GROUP BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_multimodal_pixels" -> ((s, dir) => pixelStats(s, dir)),
-    "q_multimodal_gif" -> ((s, dir) => gifStats(s, dir)),
-    "q_multimodal_pcm" -> ((s, dir) => pcmStats(s, dir)),
-    "q_multimodal_flac" -> ((s, dir) => flacStats(s, dir)),
-    "q_multimodal_audio" -> ((s, dir) => audioHeaderDecode(s, dir)),
-    "q_multimodal_video" -> ((s, dir) => videoHeaderDecode(s, dir)),
-    "q_multimodal_jpeg" -> ((s, dir) => jpegStats(s, dir)),
-    "q_magic_format" -> ((s, dir) => magicFormats(s, dir)),
-    "q_video_frames" -> ((s, dir) => videoFrameStats(s, dir)),
-    "q_multimodal_decode" -> ((s, dir) => headerDecode(s, dir)),
-    "q_multimodal_features" -> ((s, dir) =>
+  def queries: Seq[(String, Query)] = Seq(
+    "q_multimodal_pixels" -> Query((s, dir) => pixelStats(s, dir), pixelStatsOracle),
+    "q_multimodal_gif" -> Query((s, dir) => gifStats(s, dir), gifStatsOracle),
+    "q_multimodal_pcm" -> Query((s, dir) => pcmStats(s, dir), pcmStatsOracle),
+    "q_multimodal_flac" -> Query((s, dir) => flacStats(s, dir), flacStatsOracle),
+    "q_multimodal_audio" -> Query((s, dir) => audioHeaderDecode(s, dir), audioHeaderOracle),
+    "q_multimodal_video" -> Query((s, dir) => videoHeaderDecode(s, dir), videoHeaderOracle),
+    "q_multimodal_jpeg" -> Query((s, dir) => jpegStats(s, dir), jpegStatsOracle),
+    "q_magic_format" -> Query((s, dir) => magicFormats(s, dir), magicOracle),
+    "q_video_frames" -> Query((s, dir) => videoFrameStats(s, dir), videoFrameOracle),
+    "q_multimodal_decode" -> Query((s, dir) => headerDecode(s, dir), headerOracle),
+    "q_multimodal_features" -> Query((s, dir) =>
       mediaFeatures(s, dir).select(
         col("media_id"), col("media_type"), col("n_bytes"),
         // arrays → positional columns for a column-typed oracle compare
         element_at(col("features"), 1).as("f1"),
         element_at(col("features"), 2).as("f2"),
         element_at(col("features"), 3).as("f3"),
-        element_at(col("features"), 4).as("f4")))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_multimodal_pixels" -> pixelStatsOracle,
-    "q_multimodal_gif" -> gifStatsOracle,
-    "q_multimodal_pcm" -> pcmStatsOracle,
-    "q_multimodal_flac" -> flacStatsOracle,
-    "q_multimodal_audio" -> audioHeaderOracle,
-    "q_multimodal_video" -> videoHeaderOracle,
-    "q_multimodal_jpeg" -> jpegStatsOracle,
-    "q_magic_format" -> magicOracle,
-    "q_video_frames" -> videoFrameOracle,
-    "q_multimodal_decode" -> headerOracle,
-    "q_multimodal_features" ->
+        element_at(col("features"), 4).as("f4")),
       s"""SELECT doc_id AS media_id,
          |  'text/plain' AS media_type,
          |  CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
@@ -749,6 +735,6 @@ object Multimodal {
          |  CAST(ascii(substring(md5(text), 9, 1)) AS BIGINT) AS f2,
          |  CAST(ascii(substring(md5(text), 17, 1)) AS BIGINT) AS f3,
          |  CAST(ascii(substring(md5(text), 25, 1)) AS BIGINT) AS f4
-         |FROM documents""".stripMargin
+         |FROM documents""".stripMargin)
   )
 }

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** VIDEO perceptual dedup (X220) — the member that completes the
   * near-dup family across modalities (text MinHash X2, image dHash
@@ -375,18 +375,14 @@ object VideoHash {
        |FROM aligned GROUP BY a, b
        |HAVING min(d) <= $MaxHam""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_video_dhash" -> ((s, dir) =>
+  def queries: Seq[(String, Query)] = Seq(
+    "q_video_dhash" -> Query((s, dir) =>
       plantedFrameDhash(s, dir, col("doc_id"))
         .select(col("media_id"), col("width"), col("height"),
-          col("n_frames"), col("f").cast("int").as("f"), col("dhash"))),
-    "q_video_neardup" -> ((s, dir) => nearDupPairs(s, dir)),
-    "q_video_neardup_long" -> ((s, dir) => nearDupPairsLong(s, dir)),
-    "q_video_neardup_trim" -> ((s, dir) => nearDupPairsTrim(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_video_dhash" -> frameDhashOracle,
-    "q_video_neardup" -> nearDupOracle,
-    "q_video_neardup_long" -> nearDupLongOracle,
-    "q_video_neardup_trim" -> nearDupTrimOracle)
+          col("n_frames"), col("f").cast("int").as("f"), col("dhash")),
+      frameDhashOracle),
+    "q_video_neardup" -> Query((s, dir) => nearDupPairs(s, dir), nearDupOracle),
+    "q_video_neardup_long" -> Query((s, dir) => nearDupPairsLong(s, dir), nearDupLongOracle),
+    "q_video_neardup_trim" -> Query((s, dir) => nearDupPairsTrim(s, dir), nearDupTrimOracle)
+  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** As-of join — for every left row, the latest right row with
   * `right.ts <= left.ts` within the same key. Spark has no native ASOF
@@ -168,16 +168,11 @@ object AsofJoin {
       .select("event_id", "user_id", "prev_err_id", "prev_err_ts")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_asof_join" -> ((s, dir) => eventsAsofErrors(s, dir)),
-    "q_asof_tolerance" -> ((s, dir) => eventsAsofErrorsTolerant(s, dir)),
-    "q_asof_native" -> ((s, dir) => eventsAsofErrorsNative(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_asof_join" -> eventsAsofErrorsOracle,
-    "q_asof_tolerance" -> eventsAsofErrorsTolerantOracle,
+  def queries: Seq[(String, Query)] = Seq(
+    "q_asof_join" -> Query((s, dir) => eventsAsofErrors(s, dir), eventsAsofErrorsOracle),
+    "q_asof_tolerance" -> Query((s, dir) => eventsAsofErrorsTolerant(s, dir),
+      eventsAsofErrorsTolerantOracle),
     // same oracle as the composed form — one semantic, two plans
-    "q_asof_native" -> eventsAsofErrorsOracle
+    "q_asof_native" -> Query((s, dir) => eventsAsofErrorsNative(s, dir), eventsAsofErrorsOracle)
   )
 }

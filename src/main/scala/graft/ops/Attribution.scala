@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** LAST-TOUCH attribution (X229) — the ad/analytics
   * workload behind every "which impression drove this purchase"
@@ -70,9 +70,7 @@ object Attribution {
        |  CAST(pus - vus AS BIGINT) AS gap_us
        |FROM r WHERE rn = 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_attribution" -> ((s, dir) => lastTouch(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_attribution" -> oracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_attribution" -> Query((s, dir) => lastTouch(s, dir), oracle)
+  )
 }

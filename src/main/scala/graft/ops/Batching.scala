@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Length-bucketed batch assembly (X227) — the padding-waste
   * optimization every trainer/inference server runs when sequences
@@ -123,12 +123,9 @@ object Batching {
        |  CAST(count(*) * max(n_toks) - sum(n_toks) AS BIGINT) AS pad_waste
        |FROM numbered GROUP BY bucket, batch_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_length_batches" -> ((s, dir) => batches(s, dir)),
-    "q_length_batches_sharded" -> ((s, dir) => batchesSharded(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_length_batches" -> oracle,
+  def queries: Seq[(String, Query)] = Seq(
+    "q_length_batches" -> Query((s, dir) => batches(s, dir), oracle),
     // the sharded form is bit-identical by construction — one oracle
-    "q_length_batches_sharded" -> oracle)
+    "q_length_batches_sharded" -> Query((s, dir) => batchesSharded(s, dir), oracle)
+  )
 }

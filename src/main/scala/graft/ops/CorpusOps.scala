@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.TextOps
 
 /** Corpus-preparation operators a training-data pipeline runs after dedup
@@ -662,31 +662,18 @@ object CorpusOps {
        |FROM scored GROUP BY doc_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_lm_bigram" -> ((s, dir) => bigramSurprisal(s, dir)),
-    "q_corpus_split" -> ((s, dir) => stratifiedSplit(Tables.documents(s, dir))),
-    "q_split_leakage" -> ((s, dir) => splitLeakage(s, dir)),
-    "q_corpus_sample" -> ((s, dir) => stratifiedSample(Tables.documents(s, dir))),
-    "q_corpus_mix" -> ((s, dir) => mixCorpus(Tables.documents(s, dir))),
-    "q_tfidf_topterms" -> ((s, dir) => tfidfTopTerms(s, dir)),
-    "q_corpus_pipeline" -> ((s, dir) => pipelineReport(s, dir)),
-    "q_vocab_stats" -> ((s, dir) => vocabStats(s, dir)),
-    "q_length_percentiles" -> ((s, dir) => lengthPercentiles(s, dir)),
-    "q_source_cap" -> ((s, dir) => capPerSource(Tables.documents(s, dir))),
-    "q_lm_surprisal" -> ((s, dir) => unigramSurprisal(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_lm_bigram" -> bigramSurprisalOracle,
-    "q_corpus_split" -> splitOracle,
-    "q_split_leakage" -> splitLeakageOracle,
-    "q_corpus_sample" -> sampleOracle,
-    "q_corpus_mix" -> mixOracle,
-    "q_tfidf_topterms" -> tfidfOracle,
-    "q_corpus_pipeline" -> pipelineOracle,
-    "q_vocab_stats" -> vocabOracle,
-    "q_length_percentiles" -> lengthPercentilesOracle,
-    "q_source_cap" -> capOracle,
-    "q_lm_surprisal" -> surprisalOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_lm_bigram" -> Query((s, dir) => bigramSurprisal(s, dir), bigramSurprisalOracle),
+    "q_corpus_split" -> Query((s, dir) => stratifiedSplit(Tables.documents(s, dir)), splitOracle),
+    "q_split_leakage" -> Query((s, dir) => splitLeakage(s, dir), splitLeakageOracle),
+    "q_corpus_sample" -> Query((s, dir) => stratifiedSample(Tables.documents(s, dir)),
+      sampleOracle),
+    "q_corpus_mix" -> Query((s, dir) => mixCorpus(Tables.documents(s, dir)), mixOracle),
+    "q_tfidf_topterms" -> Query((s, dir) => tfidfTopTerms(s, dir), tfidfOracle),
+    "q_corpus_pipeline" -> Query((s, dir) => pipelineReport(s, dir), pipelineOracle),
+    "q_vocab_stats" -> Query((s, dir) => vocabStats(s, dir), vocabOracle),
+    "q_length_percentiles" -> Query((s, dir) => lengthPercentiles(s, dir), lengthPercentilesOracle),
+    "q_source_cap" -> Query((s, dir) => capPerSource(Tables.documents(s, dir)), capOracle),
+    "q_lm_surprisal" -> Query((s, dir) => unigramSurprisal(s, dir), surprisalOracle)
   )
 }

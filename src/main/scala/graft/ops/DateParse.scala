@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Multi-format date coercion — the ES `Date(format="a||b||…")` semantics
   * (`sql_to_es_etl.py:106-109`: `yyyy-MM-dd HH:mm:ss.S||.SS||.SSS||
@@ -146,11 +146,7 @@ object DateParse {
        |  FROM orders
        |)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_multiformat_date" -> ((s, dir) => parseMultiFormat(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_multiformat_date" -> parseMultiFormatOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_multiformat_date" -> Query((s, dir) => parseMultiFormat(s, dir), parseMultiFormatOracle)
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** JSON-column + time-window operators over the `events` table — the
   * fixture's stand-in for semi-structured event streams (SURVEY §2.8 note:
@@ -373,31 +373,17 @@ object Events {
        |FROM tv LEFT JOIN tc USING (user_id) LEFT JOIN tp USING (user_id)
        |GROUP BY 1""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_event_paths" -> ((s, dir) => eventPaths(s, dir)),
-    "q_cohort_retention" -> ((s, dir) => cohortRetention(s, dir)),
-    "q_funnel" -> ((s, dir) => funnel(s, dir)),
-    "q_events_window_stats" -> ((s, dir) => userWindowStats(s, dir)),
-    "q_events_rolling" -> ((s, dir) => userRollingSpend(s, dir)),
-    "q_events_json" -> ((s, dir) => hourlyJsonAgg(s, dir)),
-    "q_events_pivot" -> ((s, dir) => dailyTypePivot(s, dir)),
-    "q_events_unpivot" -> ((s, dir) => dailyTypeUnpivot(s, dir)),
-    "q_events_rollup" -> ((s, dir) => dailyRollup(s, dir)),
-    "q_events_cube" -> ((s, dir) => dailyCube(s, dir)),
-    "q_events_gap_fill" -> ((s, dir) => hourlyGapFill(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_event_paths" -> eventPathsOracle,
-    "q_cohort_retention" -> cohortRetentionOracle,
-    "q_funnel" -> funnelOracle,
-    "q_events_window_stats" -> userWindowStatsOracle,
-    "q_events_rolling" -> userRollingSpendOracle,
-    "q_events_json" -> hourlyJsonAggOracle,
-    "q_events_pivot" -> dailyTypePivotOracle,
-    "q_events_unpivot" -> dailyTypeUnpivotOracle,
-    "q_events_rollup" -> dailyRollupOracle,
-    "q_events_cube" -> dailyCubeOracle,
-    "q_events_gap_fill" -> hourlyGapFillOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_event_paths" -> Query((s, dir) => eventPaths(s, dir), eventPathsOracle),
+    "q_cohort_retention" -> Query((s, dir) => cohortRetention(s, dir), cohortRetentionOracle),
+    "q_funnel" -> Query((s, dir) => funnel(s, dir), funnelOracle),
+    "q_events_window_stats" -> Query((s, dir) => userWindowStats(s, dir), userWindowStatsOracle),
+    "q_events_rolling" -> Query((s, dir) => userRollingSpend(s, dir), userRollingSpendOracle),
+    "q_events_json" -> Query((s, dir) => hourlyJsonAgg(s, dir), hourlyJsonAggOracle),
+    "q_events_pivot" -> Query((s, dir) => dailyTypePivot(s, dir), dailyTypePivotOracle),
+    "q_events_unpivot" -> Query((s, dir) => dailyTypeUnpivot(s, dir), dailyTypeUnpivotOracle),
+    "q_events_rollup" -> Query((s, dir) => dailyRollup(s, dir), dailyRollupOracle),
+    "q_events_cube" -> Query((s, dir) => dailyCube(s, dir), dailyCubeOracle),
+    "q_events_gap_fill" -> Query((s, dir) => hourlyGapFill(s, dir), hourlyGapFillOracle)
   )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Fuzzy string join — the data-cleaning/entity-resolution operator
   * (match near-identical names across catalogs) done the only way that
@@ -63,11 +63,7 @@ object FuzzyJoin {
        |  ON a.bucket = b.bucket AND a.p_name < b.p_name
        |WHERE levenshtein(a.p_name, b.p_name) <= $MaxEdit""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fuzzy_join" -> ((s, dir) => fuzzyNamePairs(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_fuzzy_join" -> fuzzyOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_fuzzy_join" -> Query((s, dir) => fuzzyNamePairs(s, dir), fuzzyOracle)
   )
 }

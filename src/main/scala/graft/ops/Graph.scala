@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Iterative graph analytics over relational edge lists — PageRank in
   * exact fixed-point integers, so a 5-iteration run is bit-reproducible
@@ -325,13 +325,8 @@ object Graph {
        |FROM h$iters h JOIN a$iters a ON h.node = a.node""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pagerank" -> ((s, dir) => tradePagerank(s, dir)),
-    "q_hits" -> ((s, dir) => tradeHits(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_pagerank" -> pagerankSql(),
-    "q_hits" -> hitsSql()
+  def queries: Seq[(String, Query)] = Seq(
+    "q_pagerank" -> Query((s, dir) => tradePagerank(s, dir), pagerankSql()),
+    "q_hits" -> Query((s, dir) => tradeHits(s, dir), hitsSql())
   )
 }

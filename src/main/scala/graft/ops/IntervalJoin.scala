@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Bucketed interval-containment join — "which maintenance / crawl /
   * quiet window does each event fall into", the join shape engines
@@ -80,9 +80,7 @@ object IntervalJoin {
        |FROM ev e JOIN ivl i
        |  ON e.user_id = i.user_id AND e.t >= i.s AND e.t < i.e""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_interval_join" -> ((s, dir) => joined(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_interval_join" -> joinedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_interval_join" -> Query((s, dir) => joined(s, dir), joinedOracle)
+  )
 }

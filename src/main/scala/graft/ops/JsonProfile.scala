@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** JSON SCHEMA PROFILING over a string column (X195) — the report an
   * ETL team reads before writing any `get_json_object` path: every
@@ -74,9 +74,7 @@ object JsonProfile {
        |  UNION ALL SELECT '$$', 'malformed', c4 FROM cls)
        |WHERE n > 0""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_json_profile" -> ((s, dir) => profile(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_json_profile" -> profileOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_json_profile" -> Query((s, dir) => profile(s, dir), profileOracle)
+  )
 }

@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Deterministic TOKEN-BUDGETED corpus mixing — the complement of
   * [[CorpusOps.mixCorpus]]'s rate-based epoch replication: that
@@ -279,19 +279,18 @@ object Mixing {
        |  CAST(greatest(0, q.quota - q.avail_toks) AS BIGINT) AS shortfall
        |FROM quota q LEFT JOIN picked p USING (source)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_mix_budget" -> ((s, dir) =>
-      mix(graft.ops.ScaleOps.widen(Tables.documents(s, dir)))),
-    "q_mix_budget_report" -> ((s, dir) =>
-      mixReport(graft.ops.ScaleOps.widen(Tables.documents(s, dir)))),
-    "q_mix_temperature" -> ((s, dir) =>
-      mixTemperature(graft.ops.ScaleOps.widen(Tables.documents(s, dir)))),
-    "q_mix_temperature_report" -> ((s, dir) =>
-      temperatureQuotas(graft.ops.ScaleOps.widen(Tables.documents(s, dir)))))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_mix_budget" -> mixOracle,
-    "q_mix_budget_report" -> reportOracle,
-    "q_mix_temperature" -> mixTemperatureOracle,
-    "q_mix_temperature_report" -> temperatureQuotasOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_mix_budget" -> Query((s, dir) =>
+      mix(graft.ops.ScaleOps.widen(Tables.documents(s, dir))),
+      mixOracle),
+    "q_mix_budget_report" -> Query((s, dir) =>
+      mixReport(graft.ops.ScaleOps.widen(Tables.documents(s, dir))),
+      reportOracle),
+    "q_mix_temperature" -> Query((s, dir) =>
+      mixTemperature(graft.ops.ScaleOps.widen(Tables.documents(s, dir))),
+      mixTemperatureOracle),
+    "q_mix_temperature_report" -> Query((s, dir) =>
+      temperatureQuotas(graft.ops.ScaleOps.widen(Tables.documents(s, dir))),
+      temperatureQuotasOracle)
+  )
 }

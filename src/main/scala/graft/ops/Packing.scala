@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.TextOps
 
 /** Sequence packing — the training-batch assembly step after hygiene:
@@ -204,17 +204,10 @@ object Packing {
        |FROM toks""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pack_sequences" -> ((s, dir) => packSequences(s, dir)),
-    "q_pack_overflow" -> ((s, dir) => packOverflow(s, dir)),
-    "q_pack_shuffled" -> ((s, dir) => shuffledPack(s, dir)),
-    "q_mix_pack" -> ((s, dir) => mixPack(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_pack_sequences" -> packOracle,
-    "q_pack_overflow" -> packOverflowOracle,
-    "q_pack_shuffled" -> shuffledPackOracle,
-    "q_mix_pack" -> mixPackOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_pack_sequences" -> Query((s, dir) => packSequences(s, dir), packOracle),
+    "q_pack_overflow" -> Query((s, dir) => packOverflow(s, dir), packOverflowOracle),
+    "q_pack_shuffled" -> Query((s, dir) => shuffledPack(s, dir), shuffledPackOracle),
+    "q_mix_pack" -> Query((s, dir) => mixPack(s, dir), mixPackOracle)
   )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** K-ANONYMITY report (X204) — the privacy audit run next to the X194
   * pseudonymization vault before a dataset with person-adjacent
@@ -38,9 +38,7 @@ object Privacy {
        |  CAST(sum(k) AS BIGINT) AS n_rows
        |FROM g GROUP BY k""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_kanonymity" -> ((s, dir) => customerKAnonymity(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_kanonymity" -> kAnonymityOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_kanonymity" -> Query((s, dir) => customerKAnonymity(s, dir), kAnonymityOracle)
+  )
 }

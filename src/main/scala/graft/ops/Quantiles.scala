@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Exact grouped quantiles by histogram selection — order statistics
   * without ordering the rows.
@@ -194,15 +194,9 @@ object Quantiles {
        |GROUP BY b.k""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_quantiles_lineitem" -> ((s, dir) => lineitemQuantiles(s, dir)),
-    "q_quantiles_events" -> ((s, dir) => eventQuantiles(s, dir)),
-    "q_robust_stats" -> ((s, dir) => robustFixture(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_quantiles_lineitem" -> lineitemQuantilesOracle,
-    "q_quantiles_events" -> eventQuantilesOracle,
-    "q_robust_stats" -> robustOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_quantiles_lineitem" -> Query((s, dir) => lineitemQuantiles(s, dir), lineitemQuantilesOracle),
+    "q_quantiles_events" -> Query((s, dir) => eventQuantiles(s, dir), eventQuantilesOracle),
+    "q_robust_stats" -> Query((s, dir) => robustFixture(s, dir), robustOracle)
   )
 }

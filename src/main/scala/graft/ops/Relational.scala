@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Standard aggregation / join / sort surface over the fixture star schema.
   *
@@ -1168,63 +1168,33 @@ object Relational {
        |       ELSE 'both' END AS side
        |FROM bc FULL OUTER JOIN bs USING (nationkey)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_full_outer"       -> ((s, dir) => fullOuterReconcile(s, dir)),
-    "q_topk_per_group"   -> ((s, dir) => topOrdersPerCustomer(s, dir)),
-    "q6_forecast_revenue" -> ((s, dir) => q6ForecastRevenue(s, dir)),
-    "q8_market_share" -> ((s, dir) => q8MarketShare(s, dir)),
-    "q9_product_profit" -> ((s, dir) => q9ProductProfit(s, dir)),
-    "q20_excess_suppliers" -> ((s, dir) => q20ExcessSuppliers(s, dir)),
-    "q17_small_qty_revenue" -> ((s, dir) => q17SmallQtyRevenue(s, dir)),
-    "q15_top_supplier" -> ((s, dir) => q15TopSupplier(s, dir)),
-    "q2_min_cost_supplier" -> ((s, dir) => q2MinCostSupplier(s, dir)),
-    "q19_disjunctive_revenue" -> ((s, dir) => q19DisjunctiveRevenue(s, dir)),
-    "q11_important_parts" -> ((s, dir) => q11ImportantParts(s, dir)),
-    "q16_supplier_counts" -> ((s, dir) => q16SupplierCounts(s, dir)),
-    "q4_priority_check" -> ((s, dir) => q4PriorityCheck(s, dir)),
-    "q13_cust_distribution" -> ((s, dir) => q13CustomerDistribution(s, dir)),
-    "q21_waiting_suppliers" -> ((s, dir) => q21WaitingSuppliers(s, dir)),
-    "q12_priority_classes" -> ((s, dir) => q12PriorityShipping(s, dir)),
-    "q7_volume_shipping" -> ((s, dir) => q7VolumeShipping(s, dir)),
-    "q18_large_orders"   -> ((s, dir) => q18LargeOrders(s, dir)),
-    "q_moment_stats"     -> ((s, dir) => qMomentStats(s, dir)),
-    "q_anti_join"        -> ((s, dir) => qAntiJoin(s, dir)),
-    "q_exists_subquery"  -> ((s, dir) => qExistsSubquery(s, dir)),
-    "q1_pricing_summary" -> ((s, dir) => q1PricingSummary(s, dir)),
-    "q3_top_revenue"     -> ((s, dir) => q3TopRevenue(s, dir)),
-    "q10_returned_items" -> ((s, dir) => q10ReturnedItems(s, dir)),
-    "q5_local_volume"    -> ((s, dir) => q5LocalVolume(s, dir)),
-    "q14_promo_share"    -> ((s, dir) => q14PromoShare(s, dir)),
-    "q22_set_ops"        -> ((s, dir) => q22SetOps(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_full_outer"       -> fullOuterOracle,
-    "q_topk_per_group"   -> topOrdersOracle,
-    "q6_forecast_revenue" -> q6Oracle,
-    "q8_market_share" -> q8Oracle,
-    "q9_product_profit" -> q9Oracle,
-    "q20_excess_suppliers" -> q20Oracle,
-    "q17_small_qty_revenue" -> q17Oracle,
-    "q15_top_supplier" -> q15Oracle,
-    "q2_min_cost_supplier" -> q2Oracle,
-    "q19_disjunctive_revenue" -> q19Oracle,
-    "q11_important_parts" -> q11Oracle,
-    "q16_supplier_counts" -> q16Oracle,
-    "q4_priority_check" -> q4Oracle,
-    "q13_cust_distribution" -> q13Oracle,
-    "q21_waiting_suppliers" -> q21Oracle,
-    "q12_priority_classes" -> q12Oracle,
-    "q7_volume_shipping" -> q7Oracle,
-    "q18_large_orders"   -> q18Oracle,
-    "q_moment_stats"     -> momentOracle,
-    "q_anti_join"        -> antiJoinOracle,
-    "q_exists_subquery"  -> ExistsSql,
-    "q1_pricing_summary" -> q1Oracle,
-    "q3_top_revenue"     -> q3Oracle,
-    "q10_returned_items" -> q10Oracle,
-    "q5_local_volume"    -> q5Oracle,
-    "q14_promo_share"    -> q14Oracle,
-    "q22_set_ops"        -> q22Oracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_full_outer" -> Query((s, dir) => fullOuterReconcile(s, dir), fullOuterOracle),
+    "q_topk_per_group" -> Query((s, dir) => topOrdersPerCustomer(s, dir), topOrdersOracle),
+    "q6_forecast_revenue" -> Query((s, dir) => q6ForecastRevenue(s, dir), q6Oracle),
+    "q8_market_share" -> Query((s, dir) => q8MarketShare(s, dir), q8Oracle),
+    "q9_product_profit" -> Query((s, dir) => q9ProductProfit(s, dir), q9Oracle),
+    "q20_excess_suppliers" -> Query((s, dir) => q20ExcessSuppliers(s, dir), q20Oracle),
+    "q17_small_qty_revenue" -> Query((s, dir) => q17SmallQtyRevenue(s, dir), q17Oracle),
+    "q15_top_supplier" -> Query((s, dir) => q15TopSupplier(s, dir), q15Oracle),
+    "q2_min_cost_supplier" -> Query((s, dir) => q2MinCostSupplier(s, dir), q2Oracle),
+    "q19_disjunctive_revenue" -> Query((s, dir) => q19DisjunctiveRevenue(s, dir), q19Oracle),
+    "q11_important_parts" -> Query((s, dir) => q11ImportantParts(s, dir), q11Oracle),
+    "q16_supplier_counts" -> Query((s, dir) => q16SupplierCounts(s, dir), q16Oracle),
+    "q4_priority_check" -> Query((s, dir) => q4PriorityCheck(s, dir), q4Oracle),
+    "q13_cust_distribution" -> Query((s, dir) => q13CustomerDistribution(s, dir), q13Oracle),
+    "q21_waiting_suppliers" -> Query((s, dir) => q21WaitingSuppliers(s, dir), q21Oracle),
+    "q12_priority_classes" -> Query((s, dir) => q12PriorityShipping(s, dir), q12Oracle),
+    "q7_volume_shipping" -> Query((s, dir) => q7VolumeShipping(s, dir), q7Oracle),
+    "q18_large_orders" -> Query((s, dir) => q18LargeOrders(s, dir), q18Oracle),
+    "q_moment_stats" -> Query((s, dir) => qMomentStats(s, dir), momentOracle),
+    "q_anti_join" -> Query((s, dir) => qAntiJoin(s, dir), antiJoinOracle),
+    "q_exists_subquery" -> Query((s, dir) => qExistsSubquery(s, dir), ExistsSql),
+    "q1_pricing_summary" -> Query((s, dir) => q1PricingSummary(s, dir), q1Oracle),
+    "q3_top_revenue" -> Query((s, dir) => q3TopRevenue(s, dir), q3Oracle),
+    "q10_returned_items" -> Query((s, dir) => q10ReturnedItems(s, dir), q10Oracle),
+    "q5_local_volume" -> Query((s, dir) => q5LocalVolume(s, dir), q5Oracle),
+    "q14_promo_share" -> Query((s, dir) => q14PromoShare(s, dir), q14Oracle),
+    "q22_set_ops" -> Query((s, dir) => q22SetOps(s, dir), q22Oracle)
   )
 }

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Scale tactics that exist for the 1000-executor case and cannot be seen
   * in the logical result at all — only in the physical plan:
   *
@@ -79,12 +81,8 @@ object ScaleOps {
        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
        |GROUP BY s_nationkey""".stripMargin
 
-  def queries: Map[String, (org.apache.spark.sql.SparkSession, String) => DataFrame] = Map(
-    "q_salted_join" -> ((s, dir) => saltedNationVolume(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_salted_join" -> saltedNationVolumeOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_salted_join" -> Query((s, dir) => saltedNationVolume(s, dir), saltedNationVolumeOracle)
   )
 
   /** Widen an under-split source before a compute-bound stage.

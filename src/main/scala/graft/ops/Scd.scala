@@ -1,10 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** SCD TYPE-2 dimension build (X193) — the warehouse operator that
   * turns an event/snapshot stream into versioned validity intervals:
@@ -81,11 +81,8 @@ object Scd {
        |FROM dim, probe
        |WHERE valid_from <= t AND (valid_to IS NULL OR t < valid_to)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_scd2_dim" -> ((s, dir) => scd2(Tables.events(s, dir))),
-    "q_scd2_asof" -> ((s, dir) => asOfMidpoint(Tables.events(s, dir))))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_scd2_dim" -> scd2Oracle,
-    "q_scd2_asof" -> asOfOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_scd2_dim" -> Query((s, dir) => scd2(Tables.events(s, dir)), scd2Oracle),
+    "q_scd2_asof" -> Query((s, dir) => asOfMidpoint(Tables.events(s, dir)), asOfOracle)
+  )
 }

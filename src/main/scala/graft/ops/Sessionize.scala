@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Gap-based sessionization of the events table: events for a user
   * belong to one session while consecutive events are at most
@@ -144,11 +144,8 @@ object Sessionize {
       .as[Session]
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_range_join" -> ((s, dir) => assignEventsToSessions(s, dir)),
-    "q_session_window" -> ((s, dir) => sessionWindowSummaries(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_range_join" -> assignOracle,
-    "q_session_window" -> sessionWindowOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_range_join" -> Query((s, dir) => assignEventsToSessions(s, dir), assignOracle),
+    "q_session_window" -> Query((s, dir) => sessionWindowSummaries(s, dir), sessionWindowOracle)
+  )
 }

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** JOIN-KEY SKEW profiler (X210) — the diagnostic run BEFORE choosing
   * between a plain shuffle join, AQE skew splitting, and the X17
@@ -48,10 +48,9 @@ object SkewProfile {
        |  CAST((max_rows * n_keys * 1000) // total_rows AS BIGINT) AS skew_m
        |FROM s""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_skew_profile" -> ((s, dir) =>
-      profile(Tables.lineitem(s, dir), "l_suppkey")))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_skew_profile" -> profileOracle("lineitem", "l_suppkey"))
+  def queries: Seq[(String, Query)] = Seq(
+    "q_skew_profile" -> Query((s, dir) =>
+      profile(Tables.lineitem(s, dir), "l_suppkey"),
+      profileOracle("lineitem", "l_suppkey"))
+  )
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** The reference's sr_data relational core, re-expressed as a native
   * Catalyst plan over the fixture star schema.
@@ -295,15 +295,10 @@ object SrData {
   }
 
   /** Registry contributed to [[graft.SparkEntry]]. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_srdata_flagship" -> ((s, dir) => flagship(s, dir)),
-    "q_srdata_filtered" -> ((s, dir) => filtered(s, dir, "3-1997")),
-    "q_srdata_filtered_sargable" -> ((s, dir) => filteredSargable(s, dir, "3-1997"))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_srdata_flagship" -> flagshipOracle,
-    "q_srdata_filtered" -> filteredOracle("3-1997"),
-    "q_srdata_filtered_sargable" -> filteredSargableOracle("3-1997")
+  def queries: Seq[(String, Query)] = Seq(
+    "q_srdata_flagship" -> Query((s, dir) => flagship(s, dir), flagshipOracle),
+    "q_srdata_filtered" -> Query((s, dir) => filtered(s, dir, "3-1997"), filteredOracle("3-1997")),
+    "q_srdata_filtered_sargable" -> Query((s, dir) => filteredSargable(s, dir, "3-1997"),
+      filteredSargableOracle("3-1997"))
   )
 }

@@ -1,9 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.TextOps
 
 /** Dataset VERSIONING primitives (X208/X209) — what a 100 TB corpus
@@ -103,15 +103,13 @@ object Versioning {
        |  FROM a FULL OUTER JOIN b USING (doc_id))
        |SELECT status, CAST(count(*) AS BIGINT) AS n FROM j GROUP BY status""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_table_fingerprint" -> ((s, dir) =>
-      fingerprint(Tables.documents(s, dir))),
-    "q_version_diff" -> ((s, dir) => {
+  def queries: Seq[(String, Query)] = Seq(
+    "q_table_fingerprint" -> Query((s, dir) =>
+      fingerprint(Tables.documents(s, dir)),
+      fingerprintOracle),
+    "q_version_diff" -> Query((s, dir) => {
       val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
       versionDiff(docs, plantVersionB(docs))
-    }))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_table_fingerprint" -> fingerprintOracle,
-    "q_version_diff" -> versionDiffOracle)
+    }, versionDiffOracle)
+  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.sources.WarcWriter
 import graft.text.Canonical
 
@@ -116,9 +116,7 @@ object CdxIndex {
        |  rec_bytes, digest
        |FROM numbered""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cdx_index" -> ((s, dir) => index(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_cdx_index" -> indexOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_cdx_index" -> Query((s, dir) => index(s, dir), indexOracle)
+  )
 }

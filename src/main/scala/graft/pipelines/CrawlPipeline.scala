@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.{Canonical, Html, Robots}
 
 /** The end-to-end crawl ingest chain, composed as ONE lazy plan — every
@@ -394,17 +394,11 @@ object CrawlPipeline {
        |       AS BIGINT) AS alloc
        |FROM r""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_crawl_pipeline" -> ((s, dir) => crawl(s, dir)),
-    "q_fetch_schedule" -> ((s, dir) => fetchSchedule(s, dir)),
-    "q_crawl_schedule" -> ((s, dir) => crawlSchedule(s, dir)),
-    "q_crawl_host_report" -> ((s, dir) => hostReport(s, dir)),
-    "q_crawl_budget" -> ((s, dir) => crawlBudget(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_crawl_pipeline" -> crawlOracle,
-    "q_fetch_schedule" -> fetchScheduleOracle,
-    "q_crawl_schedule" -> crawlScheduleOracle,
-    "q_crawl_host_report" -> hostReportOracle,
-    "q_crawl_budget" -> crawlBudgetOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_crawl_pipeline" -> Query((s, dir) => crawl(s, dir), crawlOracle),
+    "q_fetch_schedule" -> Query((s, dir) => fetchSchedule(s, dir), fetchScheduleOracle),
+    "q_crawl_schedule" -> Query((s, dir) => crawlSchedule(s, dir), crawlScheduleOracle),
+    "q_crawl_host_report" -> Query((s, dir) => hostReport(s, dir), hostReportOracle),
+    "q_crawl_budget" -> Query((s, dir) => crawlBudget(s, dir), crawlBudgetOracle)
+  )
 }

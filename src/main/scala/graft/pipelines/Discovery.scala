@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Discovery-source reconciliation — the step between the discovery
   * extractors and the frontier: sitemaps (X121) and feeds (X139)
@@ -123,9 +123,7 @@ object Discovery {
        |  min(ts) AS first_seen_epoch
        |FROM ann GROUP BY canon""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_discovery_merge" -> ((s, dir) => merged(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_discovery_merge" -> mergedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_discovery_merge" -> Query((s, dir) => merged(s, dir), mergedOracle)
+  )
 }

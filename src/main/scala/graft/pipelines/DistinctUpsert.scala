@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.ops.SrData
 
 /** The reference's Snowflake→ES flow (`snowflake_to_es_etl.py`, SURVEY §3.2)
@@ -134,11 +134,7 @@ object DistinctUpsert {
 
   // ---- query registry ----
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_distinct_upsert" -> ((s, dir) => distinctUpsert(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_distinct_upsert" -> distinctUpsertOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_distinct_upsert" -> Query((s, dir) => distinctUpsert(s, dir), distinctUpsertOracle)
   )
 }

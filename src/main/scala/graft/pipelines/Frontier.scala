@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.Canonical
 
 /** Frontier seen-filtering — the dedup between link discovery and fetch
@@ -375,17 +375,11 @@ object Frontier {
        |FROM keys k LEFT JOIN seen s ON k.url_key = s.url_key
        |WHERE k.doc_id % 2 = 1 AND s.url_key IS NULL""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_frontier_new" -> ((s, dir) => newUrls(s, dir)),
-    "q_frontier_new_bloom" -> ((s, dir) => newUrlsBloom(s, dir)),
-    "q_frontier_recrawl" -> ((s, dir) => recrawl(s, dir)),
-    "q_crawl_delta" -> ((s, dir) => snapshotDelta(s, dir)),
-    "q_revisit_policy" -> ((s, dir) => revisitPolicy(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_frontier_new" -> newUrlsOracle,
-    "q_frontier_new_bloom" -> newUrlsOracle,
-    "q_frontier_recrawl" -> recrawlOracle,
-    "q_crawl_delta" -> snapshotDeltaOracle,
-    "q_revisit_policy" -> revisitPolicyOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_frontier_new" -> Query((s, dir) => newUrls(s, dir), newUrlsOracle),
+    "q_frontier_new_bloom" -> Query((s, dir) => newUrlsBloom(s, dir), newUrlsOracle),
+    "q_frontier_recrawl" -> Query((s, dir) => recrawl(s, dir), recrawlOracle),
+    "q_crawl_delta" -> Query((s, dir) => snapshotDelta(s, dir), snapshotDeltaOracle),
+    "q_revisit_policy" -> Query((s, dir) => revisitPolicy(s, dir), revisitPolicyOracle)
+  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.{Analysis, Normalize, Repetition, TextOps}
 
 /** End-to-end corpus-hygiene funnel — the RefinedWeb/Gopher preprocessing
@@ -288,13 +288,8 @@ object Hygiene {
     funnel(spark, dir).join(vocabIn, Seq("stage_id"), "left")
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hygiene_funnel" -> ((s, dir) => funnel(s, dir)),
-    "q_hygiene_assign" -> ((s, dir) => assignments(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_hygiene_funnel" -> funnelOracle,
-    "q_hygiene_assign" -> assignmentsOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_hygiene_funnel" -> Query((s, dir) => funnel(s, dir), funnelOracle),
+    "q_hygiene_assign" -> Query((s, dir) => assignments(s, dir), assignmentsOracle)
   )
 }

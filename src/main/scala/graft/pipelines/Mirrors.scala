@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Mirror-host detection — the crawl-level dedup that runs BEFORE any
   * document dedup: mirrors (ccTLD twins, CDN vanity hosts, scraped
@@ -113,9 +113,7 @@ object Mirrors {
        |JOIN per_host ha ON ha.host = p.host_a
        |JOIN per_host hb ON hb.host = p.host_b""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_mirror_hosts" -> ((s, dir) => report(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_mirror_hosts" -> reportOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_mirror_hosts" -> Query((s, dir) => report(s, dir), reportOracle)
+  )
 }

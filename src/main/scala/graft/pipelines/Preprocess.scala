@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import graft.Query
 import graft.ops.{Caches, SrData}
 import graft.text.{Normalize, TextOps}
 
@@ -249,13 +250,10 @@ object Preprocess {
 
   // ---- query registry ----
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_preprocess_monthly" -> ((s, dir) => preprocessMonthly(s, dir, "3-1997", 100)),
-    "q_order_limit_chunks" -> ((s, dir) => orderedChunkPages(s, dir, 1000))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_preprocess_monthly" -> preprocessMonthlyOracle("3-1997", 100),
-    "q_order_limit_chunks" -> orderedChunkPagesOracle(1000)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_preprocess_monthly" -> Query((s, dir) => preprocessMonthly(s, dir, "3-1997", 100),
+      preprocessMonthlyOracle("3-1997", 100)),
+    "q_order_limit_chunks" -> Query((s, dir) => orderedChunkPages(s, dir, 1000),
+      orderedChunkPagesOracle(1000))
   )
 }

@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** HTTP 206 partial-content reassembly — how a crawler lands files too
   * large (or too flaky) for one round trip: each resumed fetch returns
@@ -126,9 +126,7 @@ object RangeFetch {
        |    '' ORDER BY s) AS body
        |FROM ranged GROUP BY u""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_range_reassembly" -> ((s, dir) => reassembled(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_range_reassembly" -> reassembledOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_range_reassembly" -> Query((s, dir) => reassembled(s, dir), reassembledOracle)
+  )
 }

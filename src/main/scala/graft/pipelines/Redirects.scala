@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Redirect-chain resolution — the pass a crawl runs between fetching
   * and indexing: a 301/302 response's `Location` header points at the
@@ -203,11 +203,8 @@ object Redirects {
        |       ELSE 'self' END AS source
        |FROM resolved r JOIN canon c USING (doc_id)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_redirect_resolve" -> ((s, dir) => resolve(s, dir)),
-    "q_canonical_reconcile" -> ((s, dir) => reconcile(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_redirect_resolve" -> resolveOracle,
-    "q_canonical_reconcile" -> reconcileOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_redirect_resolve" -> Query((s, dir) => resolve(s, dir), resolveOracle),
+    "q_canonical_reconcile" -> Query((s, dir) => reconcile(s, dir), reconcileOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** HTTP caching semantics for an incremental crawler — the layer
   * between the fetch scheduler (X122) and the fetcher: RFC 9111
@@ -301,13 +301,10 @@ object Revalidate {
        |                        ELSE 'v2 ' || substr(t, 1, 50) END) END AS digest
        |FROM d""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_cache_freshness" -> ((s, dir) => freshness(s, dir)),
-    "q_conditional_request" -> ((s, dir) => conditionalRequests(s, dir)),
-    "q_revalidate_merge" -> ((s, dir) => merge(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_cache_freshness" -> freshnessOracle,
-    "q_conditional_request" -> conditionalRequestsOracle,
-    "q_revalidate_merge" -> mergeOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_cache_freshness" -> Query((s, dir) => freshness(s, dir), freshnessOracle),
+    "q_conditional_request" -> Query((s, dir) => conditionalRequests(s, dir),
+      conditionalRequestsOracle),
+    "q_revalidate_merge" -> Query((s, dir) => merge(s, dir), mergeOracle)
+  )
 }

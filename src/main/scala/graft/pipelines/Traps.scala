@@ -3,7 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Crawl-trap detection — the frontier's defence against infinite URL
   * spaces: calendars, session ids, faceted search and printer views
@@ -188,11 +188,8 @@ object Traps {
        |  ON c.host = r.host AND c.template = r.template
        |WHERE r.host IS NULL""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_crawl_traps" -> ((s, dir) => report(s, dir)),
-    "q_frontier_trapscreen" -> ((s, dir) => screened(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_crawl_traps" -> reportOracle,
-    "q_frontier_trapscreen" -> screenedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_crawl_traps" -> Query((s, dir) => report(s, dir), reportOracle),
+    "q_frontier_trapscreen" -> Query((s, dir) => screened(s, dir), screenedOracle)
+  )
 }

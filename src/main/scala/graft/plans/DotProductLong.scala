@@ -1,12 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native codegen'd integer dot product of two `array<bigint>` columns —
   * the hot inner loop of every similarity/ANN operator in [[graft.sim]].
@@ -73,57 +71,4 @@ case class DotProductLong(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** `SparkSessionExtensions` hook: exposes [[DotProductLong]] to SQL as
-  * `dot_long(a, b)` and installs [[SargableMonthRule]] in the optimizer.
-  * Activate with `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("dot_long"),
-      new ExpressionInfo(classOf[DotProductLong].getName, "dot_long"),
-      (children: Seq[Expression]) => DotProductLong(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("simhash48"),
-      new ExpressionInfo(classOf[SimHash48].getName, "simhash48"),
-      (children: Seq[Expression]) => SimHash48(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-      (children: Seq[Expression]) => children match {
-        // 1-arg default form, or explicit literal (w, divisor) — anything
-        // else must error, never silently fall back to defaults
-        case Seq(c) => CdcChunks(c, CdcChunks.DefaultW, CdcChunks.DefaultDivisor)
-        case Seq(c, org.apache.spark.sql.catalyst.expressions.Literal(w: Int, _),
-                    org.apache.spark.sql.catalyst.expressions.Literal(d: Int, _)) =>
-          CdcChunks(c, w, d)
-        case _ => throw new IllegalArgumentException(
-          "cdc_chunks(text) or cdc_chunks(text, <int literal w>, <int literal divisor>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("winnow_hashes"),
-      new ExpressionInfo(classOf[WinnowHashes].getName, "winnow_hashes"),
-      (children: Seq[Expression]) => children match {
-        case Seq(c) => WinnowHashes(c, WinnowHashes.DefaultK, WinnowHashes.DefaultW)
-        case Seq(c, org.apache.spark.sql.catalyst.expressions.Literal(k: Int, _),
-                    org.apache.spark.sql.catalyst.expressions.Literal(w: Int, _)) =>
-          WinnowHashes(c, k, w)
-        case _ => throw new IllegalArgumentException(
-          "winnow_hashes(text) or winnow_hashes(text, <int literal k>, <int literal w>)")
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("phrase_merge"),
-      new ExpressionInfo(classOf[PhraseMerge].getName, "phrase_merge"),
-      (children: Seq[Expression]) => children match {
-        case Seq(t, p) => PhraseMerge(t, p)
-        case Seq(t, p, org.apache.spark.sql.catalyst.expressions.Literal(s: org.apache.spark.unsafe.types.UTF8String, _)) =>
-          PhraseMerge(t, p, s.toString)
-        case _ => throw new IllegalArgumentException(
-          "phrase_merge(tokens array<string>, phrases array<string>[, <string literal sep>])")
-      }))
-    ext.injectOptimizerRule(_ => SargableMonthRule)
-    ext.injectPlannerStrategy(_ => AsofJoinStrategy)
-  }
 }

@@ -3,7 +3,7 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.TextOps
 
 /** Token → pretrained-word-vector document embedding — the operator the
@@ -103,11 +103,7 @@ object DocEmbedding {
        |FROM exploded
        |GROUP BY doc_id, dim""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_doc_embedding" -> ((s, dir) => docEmbedding(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_doc_embedding" -> docEmbeddingOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_doc_embedding" -> Query((s, dir) => docEmbedding(s, dir), docEmbeddingOracle)
   )
 }

@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
   * arXiv:2303.09540): cluster the embedding space coarsely, compare
   * pairs ONLY within a cluster, and drop all but one of each
@@ -98,15 +100,9 @@ object SemDedup {
     */
   val GrownK = 64
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_semantic_neardup" -> ((s, dir) => pairs(s, dir)),
-    "q_semantic_neardup_k64" -> ((s, dir) => pairs(s, dir, GrownK)),
-    "q_semantic_dedup" -> ((s, dir) => kept(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_semantic_neardup" -> pairsOracle(),
-    "q_semantic_neardup_k64" -> pairsOracle(GrownK),
-    "q_semantic_dedup" -> keptOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_semantic_neardup" -> Query((s, dir) => pairs(s, dir), pairsOracle()),
+    "q_semantic_neardup_k64" -> Query((s, dir) => pairs(s, dir, GrownK), pairsOracle(GrownK)),
+    "q_semantic_dedup" -> Query((s, dir) => kept(s, dir), keptOracle)
   )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.ops.Caches
 
 /** Similarity search over the `embeddings` table (`ArrayType(FloatType)`,
@@ -784,21 +784,22 @@ object Similarity {
 
   // ---- query registry ----
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_similarity_topk" -> ((s, dir) => topK(s, dir)),
-    "q_similarity_ivf" -> ((s, dir) => ivfTopK(s, dir)),
-    "q_similarity_ivfpq" -> ((s, dir) => ivfPqTopK(s, dir)),
+  def queries: Seq[(String, Query)] = Seq(
+    "q_similarity_topk" -> Query((s, dir) => topK(s, dir), topKOracle),
+    "q_similarity_ivf" -> Query((s, dir) => ivfTopK(s, dir), ivfOracle),
+    "q_similarity_ivfpq" -> Query((s, dir) => ivfPqTopK(s, dir), ivfPqOracle),
     // consumes the materialized index (VecIndex) — q_similarity_ivfpq
     // keeps the live build+serve pipeline honest while apply demonstrates
     // (and is timed as) the serve-only consumer, mirroring q_dedup_apply
-    "q_similarity_ivfpq_apply" -> ((s, dir) => ivfPqTopKFromIndex(s, dir)),
-    "q_mean_embedding" -> ((s, dir) => meanEmbedding(s, dir)),
-    "q_embedding_neardup" -> ((s, dir) => nearDupPairs(s, dir)),
-    "q_ann_recall" -> ((s, dir) => annRecall(s, dir)),
-    "q_ann_recall_pq" -> ((s, dir) => annRecallPq(s, dir)),
+    "q_similarity_ivfpq_apply" -> Query((s, dir) => ivfPqTopKFromIndex(s, dir), ivfPqOracle),
+    "q_mean_embedding" -> Query((s, dir) => meanEmbedding(s, dir), meanEmbeddingOracle),
+    "q_embedding_neardup" -> Query((s, dir) => nearDupPairs(s, dir), nearDupOracle),
+    "q_ann_recall" -> Query((s, dir) => annRecall(s, dir), annRecallOracle),
+    "q_ann_recall_pq" -> Query((s, dir) => annRecallPq(s, dir), annRecallPqOracle),
     // base index + frozen-quantizer batch append, served as one union —
     // the X42 incremental discipline applied to the ANN index
-    "q_similarity_ivfpq_incremental" -> ((s, dir) => ivfPqIncremental(s, dir))
+    "q_similarity_ivfpq_incremental" -> Query((s, dir) => ivfPqIncremental(s, dir),
+      ivfPqIncrementalOracle)
   )
 
   // ---- persisted ANN index ----
@@ -874,16 +875,4 @@ object Similarity {
       }
     }
   }
-
-  def oracleSql: Map[String, String] = Map(
-    "q_similarity_topk" -> topKOracle,
-    "q_similarity_ivf" -> ivfOracle,
-    "q_similarity_ivfpq" -> ivfPqOracle,
-    "q_similarity_ivfpq_apply" -> ivfPqOracle,
-    "q_mean_embedding" -> meanEmbeddingOracle,
-    "q_embedding_neardup" -> nearDupOracle,
-    "q_ann_recall" -> annRecallOracle,
-    "q_ann_recall_pq" -> annRecallPqOracle,
-    "q_similarity_ivfpq_incremental" -> ivfPqIncrementalOracle
-  )
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Shared machinery for session-lifetime parquet checkpoints of derived
   * tables (near-dup pair tables, ANN index codes) — the build-once /
@@ -37,7 +38,10 @@ object Checkpoints {
 
   private val jvmNonce: String = java.util.UUID.randomUUID().toString.take(12)
 
-  private val built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Path → schema of every table this JVM wrote, so a read-back names
+    * its schema instead of inferring it (an inference starts a job).
+    */
+  private val built = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
   private val cleanupRegistered = new java.util.concurrent.atomic.AtomicBoolean(false)
 
@@ -58,7 +62,7 @@ object Checkpoints {
         new Runnable {
           def run(): Unit = {
             cleanupStarted = true
-            built.forEach { p =>
+            built.keySet.forEach { p =>
               try {
                 val hp = new org.apache.hadoop.fs.Path(p)
                 hp.getFileSystem(conf).delete(hp, true)
@@ -109,17 +113,36 @@ object Checkpoints {
       spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") + "/" + defaultSubdir)
     val paths = keys.map(k => s"$base/${k}_$jvmNonce")
     locks.computeIfAbsent(paths.head, _ => new Object).synchronized {
-      if (!paths.forall(built.contains)) {
+      if (!paths.forall(built.containsKey)) {
         val (dfs, cleanup) = build
         require(dfs.length == paths.length,
           s"build returned ${dfs.length} tables for ${paths.length} keys")
         try dfs.zip(paths).foreach { case (df, p) =>
           df.write.mode("overwrite").parquet(p)
-          built.add(p)
+          built.put(p, nullable(df.schema))
         } finally cleanup()
       }
     }
-    paths.map(spark.read.parquet)
+    paths.map(p => spark.read.schema(built.get(p)).parquet(p))
+  }
+
+  /** `s` as Spark's parquet writer stores it: every field, array element
+    * and map value nullable.
+    */
+  private def nullable(s: StructType): StructType = {
+    def of(dt: DataType): DataType = dt match {
+      case s: StructType => nullable(s)
+      case a: ArrayType => ArrayType(of(a.elementType), containsNull = true)
+      case m: MapType => MapType(of(m.keyType), of(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    StructType(s.fields.map(f => f.copy(dataType = of(f.dataType), nullable = true)))
+  }
+
+  /** Path → schema of every table written in this JVM. */
+  private[graft] def writtenSchemas: Map[String, StructType] = {
+    import scala.jdk.CollectionConverters._
+    built.asScala.toMap
   }
 
   /** Conf key selecting RELIABLE lineage truncation for iterative

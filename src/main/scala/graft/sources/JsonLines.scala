@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** JSONL ingestion with malformed-line quarantine — what actually
   * arrives when a corpus is delivered as JSON lines: truncated writes,
@@ -103,11 +103,8 @@ object JsonLines {
        |  CAST(SUM((is_valid AND s IS NULL)::INTEGER) AS BIGINT) AS s_nulls
        |FROM p""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_jsonl_quarantine" -> ((s, dir) => parsed(s, dir)),
-    "q_jsonl_report" -> ((s, dir) => loadReport(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_jsonl_quarantine" -> parsedOracle,
-    "q_jsonl_report" -> reportOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_jsonl_quarantine" -> Query((s, dir) => parsed(s, dir), parsedOracle),
+    "q_jsonl_report" -> Query((s, dir) => loadReport(s, dir), reportOracle)
+  )
 }

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Query
+
 /** Data-layout control for scan pruning — the table-side half of the
   * predicate-pushdown story. Pushed filters (SURVEY §4) only skip I/O
   * when the FILES are organized so parquet footer min/max statistics are
@@ -165,13 +167,8 @@ object Layout {
        |FROM sharded GROUP BY shard""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_shard_manifest" -> ((s, dir) => shardManifest(s, dir)),
-    "q_zorder_codes" -> ((s, dir) => zOrderCodes(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_shard_manifest" -> shardManifestOracle,
-    "q_zorder_codes" -> zOrderOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_shard_manifest" -> Query((s, dir) => shardManifest(s, dir), shardManifestOracle),
+    "q_zorder_codes" -> Query((s, dir) => zOrderCodes(s, dir), zOrderOracle)
   )
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** MIME/EML ingestion over the corpus (X242) — mail archives, list
   * dumps and MHTML snapshots as a text source. The gate plants a
@@ -48,9 +48,7 @@ object Mail {
        |  coalesce(text, '') AS extracted
        |FROM documents""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_mime_text" -> ((s, dir) => mimeTexts(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_mime_text" -> mimeTextsOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_mime_text" -> Query((s, dir) => mimeTexts(s, dir), mimeTextsOracle)
+  )
 }

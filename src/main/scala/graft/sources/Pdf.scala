@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** PDF text extraction over the corpus (X241) — the ingestion surface
   * a modern training pipeline cannot skip: a large share of
@@ -54,9 +54,7 @@ object Pdf {
        |    ELSE coalesce(text, '') END AS extracted
        |FROM documents""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pdf_text" -> ((s, dir) => pdfTexts(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_pdf_text" -> pdfTextsOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_pdf_text" -> Query((s, dir) => pdfTexts(s, dir), pdfTextsOracle)
+  )
 }

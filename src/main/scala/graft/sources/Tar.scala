@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** WebDataset-style TAR shard reading (X192) — the container layout
   * image/audio training corpora actually ship in: a shard is a `.tar`
@@ -184,13 +184,9 @@ object Tar {
        |  h.dhash, CAST((h.doc_id + 3 * h.j) % 10 AS BIGINT) AS cls
        |FROM hash h""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_tar_members" -> ((s, dir) => members(s, dir)),
-    "q_wds_samples" -> ((s, dir) => samples(s, dir)),
-    "q_wds_image_dhash" -> ((s, dir) => imageSamples(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_tar_members" -> membersOracle,
-    "q_wds_samples" -> samplesOracle,
-    "q_wds_image_dhash" -> imageSamplesOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_tar_members" -> Query((s, dir) => members(s, dir), membersOracle),
+    "q_wds_samples" -> Query((s, dir) => samples(s, dir), samplesOracle),
+    "q_wds_image_dhash" -> Query((s, dir) => imageSamples(s, dir), imageSamplesOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** WARC shard ingestion (see [[graft.plans.WarcRecords]]) — plant
   * multi-record WARC blobs from the fixture text, walk them back by
@@ -475,19 +475,13 @@ object Warc {
        |  END AS body
        |FROM documents""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_warc_records" -> ((s, dir) => warcRecords(s, dir)),
-    "q_warc_gzip" -> ((s, dir) => warcGzipRecords(s, dir)),
-    "q_warc_zstd" -> ((s, dir) => warcZstdRecords(s, dir)),
-    "q_warc_http" -> ((s, dir) => warcHttp(s, dir)),
-    "q_meta_charset" -> ((s, dir) => metaCharset(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_warc_records" -> warcOracle,
+  def queries: Seq[(String, Query)] = Seq(
+    "q_warc_records" -> Query((s, dir) => warcRecords(s, dir), warcOracle),
     // compression is content-transparent: the gz path answers to the
     // identical oracle
-    "q_warc_gzip" -> warcOracle,
-    "q_warc_zstd" -> warcOracle,
-    "q_warc_http" -> warcHttpOracle,
-    "q_meta_charset" -> metaCharsetOracle)
+    "q_warc_gzip" -> Query((s, dir) => warcGzipRecords(s, dir), warcOracle),
+    "q_warc_zstd" -> Query((s, dir) => warcZstdRecords(s, dir), warcOracle),
+    "q_warc_http" -> Query((s, dir) => warcHttp(s, dir), warcHttpOracle),
+    "q_meta_charset" -> Query((s, dir) => metaCharset(s, dir), metaCharsetOracle)
+  )
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.pipelines.{CdxIndex, CrawlPipeline, Preprocess}
 import graft.text.Canonical
 
@@ -427,9 +427,7 @@ object WarcArchive {
        |FROM normed n JOIN src s USING (doc_id)
        |WHERE n.doc_id % $DoomedMod <> $DoomedResidue""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_warc_erasure" -> ((s, dir) => erasureRoundTrip(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_warc_erasure" -> erasureOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_warc_erasure" -> Query((s, dir) => erasureRoundTrip(s, dir), erasureOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.text.Html
 
 /** WARC (ISO 28500) record WRITER — the other half of the crawl
@@ -349,15 +349,10 @@ object WarcWriter {
        |FROM r""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_warc_write" -> ((s, dir) => writtenRecords(s, dir)),
-    "q_wet_records" -> ((s, dir) => wetRecords(s, dir)),
-    "q_wat_records" -> ((s, dir) => watRecords(s, dir)),
-    "q_warc_revisit" -> ((s, dir) => revisitDerived(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_warc_write" -> writtenOracle,
-    "q_wet_records" -> wetOracle,
-    "q_wat_records" -> watOracle,
-    "q_warc_revisit" -> revisitOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_warc_write" -> Query((s, dir) => writtenRecords(s, dir), writtenOracle),
+    "q_wet_records" -> Query((s, dir) => wetRecords(s, dir), wetOracle),
+    "q_wat_records" -> Query((s, dir) => watRecords(s, dir), watOracle),
+    "q_warc_revisit" -> Query((s, dir) => revisitDerived(s, dir), revisitOracle)
+  )
 }

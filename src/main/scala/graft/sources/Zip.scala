@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** ZIP archive ingestion (X243) — the other container data drops ship
   * in, next to the X192 tar shards. The plant is the JDK's own
@@ -60,9 +60,7 @@ object Zip {
        |  CASE k WHEN 0 THEN '' WHEN 1 THEN alpha ELSE beta END AS payload
        |FROM m""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_zip_members" -> ((s, dir) => members(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_zip_members" -> membersOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_zip_members" -> Query((s, dir) => members(s, dir), membersOracle)
+  )
 }

@@ -1,9 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Text-analysis operators a large-scale training-data pipeline needs:
   * language-ID (function-word heuristic), quality scoring, token counting
@@ -223,62 +223,52 @@ object Analysis {
   private def docs(s: SparkSession, dir: String) =
     graft.ops.ScaleOps.widen(Tables.documents(s, dir))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_normalize_text" -> ((s, dir) =>
+  def queries: Seq[(String, Query)] = Seq(
+    "q_normalize_text" -> Query((s, dir) =>
       docs(s, dir).select(col("doc_id"),
-        Normalize.normalizeText(col("text")).as("norm_text"))),
-    "q_tokenize_stopword_lemma" -> ((s, dir) =>
+        Normalize.normalizeText(col("text")).as("norm_text")),
+      s"""SELECT doc_id, ${Normalize.normalizeSql("text")} AS norm_text FROM documents"""),
+    "q_tokenize_stopword_lemma" -> Query((s, dir) =>
       docs(s, dir)
         .select(col("doc_id"), TextOps.preprocess(col("text")).as("p"))
         .select(col("doc_id"),
           concat_ws(" ", col("p")).as("processed"),
-          size(col("p")).cast("long").as("n_out_tokens"))),
-    "q_lang_id" -> ((s, dir) =>
+          size(col("p")).cast("long").as("n_out_tokens")),
+      s"""SELECT doc_id,
+         |  array_to_string(${TextOps.preprocessSql("text")}, ' ') AS processed,
+         |  CAST(len(${TextOps.preprocessSql("text")}) AS BIGINT) AS n_out_tokens
+         |FROM documents""".stripMargin),
+    "q_lang_id" -> Query((s, dir) =>
       docs(s, dir)
         .select(col("doc_id"), col("lang"), col("text"), tokens(col("text")).as("toks"))
         .select(col("doc_id"), col("lang"),
-          langIdFromTokens(col("text"), col("toks")).as("lang_pred"))),
-    "q_text_quality" -> ((s, dir) => {
+          langIdFromTokens(col("text"), col("toks")).as("lang_pred")),
+      s"""SELECT doc_id, lang, ${langIdSql("text")} AS lang_pred FROM documents"""),
+    "q_text_quality" -> Query((s, dir) => {
       val cols = qualityColumnsFromTokens(col("text"), col("toks"))
         .map { case (n, c) => c.as(n) }
       docs(s, dir)
         .select(col("doc_id"), col("text"), tokens(col("text")).as("toks"))
         .select(col("doc_id") +: cols: _*)
-    }),
-    "q_token_count" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        wsTokenCount(col("text")).as("ws_tokens"),
-        bpeIshTokenCount(col("text")).as("bpeish_tokens"))),
-    "q_fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        fingerprint(col("text")).as("fp_md5"))),
-    "q_rolling_fingerprint" -> ((s, dir) =>
-      docs(s, dir).select(col("doc_id"),
-        rollingHash(col("text")).as("fp_roll")))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_normalize_text" ->
-      s"""SELECT doc_id, ${Normalize.normalizeSql("text")} AS norm_text FROM documents""",
-    "q_tokenize_stopword_lemma" ->
-      s"""SELECT doc_id,
-         |  array_to_string(${TextOps.preprocessSql("text")}, ' ') AS processed,
-         |  CAST(len(${TextOps.preprocessSql("text")}) AS BIGINT) AS n_out_tokens
-         |FROM documents""".stripMargin,
-    "q_lang_id" ->
-      s"""SELECT doc_id, lang, ${langIdSql("text")} AS lang_pred FROM documents""",
-    "q_text_quality" -> {
+    }, {
       val cols = qualitySqlColumns("text").map { case (n, c) => s"$c AS $n" }
       s"""SELECT doc_id, ${cols.mkString(", ")} FROM documents"""
-    },
-    "q_token_count" ->
+    }),
+    "q_token_count" -> Query((s, dir) =>
+      docs(s, dir).select(col("doc_id"),
+        wsTokenCount(col("text")).as("ws_tokens"),
+        bpeIshTokenCount(col("text")).as("bpeish_tokens")),
       s"""SELECT doc_id,
          |  CAST(len(${TextOps.tokenizeSql("text")}) AS BIGINT) AS ws_tokens,
          |  CAST(len(regexp_extract_all(text, '${BpeIshPattern}')) AS BIGINT) AS bpeish_tokens
-         |FROM documents""".stripMargin,
-    "q_fingerprint" ->
-      s"""SELECT doc_id, md5(${Normalize.normalizeSql("text")}) AS fp_md5 FROM documents""",
-    "q_rolling_fingerprint" ->
-      s"""SELECT doc_id, ${rollingHashSql("text")} AS fp_roll FROM documents"""
+         |FROM documents""".stripMargin),
+    "q_fingerprint" -> Query((s, dir) =>
+      docs(s, dir).select(col("doc_id"),
+        fingerprint(col("text")).as("fp_md5")),
+      s"""SELECT doc_id, md5(${Normalize.normalizeSql("text")}) AS fp_md5 FROM documents"""),
+    "q_rolling_fingerprint" -> Query((s, dir) =>
+      docs(s, dir).select(col("doc_id"),
+        rollingHash(col("text")).as("fp_roll")),
+      s"""SELECT doc_id, ${rollingHashSql("text")} AS fp_roll FROM documents""")
   )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Anchor-text aggregation — the classic web-corpus relevance signal:
   * the text OTHER pages put inside `<a>` elements pointing at a URL
@@ -142,9 +142,7 @@ object Anchors {
        |FROM totals t JOIN best b ON t.target = b.target AND b.rn = 1""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_anchor_text" -> ((s, dir) => report(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_anchor_text" -> reportOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_anchor_text" -> Query((s, dir) => report(s, dir), reportOracle)
+  )
 }

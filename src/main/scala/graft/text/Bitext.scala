@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Parallel-corpus (bitext) pair filtering (X224) — the hygiene pass
   * every translation-data pipeline runs before a (src, tgt) pair may
@@ -118,9 +118,7 @@ object Bitext {
        |FROM sig""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bitext_screen" -> ((s, dir) => screened(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_bitext_screen" -> oracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_bitext_screen" -> Query((s, dir) => screened(s, dir), oracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Multi-pattern blocklist scan over the corpus — the production shape
   * of banned-term / contaminant-phrase filtering (reference: the ETL
@@ -121,11 +121,8 @@ object Blocklist {
        |    AS n_replaced
        |FROM documents""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_blocklist_hits" -> ((s, dir) => blocklistHits(s, dir)),
-    "q_blocklist_scrub" -> ((s, dir) => blocklistScrub(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_blocklist_hits" -> blocklistOracle,
-    "q_blocklist_scrub" -> scrubOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_blocklist_hits" -> Query((s, dir) => blocklistHits(s, dir), blocklistOracle),
+    "q_blocklist_scrub" -> Query((s, dir) => blocklistScrub(s, dir), scrubOracle)
+  )
 }

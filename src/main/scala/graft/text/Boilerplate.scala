@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Line-level (segment-level) boilerplate removal — the CCNet/RefinedWeb
   * dedup granularity between whole-document fingerprints
@@ -274,15 +274,9 @@ object Boilerplate {
        |GROUP BY s.doc_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_line_dedup" -> ((s, dir) => lineDedup(s, dir)),
-    "q_host_templates" -> ((s, dir) => hostTemplates(s, dir)),
-    "q_run_collapse" -> ((s, dir) => runCollapse(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_line_dedup" -> lineDedupOracle,
-    "q_host_templates" -> hostTemplatesOracle,
-    "q_run_collapse" -> runCollapseOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_line_dedup" -> Query((s, dir) => lineDedup(s, dir), lineDedupOracle),
+    "q_host_templates" -> Query((s, dir) => hostTemplates(s, dir), hostTemplatesOracle),
+    "q_run_collapse" -> Query((s, dir) => runCollapse(s, dir), runCollapseOracle)
   )
 }

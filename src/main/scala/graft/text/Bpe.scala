@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** BPE merge-candidate statistics — the first iteration of byte-pair-
   * encoding tokenizer training (Sennrich et al. 2016) at corpus scale:
@@ -267,15 +267,9 @@ object Bpe {
        |)""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_bpe_pairs" -> ((s, dir) => topPairs(s, dir)),
-    "q_bpe_encode" -> ((s, dir) => encode(s, dir)),
-    "q_bpe_fertility" -> ((s, dir) => fertility(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_bpe_pairs" -> topPairsOracle,
-    "q_bpe_encode" -> encodeOracle,
-    "q_bpe_fertility" -> fertilityOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_bpe_pairs" -> Query((s, dir) => topPairs(s, dir), topPairsOracle),
+    "q_bpe_encode" -> Query((s, dir) => encode(s, dir), encodeOracle),
+    "q_bpe_fertility" -> Query((s, dir) => fertility(s, dir), fertilityOracle)
   )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** GPT-2 byte-level pretokenization gate (X226) — the front end of
   * every byte-level BPE tokenizer, completing the subword family
@@ -77,9 +77,7 @@ object BytePretok {
        |FROM kept""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_byte_pretokenize" -> ((s, dir) => pretokens(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_byte_pretokenize" -> oracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_byte_pretokenize" -> Query((s, dir) => pretokens(s, dir), oracle)
+  )
 }

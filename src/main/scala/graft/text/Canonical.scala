@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** URL canonicalization — the normalization pass that runs BEFORE
   * URL-level dedup in a crawl pipeline (reference: the ETL suite's URL
@@ -435,19 +435,12 @@ object Canonical {
        |    WHEN 4 THEN 'q%3D1%2F2' ELSE '100%25%2B' END AS query_enc
        |FROM documents""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_url_canonical" -> ((s, dir) => canonicalUrls(s, dir)),
-    "q_pct_normalize" -> ((s, dir) => pctNormalized(s, dir)),
-    "q_idn_hosts" -> ((s, dir) => idnHosts(s, dir)),
-    "q_idn_hosts_uts46" -> ((s, dir) => idnHostsUts46(s, dir)),
-    "q_idn_hosts_strict" -> ((s, dir) => idnHostsStrict(s, dir)),
-    "q_pct_encode" -> ((s, dir) => pctEncoded(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_url_canonical" -> canonicalOracle,
-    "q_pct_normalize" -> pctOracle,
-    "q_idn_hosts" -> idnOracle,
-    "q_idn_hosts_uts46" -> idnUts46Oracle,
-    "q_idn_hosts_strict" -> idnStrictOracle,
-    "q_pct_encode" -> pctEncodeOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_url_canonical" -> Query((s, dir) => canonicalUrls(s, dir), canonicalOracle),
+    "q_pct_normalize" -> Query((s, dir) => pctNormalized(s, dir), pctOracle),
+    "q_idn_hosts" -> Query((s, dir) => idnHosts(s, dir), idnOracle),
+    "q_idn_hosts_uts46" -> Query((s, dir) => idnHostsUts46(s, dir), idnUts46Oracle),
+    "q_idn_hosts_strict" -> Query((s, dir) => idnHostsStrict(s, dir), idnStrictOracle),
+    "q_pct_encode" -> Query((s, dir) => pctEncoded(s, dir), pctEncodeOracle)
+  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Chat-template RENDERING with loss-mask spans — the last hop before
   * tokenizing supervised fine-tuning data: a (conv_id, turn_idx, role,
@@ -137,11 +137,8 @@ object ChatTemplate {
     plantMessages(graft.ops.ScaleOps.widen(Tables.documents(s, dir))
       .select(col("doc_id")))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_chat_render" -> ((s, dir) => render(planted(s, dir))),
-    "q_chat_loss_spans" -> ((s, dir) => lossSpans(planted(s, dir))))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_chat_render" -> renderOracle,
-    "q_chat_loss_spans" -> lossSpansOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_chat_render" -> Query((s, dir) => render(planted(s, dir)), renderOracle),
+    "q_chat_loss_spans" -> Query((s, dir) => lossSpans(planted(s, dir)), lossSpansOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Sliding-window document chunking — the split that feeds a
   * fixed-context model or an embedding indexer: each document becomes
@@ -76,9 +76,7 @@ object Chunker {
        |FROM e""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_chunk_overlap" -> ((sp, dir) => chunks(sp, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_chunk_overlap" -> chunksOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_chunk_overlap" -> Query((sp, dir) => chunks(sp, dir), chunksOracle)
+  )
 }

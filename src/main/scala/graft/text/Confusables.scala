@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Unicode confusable skeletons and IDN homograph detection — the
   * security screen next to X151's Punycode layer: `pаypаl.com` with
@@ -100,9 +100,7 @@ object Confusables {
        |FROM folded""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_confusable_hosts" -> ((s, dir) => screened(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_confusable_hosts" -> screenedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_confusable_hosts" -> Query((s, dir) => screened(s, dir), screenedOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.dedup.Dedup
 
 /** Benchmark decontamination — the training-data hygiene step every LLM
@@ -132,15 +132,10 @@ object Contamination {
       .withColumn("contaminated", col("n_hits") > 0)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_decontaminate" -> ((s, dir) => contamination(s, dir)),
-    "q_decontaminate_bloom" -> ((s, dir) => bloomContamination(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_decontaminate" -> oracle,
+  def queries: Seq[(String, Query)] = Seq(
+    "q_decontaminate" -> Query((s, dir) => contamination(s, dir), oracle),
     // the bloom path is exact (no false negatives + exact verify join),
     // so the SAME oracle gates it
-    "q_decontaminate_bloom" -> oracle
+    "q_decontaminate_bloom" -> Query((s, dir) => bloomContamination(s, dir), oracle)
   )
 }

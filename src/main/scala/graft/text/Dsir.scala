@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** DSIR-style importance weighting for data selection (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling"): score
@@ -174,13 +174,8 @@ object Dsir {
        |WHERE weight_bits >= threshold""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dsir_weights" -> ((s, dir) => importanceWeights(s, dir)),
-    "q_dsir_select" -> ((s, dir) => selectTop(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_dsir_weights" -> importanceWeightsOracle,
-    "q_dsir_select" -> selectTopOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_dsir_weights" -> Query((s, dir) => importanceWeights(s, dir), importanceWeightsOracle),
+    "q_dsir_select" -> Query((s, dir) => selectTop(s, dir), selectTopOracle)
   )
 }

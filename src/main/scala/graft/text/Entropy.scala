@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Character-entropy garbage triage (X222) — the word-free quality
   * signal that catches exactly the inputs word-level filters (X9/X35)
@@ -106,9 +106,7 @@ object Entropy {
        |FROM ent WHERE n > 0""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_char_entropy" -> ((s, dir) => report(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_char_entropy" -> oracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_char_entropy" -> Query((s, dir) => report(s, dir), oracle)
+  )
 }

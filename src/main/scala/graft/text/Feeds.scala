@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** RSS 2.0 / Atom 1.0 feed extraction — the OTHER discovery source a
   * crawl frontier follows besides sitemaps ([[Sitemaps]]): blogs and
@@ -228,11 +228,8 @@ object Feeds {
        |  CASE WHEN doc_id % 4 = 1 THEN 'atom' ELSE 'rss' END AS kind
        |FROM documents WHERE doc_id % 4 <> 3""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_feed_entries" -> ((s, dir) => extracted(s, dir)),
-    "q_feed_discovery" -> ((s, dir) => autodiscovered(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_feed_entries" -> extractedOracle,
-    "q_feed_discovery" -> autodiscoveredOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_feed_entries" -> Query((s, dir) => extracted(s, dir), extractedOracle),
+    "q_feed_discovery" -> Query((s, dir) => autodiscovered(s, dir), autodiscoveredOracle)
+  )
 }

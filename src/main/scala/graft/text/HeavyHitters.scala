@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Exact corpus heavy hitters WITHOUT a vocabulary-sized shuffle — the
   * Misra-Gries two-pass discipline (Misra & Gries 1982; the MapReduce
@@ -98,11 +98,7 @@ object HeavyHitters {
        |ORDER BY cnt DESC, term""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_heavy_hitters" -> ((s, dir) => heavyTerms(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_heavy_hitters" -> heavyTermsOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_heavy_hitters" -> Query((s, dir) => heavyTerms(s, dir), heavyTermsOracle)
   )
 }

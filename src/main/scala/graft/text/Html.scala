@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** HTML → text extraction — the step BEFORE every text filter in a
   * web-corpus pipeline (CommonCrawl WARC → clean text): strip comments,
@@ -122,11 +122,7 @@ object Html {
        |  FROM ($plantHtmlSql)
        |)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_html_extract" -> ((s, dir) => extraction(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_html_extract" -> oracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_html_extract" -> Query((s, dir) => extraction(s, dir), oracle)
   )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** HTML table extraction — tables are their own training-data modality
   * (table-QA, structured pretraining corpora like those behind
@@ -261,13 +261,9 @@ object HtmlTables {
        |  string_agg(part, chr(10) ORDER BY row, pidx) AS md
        |FROM parts GROUP BY doc_id, tbl""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_html_tables" -> ((s, dir) => extracted(s, dir)),
-    "q_html_tables_nested" -> ((s, dir) => extractedNested(s, dir)),
-    "q_table_markdown" -> ((s, dir) => extractedMarkdown(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_html_tables" -> extractedOracle,
-    "q_html_tables_nested" -> extractedNestedOracle,
-    "q_table_markdown" -> markdownOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_html_tables" -> Query((s, dir) => extracted(s, dir), extractedOracle),
+    "q_html_tables_nested" -> Query((s, dir) => extractedNested(s, dir), extractedNestedOracle),
+    "q_table_markdown" -> Query((s, dir) => extractedMarkdown(s, dir), markdownOracle)
+  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** E14 — the ES keyword normalizer (`lowercase` + `asciifolding`,
   * `sql_to_es_etl.py:102,111-120`) re-expressed as a native expression so
@@ -56,15 +56,10 @@ object Keyword {
         keywordNormalize(col("c_name")).as("name_kw"),
         keywordNormalize(col("c_mktsegment")).as("segment_kw"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_keyword_normalize" -> ((s, dir) => keywordColumns(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_keyword_normalize" ->
-      s"""SELECT c_custkey,
+  def queries: Seq[(String, Query)] = Seq(
+    "q_keyword_normalize" -> Query((s, dir) => keywordColumns(s, dir), s"""SELECT c_custkey,
          |  ${keywordNormalizeSql("c_name")} AS name_kw,
          |  ${keywordNormalizeSql("c_mktsegment")} AS segment_kw
-         |FROM customer""".stripMargin
+         |FROM customer""".stripMargin)
   )
 }

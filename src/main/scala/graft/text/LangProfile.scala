@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Profile-based language identification — the CLD/Cavnar-Trenkle
   * family done relationally, replacing guesswork with COUNTING: X9's
@@ -176,11 +176,8 @@ object LangProfile {
        |FROM documents""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_lang_profile_model" -> ((s, dir) => plantedProfiles(s, dir)),
-    "q_lang_profile" -> ((s, dir) => plantedClassify(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_lang_profile_model" -> profilesOracle,
-    "q_lang_profile" -> classifyOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_lang_profile_model" -> Query((s, dir) => plantedProfiles(s, dir), profilesOracle),
+    "q_lang_profile" -> Query((s, dir) => plantedClassify(s, dir), classifyOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Relative-link resolution over the corpus (see
   * [[graft.plans.ResolveUrl]]): each document contributes a planted
@@ -64,9 +64,7 @@ object Links {
        |  END AS resolved
        |FROM documents""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_link_resolve" -> ((s, dir) => resolvedLinks(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_link_resolve" -> linksOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_link_resolve" -> Query((s, dir) => resolvedLinks(s, dir), linksOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Mojibake repair gate (X221) — the fixture/oracle wrapper around
   * [[graft.plans.FixMojibake]]. Six vectors, one corruption class
@@ -65,9 +65,7 @@ object Mojibake {
        |FROM documents""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_fix_mojibake" -> ((s, dir) => repaired(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_fix_mojibake" -> oracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_fix_mojibake" -> Query((s, dir) => repaired(s, dir), oracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Training-OBJECTIVE transforms — the last hop before tokenization in
   * a real pretraining pipeline, where documents become (input, target)
@@ -177,11 +177,8 @@ object Objectives {
     graft.ops.ScaleOps.widen(Tables.documents(s, dir))
       .select(col("doc_id"), col("text"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_span_corruption" -> ((s, dir) => spanCorrupt(widened(s, dir))),
-    "q_fim" -> ((s, dir) => fim(widened(s, dir))))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_span_corruption" -> spanCorruptOracle,
-    "q_fim" -> fimOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_span_corruption" -> Query((s, dir) => spanCorrupt(widened(s, dir)), spanCorruptOracle),
+    "q_fim" -> Query((s, dir) => fim(widened(s, dir)), fimOracle)
+  )
 }

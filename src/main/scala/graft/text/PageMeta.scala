@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Page-metadata extraction — the fields a corpus keeps NEXT TO the
   * body text: `<title>`, the `description` meta, and the OpenGraph
@@ -162,11 +162,8 @@ object PageMeta {
        |  FROM documents WHERE doc_id % 4 = 1
        |) t(doc_id, lang)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_page_meta" -> ((s, dir) => extracted(s, dir)),
-    "q_hreflang" -> ((s, dir) => hreflangExtracted(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_page_meta" -> extractedOracle,
-    "q_hreflang" -> hreflangOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_page_meta" -> Query((s, dir) => extracted(s, dir), extractedOracle),
+    "q_hreflang" -> Query((s, dir) => hreflangExtracted(s, dir), hreflangOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Page-level robots directives — the opt-out layer a training-data
   * pipeline must respect AFTER robots.txt (X116) admitted the fetch:
@@ -113,9 +113,7 @@ object PageRobots {
        |  CAST(CASE doc_id % 5 WHEN 2 THEN 2 WHEN 4 THEN 0 ELSE 1 END AS INTEGER) AS channels
        |FROM documents""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_page_robots" -> ((s, dir) => report(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_page_robots" -> reportOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_page_robots" -> Query((s, dir) => report(s, dir), reportOracle)
+  )
 }

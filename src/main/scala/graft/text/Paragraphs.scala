@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Corpus-wide paragraph-level exact dedup — the Dolma/RefinedWeb step
   * between document dedup and line-level boilerplate (X39): navigation
@@ -99,9 +99,7 @@ object Paragraphs {
        |    chr(10) || chr(10) ORDER BY idx), '') AS clean_text
        |FROM ranked GROUP BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_para_dedup" -> ((s, dir) => deduped(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_para_dedup" -> dedupedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_para_dedup" -> Query((s, dir) => deduped(s, dir), dedupedOracle)
+  )
 }

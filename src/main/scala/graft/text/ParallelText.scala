@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Parallel-text pair extraction over hreflang clusters (the step that
   * turns [[PageMeta.hreflang]]'s X163 signal into translation training
@@ -134,9 +134,7 @@ object ParallelText {
        |  repeat(CASE lang_b WHEN 'de' THEN 'd' ELSE 'f' END, blen) AS seg_b
        |FROM beads""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_hreflang_align" -> ((s, dir) => hreflangAligned(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_hreflang_align" -> hreflangAlignedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_hreflang_align" -> Query((s, dir) => hreflangAligned(s, dir), hreflangAlignedOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Phrase (collocation) building — the `build_bi` / `build_tri` capability
   * the reference's `DocPreProcess(..., build_bi=False, build_tri=False)`
@@ -283,15 +283,9 @@ object Phrases {
        |${modelCte("out1", "model2")}, ${mergeCte("out1", "model2", "out2")}
        |SELECT doc_id, CAST(pos AS BIGINT) AS pos, tok AS term FROM out2""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_phrase_bigrams" -> ((s, dir) => bigramModel(s, dir)),
-    "q_phrase_apply" -> ((s, dir) => applyBigrams(s, dir)),
-    "q_phrase_trigrams" -> ((s, dir) => applyTrigrams(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_phrase_bigrams" -> bigramModelOracle,
-    "q_phrase_apply" -> applyBigramsOracle,
-    "q_phrase_trigrams" -> applyTrigramsOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_phrase_bigrams" -> Query((s, dir) => bigramModel(s, dir), bigramModelOracle),
+    "q_phrase_apply" -> Query((s, dir) => applyBigrams(s, dir), applyBigramsOracle),
+    "q_phrase_trigrams" -> Query((s, dir) => applyTrigrams(s, dir), applyTrigramsOracle)
   )
 }

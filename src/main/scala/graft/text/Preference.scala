@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Preference-pair assembly (X225) — the prep step between "rated
   * completions" and a DPO/RLHF trainer: per prompt, the
@@ -94,9 +94,7 @@ object Preference {
        |WHERE b.chosen_rating > w.rejected_rating""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_preference_pairs" -> ((s, dir) => pairs(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_preference_pairs" -> oracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_preference_pairs" -> Query((s, dir) => pairs(s, dir), oracle)
+  )
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Positional proximity scoring — the smallest token window containing
   * ALL query terms, per document. BM25 (X97) ranks by term statistics
@@ -82,9 +82,7 @@ object Proximity {
        |GROUP BY doc_id""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_min_window" -> ((s, dir) => minWindow(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_min_window" -> minWindowOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_min_window" -> Query((s, dir) => minWindow(s, dir), minWindowOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Linkage-preserving PII PSEUDONYMIZATION (X194) — the upgrade over
   * X38's flat redaction that analytics teams actually need: every
@@ -96,11 +96,8 @@ object Pseudonym {
        |FROM p WHERE email IS NOT NULL
        |GROUP BY email""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_pseudonym_scrub" -> ((s, dir) => scrubbed(s, dir)),
-    "q_pseudonym_vault" -> ((s, dir) => vault(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_pseudonym_scrub" -> scrubbedOracle,
-    "q_pseudonym_vault" -> vaultOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_pseudonym_scrub" -> Query((s, dir) => scrubbed(s, dir), scrubbedOracle),
+    "q_pseudonym_vault" -> Query((s, dir) => vault(s, dir), vaultOracle)
+  )
 }

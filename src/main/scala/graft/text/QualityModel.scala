@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.sim.DocEmbedding
 
 /** Model-based quality filtering — the linear-classifier scoring step the
@@ -116,11 +116,7 @@ object QualityModel {
        |  ${floorDivSql("1000 * sum_w", "n_toks")} > $KeepThreshold AS keep
        |FROM agg""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_quality_model" -> ((s, dir) => score(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_quality_model" -> scoreOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_quality_model" -> Query((s, dir) => score(s, dir), scoreOracle)
   )
 }

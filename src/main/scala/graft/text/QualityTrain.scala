@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.sim.DocEmbedding
 
 /** NATIVE training for the model-based quality filter — closes the loop
@@ -350,19 +350,13 @@ object QualityTrain {
        |    AS pos_rate_bp
        |FROM bk GROUP BY bucket""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_quality_train" -> ((s, dir) => train(s, dir)),
-    "q_quality_train_score" -> ((s, dir) => trainedScore(s, dir)),
-    "q_quality_train_merged" -> ((s, dir) => trainMerged(s, dir)),
-    "q_quality_eval" -> ((s, dir) => evalHoldout(s, dir)),
-    "q_quality_calibration" -> ((s, dir) => calibration(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_quality_train" -> trainOracle,
-    "q_quality_eval" -> evalHoldoutOracle,
-    "q_quality_calibration" -> calibrationOracle,
-    "q_quality_train_score" -> trainedScoreOracle,
+  def queries: Seq[(String, Query)] = Seq(
+    "q_quality_train" -> Query((s, dir) => train(s, dir), trainOracle),
+    "q_quality_train_score" -> Query((s, dir) => trainedScore(s, dir), trainedScoreOracle),
     // count additivity makes batch-merge training bit-identical to
     // whole-seed training — the merged gate answers to the SAME oracle
-    "q_quality_train_merged" -> trainOracle)
+    "q_quality_train_merged" -> Query((s, dir) => trainMerged(s, dir), trainOracle),
+    "q_quality_eval" -> Query((s, dir) => evalHoldout(s, dir), evalHoldoutOracle),
+    "q_quality_calibration" -> Query((s, dir) => calibration(s, dir), calibrationOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** PII redaction — the scrubbing pass a training-data pipeline runs
   * before text ships: replace e-mail addresses, phone-like digit runs
@@ -96,11 +96,7 @@ object Redact {
        |  CAST(len(regexp_extract_all(text, '$Ipv4Re')) AS BIGINT) AS n_ips
        |FROM ($plantPiiSql)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_redact_pii" -> ((s, dir) => redactionReport(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_redact_pii" -> oracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_redact_pii" -> Query((s, dir) => redactionReport(s, dir), oracle)
   )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Gopher-style repetition quality signals — the "repetitious document"
   * filters (Rae et al. 2021, §A1.1) a training-data pipeline applies
@@ -104,11 +104,7 @@ object Repetition {
        |FROM grams""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_repetition" -> ((s, dir) => repetition(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_repetition" -> oracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_repetition" -> Query((s, dir) => repetition(s, dir), oracle)
   )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Sparse retrieval over the corpus: inverted index, collection term
   * statistics, and BM25 (Robertson/Spärck Jones) ranking — the classic
@@ -390,21 +390,12 @@ object Retrieval {
        |    ' ') AS snippet
        |FROM hv""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_snippets" -> ((s, dir) => snippets(Tables.documents(s, dir))),
-    "q_inverted_postings" -> ((s, dir) => postings(s, dir)),
-    "q_term_stats" -> ((s, dir) => termStats(s, dir)),
-    "q_bm25_topk" -> ((s, dir) => bm25TopK(s, dir)),
-    "q_rm3_terms" -> ((s, dir) => rm3TermsOf(Tables.documents(s, dir))),
-    "q_rm3_topk" -> ((s, dir) => rm3TopKOf(Tables.documents(s, dir)))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_snippets" -> snippetsOracle,
-    "q_inverted_postings" -> postingsOracle,
-    "q_term_stats" -> termStatsOracle,
-    "q_bm25_topk" -> bm25TopKOracle,
-    "q_rm3_terms" -> rm3TermsOracle,
-    "q_rm3_topk" -> rm3TopKOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_snippets" -> Query((s, dir) => snippets(Tables.documents(s, dir)), snippetsOracle),
+    "q_inverted_postings" -> Query((s, dir) => postings(s, dir), postingsOracle),
+    "q_term_stats" -> Query((s, dir) => termStats(s, dir), termStatsOracle),
+    "q_bm25_topk" -> Query((s, dir) => bm25TopK(s, dir), bm25TopKOracle),
+    "q_rm3_terms" -> Query((s, dir) => rm3TermsOf(Tables.documents(s, dir)), rm3TermsOracle),
+    "q_rm3_topk" -> Query((s, dir) => rm3TopKOf(Tables.documents(s, dir)), rm3TopKOracle)
   )
 }

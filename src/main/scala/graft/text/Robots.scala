@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Crawl-politeness evaluation over per-domain robots.txt (see
   * [[graft.plans.RobotsAllowed]]) — the filter a pipeline applies when
@@ -302,13 +302,9 @@ object Robots {
        |FROM r LEFT JOIN (SELECT doc_id, dir FROM matches WHERE rn = 1) m
        |  USING (doc_id)""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_robots_screen" -> ((s, dir) => crawlScreen(s, dir)),
-    "q_robots_meta" -> ((s, dir) => politeness(s, dir)),
-    "q_robots_status" -> ((s, dir) => statusScreen(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_robots_screen" -> robotsOracle,
-    "q_robots_meta" -> politenessOracle,
-    "q_robots_status" -> statusOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_robots_screen" -> Query((s, dir) => crawlScreen(s, dir), robotsOracle),
+    "q_robots_meta" -> Query((s, dir) => politeness(s, dir), politenessOracle),
+    "q_robots_status" -> Query((s, dir) => statusScreen(s, dir), statusOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Unicode script detection — the stage BEFORE language ID in a
   * multilingual corpus (X9's n-gram heuristic assumes Latin text; a
@@ -104,9 +104,7 @@ object Scripts {
        |FROM c""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_script_detect" -> ((s, dir) => detected(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_script_detect" -> detectedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_script_detect" -> Query((s, dir) => detected(s, dir), detectedOracle)
+  )
 }

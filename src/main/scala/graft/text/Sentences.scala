@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Rule-based sentence segmentation — the step between raw text and
   * every sentence-granular operator (Gale–Church alignment, sentence
@@ -188,11 +188,8 @@ object Sentences {
        |  CAST(len_a AS INTEGER) AS len_a, CAST(len_b AS INTEGER) AS len_b
        |FROM beads""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sentence_segments" -> ((s, dir) => planted(s, dir)),
-    "q_sentence_align" -> ((s, dir) => variantAligned(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_sentence_segments" -> plantedOracle,
-    "q_sentence_align" -> variantAlignedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_sentence_segments" -> Query((s, dir) => planted(s, dir), plantedOracle),
+    "q_sentence_align" -> Query((s, dir) => variantAligned(s, dir), variantAlignedOracle)
+  )
 }

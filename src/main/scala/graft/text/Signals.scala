@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Corpus-curation SIGNALS — the two report tables data teams read
   * before touching the knobs the other operators implement:
@@ -174,13 +174,9 @@ object Signals {
        |FROM b LEFT JOIN ref ON ref.h = b.h
        |GROUP BY doc_id""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_novelty" -> ((s, dir) => novelty(widened(s, dir))),
-    "q_novelty_cross" -> ((s, dir) => crossNovelty(widened(s, dir))),
-    "q_vocab_coverage" -> ((s, dir) => vocabCoverage(widened(s, dir))))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_novelty" -> noveltyOracle(),
-    "q_novelty_cross" -> crossNoveltyOracle(),
-    "q_vocab_coverage" -> vocabCoverageOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_novelty" -> Query((s, dir) => novelty(widened(s, dir)), noveltyOracle()),
+    "q_novelty_cross" -> Query((s, dir) => crossNovelty(widened(s, dir)), crossNoveltyOracle()),
+    "q_vocab_coverage" -> Query((s, dir) => vocabCoverage(widened(s, dir)), vocabCoverageOracle)
+  )
 }

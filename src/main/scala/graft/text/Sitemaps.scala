@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Sitemap XML extraction (sitemaps.org protocol) — the document the
   * `robots_meta` Sitemap lines point at, and the crawl frontier's seed
@@ -147,9 +147,7 @@ object Sitemaps {
 
   private def sqlRe(re: String): String = re.replace("'", "''")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_sitemap_extract" -> ((s, dir) => extracted(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_sitemap_extract" -> extractedOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_sitemap_extract" -> Query((s, dir) => extracted(s, dir), extractedOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** The ES `Text(analyzer='english')` twin (`sql_to_es_etl.py:104-105,110`)
   * — the analyzed-text sibling of [[Keyword]] (E14 covers the `Keyword`
@@ -188,11 +188,7 @@ object Stemmer {
        |s4 AS (SELECT doc_id, pos, ${yToISql("t")} AS t FROM s3)
        |SELECT doc_id, CAST(pos AS BIGINT) AS pos, ${derivationalSql("t")} AS term FROM s4""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_english_analyze" -> ((s, dir) => englishTerms(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_english_analyze" -> englishTermsOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_english_analyze" -> Query((s, dir) => englishTerms(s, dir), englishTermsOracle)
   )
 }

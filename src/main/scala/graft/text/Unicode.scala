@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** Unicode NFC normalization over the corpus — see
   * [[graft.plans.NfcNormalize]]. The gate plants the canonical NFC
@@ -70,9 +70,7 @@ object Unicode {
        |  CAST(length(nfc_normalize(raw)) AS INTEGER) AS n_nfc
        |FROM planted""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_nfc_normalize" -> ((s, dir) => nfcNormalized(s, dir)))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_nfc_normalize" -> nfcOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_nfc_normalize" -> Query((s, dir) => nfcNormalized(s, dir), nfcOracle)
+  )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.plans.UnigramSegment
 
 /** Unigram-LM subword tokenization (SentencePiece's model family, Kudo
@@ -162,11 +162,7 @@ object Unigram {
        |FROM res""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_unigram_segment" -> ((s, dir) => segmentWords(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_unigram_segment" -> segmentOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_unigram_segment" -> Query((s, dir) => segmentWords(s, dir), segmentOracle)
   )
 }

@@ -3,7 +3,7 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 
 /** URL extraction and the outlink/domain layer of a web-corpus pipeline:
   * pull URLs out of document text, split host and registrable domain,
@@ -224,13 +224,8 @@ object Urls {
        |  count(*) AS n_links
        |FROM ($extractedSql) GROUP BY domain""".stripMargin
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_url_extract" -> ((s, dir) => extracted(s, dir)),
-    "q_url_indegree" -> ((s, dir) => domainInDegree(s, dir))
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "q_url_extract" -> extractedOracle,
-    "q_url_indegree" -> inDegreeOracle
+  def queries: Seq[(String, Query)] = Seq(
+    "q_url_extract" -> Query((s, dir) => extracted(s, dir), extractedOracle),
+    "q_url_indegree" -> Query((s, dir) => domainInDegree(s, dir), inDegreeOracle)
   )
 }

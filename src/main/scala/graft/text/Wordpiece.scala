@@ -1,9 +1,9 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Query, Tables}
 import graft.plans.WordpieceEncode
 
 /** WordPiece tokenization (X215) — the BERT tokenizer, completing the
@@ -175,10 +175,9 @@ object Wordpiece {
        |FROM s${WordpieceEncode.MaxWordLen}""".stripMargin
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_wordpiece" -> ((s, dir) => encodeWords(
-      graft.ops.ScaleOps.widen(Tables.documents(s, dir)))))
-
-  def oracleSql: Map[String, String] = Map(
-    "q_wordpiece" -> encodeOracle)
+  def queries: Seq[(String, Query)] = Seq(
+    "q_wordpiece" -> Query((s, dir) => encodeWords(
+      graft.ops.ScaleOps.widen(Tables.documents(s, dir))),
+      encodeOracle)
+  )
 }

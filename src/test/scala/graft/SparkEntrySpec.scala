@@ -1,8 +1,8 @@
 package graft
 
-/** Contract meta-tests for the driver interface: a query without an oracle
-  * silently downgrades to a rows-only check, and an empty result can mask
-  * a broken predicate — both are regressions this suite turns loud.
+/** Contract meta-tests for the driver interface: a blank oracle silently
+  * downgrades to a rows-only check, and an empty result can mask a broken
+  * predicate — both are regressions this suite turns loud.
   */
 class SparkEntrySpec extends SparkSuite {
 
@@ -43,12 +43,7 @@ class SparkEntrySpec extends SparkSuite {
     "q_warc_erasure" -> "writes a WARC archive, then reads and erases from it",
     "q_ann_recall_pq" -> "builds and writes the IVF-PQ index, then reads it back",
     "q_similarity_ivfpq_incremental" -> "builds, appends to and reads back the IVF-PQ index",
-    "q_similarity_ivfpq_apply" -> "reads back the materialized IVF-PQ index",
-    "q_dedup_apply" -> "reads back the materialized word-pair components",
-    "q_dedup_clusters" -> "reads back the materialized word-pair components",
-    "q_dedup_rep_quality" -> "reads back the materialized word-pair components",
-    "q_dedup_rep_source" -> "reads back the materialized word-pair components",
-    "q_dedup_report" -> "reads back the materialized word-pair components")
+    "q_dedup_apply" -> "first in name order, so it builds and writes the word-pair components")
 
   /** The float and decimal columns anywhere inside `dt`, as paths. */
   private def hazards(dt: org.apache.spark.sql.types.DataType, path: String): Seq[String] = {
@@ -75,6 +70,12 @@ class SparkEntrySpec extends SparkSuite {
     spark.catalog.clearCache()
     // a fixture's schema is resolved once per session, not per build
     fixtureTables.foreach(Tables.table(spark, Sf, _))
+    // a checkpointed table is written once per JVM, by whichever build
+    // asks first: fresh bases make that a query of this sweep, in name
+    // order, whatever other suites in the JVM materialized before
+    val checkpointBases = Seq(dedup.Dedup.PairTable.DirConf, sim.Similarity.VecIndex.DirConf)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-sweep-checkpoints")
+    checkpointBases.foreach(k => spark.conf.set(k, s"file:$tmp/$k"))
     val counter = new JobCounter(spark)
     try {
       val swept = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
@@ -101,11 +102,17 @@ class SparkEntrySpec extends SparkSuite {
       swept.map { case (name, r) =>
         name -> r.map(_.copy(buildJobs = counter.jobs(s"build/$name")))
       }
-    } finally counter.close()
+    } finally {
+      counter.close()
+      checkpointBases.foreach(spark.conf.unset)
+    }
   }
 
-  test("every registered query has a matching oracle (and no orphan oracles)") {
-    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet)
+  test("every oracle is non-blank SQL") {
+    val bad = SparkEntry.registry.toSeq.sortBy(_._1).collect {
+      case (name, q) if !q.oracleSql.trim.toUpperCase.matches("(?s)(SELECT|WITH)\\b.*") => name
+    }
+    assert(bad.isEmpty, s"oracles that are blank or not a SELECT/WITH query: ${bad.mkString(", ")}")
   }
 
   test("entry() returns rows (driver smoke contract)") {
@@ -190,17 +197,28 @@ class SparkEntrySpec extends SparkSuite {
   }
 
   test("query names are unique across module registries (no silent overwrite)") {
-    // Map ++ would mask a duplicate key; recompute with collision detection
-    val perModule = Seq(
-      graft.ops.SrData.queries, graft.ops.Relational.queries,
-      graft.text.Analysis.queries, graft.pipelines.Preprocess.queries,
-      graft.pipelines.DistinctUpsert.queries, graft.dedup.Dedup.queries,
-      graft.sim.Similarity.queries, graft.ops.Events.queries,
-      graft.text.Keyword.queries, graft.ops.AsofJoin.queries,
-      graft.text.Stemmer.queries, graft.text.Phrases.queries,
-      graft.sim.DocEmbedding.queries,
-      graft.multimodal.Multimodal.queries)
-    val all = perModule.flatMap(_.keys)
-    assert(all.size === all.distinct.size, "duplicate query name across modules")
+    // the union throws on a name registered twice, within one module or
+    // across two, so the real registry building at all proves uniqueness
+    assert(SparkEntry.registry.nonEmpty)
+    val q = Query((s, dir) => Tables.documents(s, dir), "SELECT 1")
+    val within = intercept[IllegalArgumentException](
+      SparkEntry.union(Seq(Seq("q_a" -> q, "q_b" -> q, "q_a" -> q))))
+    assert(within.getMessage.contains("q_a"))
+    val across = intercept[IllegalArgumentException](
+      SparkEntry.union(Seq(Seq("q_a" -> q, "q_b" -> q), Seq("q_c" -> q, "q_b" -> q))))
+    assert(across.getMessage.contains("q_b") && !across.getMessage.contains("q_a"))
+    assert(SparkEntry.union(Seq(Seq("q_a" -> q), Seq("q_b" -> q))).keySet === Set("q_a", "q_b"))
+  }
+
+  test("every checkpointed table reads back with the schema a bare read infers") {
+    // the sweep builds every query that materializes a table
+    sweep
+    val written = sources.Checkpoints.writtenSchemas
+    assert(written.nonEmpty, "the sweep materialized no table")
+    val differ = written.toSeq.sortBy(_._1).collect {
+      case (p, schema) if spark.read.parquet(p).schema != schema =>
+        s"$p: stored $schema, inferred ${spark.read.parquet(p).schema}"
+    }
+    assert(differ.isEmpty, s"read-back schemas that differ:\n  ${differ.mkString("\n  ")}")
   }
 }
