@@ -49,16 +49,21 @@ object Batching {
     */
   def batches(spark: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("bucket")).orderBy(col("ord"), col("doc_id"))
-    sequences(spark, dir)
-      .withColumn("rn", row_number().over(w))
+    report(sequences(spark, dir).withColumn("rn", row_number().over(w)), "rn - 1")
+  }
+
+  /** The per-batch rollup of rows carrying (bucket, n_toks) and their
+    * 0-based in-bucket rank `rank0` (a SQL expression).
+    */
+  private def report(ranked: DataFrame, rank0: String): DataFrame =
+    ranked
       // DIV, not `/`: Spark's `/` on integers answers DOUBLE
-      .withColumn("batch_id", expr(s"(rn - 1) DIV $BatchSize").cast("long"))
+      .withColumn("batch_id", expr(s"($rank0) DIV $BatchSize").cast("long"))
       .groupBy(col("bucket"), col("batch_id"))
       .agg(count(lit(1)).as("n_seqs"),
         max(col("n_toks")).as("max_len"),
         sum(col("n_toks")).as("sum_len"))
       .withColumn("pad_waste", col("n_seqs") * col("max_len") - col("sum_len"))
-  }
 
   /** Hex chars of `ord` keying a shard: 2 → 256 shards per bucket. */
   val ShardHexChars = 2
@@ -69,37 +74,18 @@ object Batching {
     * string and the shard key is its first [[ShardHexChars]] chars —
     * a PREFIX of the primary sort key. Lexicographic order therefore
     * factors: (shard asc, then (ord, doc_id) within shard) IS the
-    * global (ord, doc_id) order, so a shard-local `row_number` plus
-    * the count of all earlier shards in the bucket reconstructs the
-    * global rank exactly. `row_number` runs on (bucket, shard) — 256
-    * parallel tasks per bucket instead of one — and the offset table
-    * is ≤ buckets×256 tiny rows: aggregated map-side, windowed on the
-    * driver-adjacent single partition it fits in, broadcast back.
-    * No straggler survives: every exchange key has ~1/256 of a
-    * bucket.
+    * global (ord, doc_id) order, so [[Prefix.before]] — a shard-local
+    * running count plus the count of all earlier shards in the bucket —
+    * gives the global rank exactly. The local window runs on (bucket,
+    * shard) — 256 parallel tasks per bucket instead of one — and the
+    * start table is ≤ buckets×256 tiny rows. No straggler survives:
+    * every exchange key has ~1/256 of a bucket.
     */
   def batchesSharded(spark: SparkSession, dir: String): DataFrame = {
     val seqs = sequences(spark, dir)
       .withColumn("shard",
         conv(substring(col("ord"), 1, ShardHexChars), 16, 10).cast("long"))
-    val wLocal = Window.partitionBy(col("bucket"), col("shard"))
-      .orderBy(col("ord"), col("doc_id"))
-    val wOff = Window.partitionBy(col("bucket")).orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = seqs
-      .groupBy(col("bucket"), col("shard")).agg(count(lit(1)).as("cnt"))
-      .withColumn("off", coalesce(sum(col("cnt")).over(wOff), lit(0L)))
-      .select(col("bucket"), col("shard"), col("off"))
-    seqs
-      .withColumn("lrn", row_number().over(wLocal).cast("long"))
-      .join(broadcast(offsets), Seq("bucket", "shard"))
-      .withColumn("rn", col("off") + col("lrn"))
-      .withColumn("batch_id", expr(s"(rn - 1) DIV $BatchSize").cast("long"))
-      .groupBy(col("bucket"), col("batch_id"))
-      .agg(count(lit(1)).as("n_seqs"),
-        max(col("n_toks")).as("max_len"),
-        sum(col("n_toks")).as("sum_len"))
-      .withColumn("pad_waste", col("n_seqs") * col("max_len") - col("sum_len"))
+    report(Prefix.before(seqs, Seq("bucket"), "shard", Seq("ord", "doc_id"), lit(1L)), "before")
   }
 
   def oracle: String =

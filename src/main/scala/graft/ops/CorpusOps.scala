@@ -299,37 +299,20 @@ object CorpusOps {
     * both engines, deterministic under ties (equal ranks always carry
     * equal values inside a tie run).
     *
-    * Scale shape — two-pass rank selection, NOT a per-language sort. A
-    * `row_number` window partitioned only by `lang` funnels the whole
-    * corpus through one task per language (~20 TB/task at 100 TB with a
-    * handful of languages). Instead:
-    *   pass 1: corpus-wide hash aggregate to a `(lang, n_tokens) → k`
-    *     histogram — fully parallel, output is #langs × #distinct-lengths
-    *     rows (bounded by max document length, independent of corpus size);
-    *   pass 2: cumulative sum over the TINY histogram; the value at rank
-    *     `r` of the sorted multiset is the smallest length whose
-    *     cumulative count reaches `r` — algebraically identical to the
-    *     `row_number`-based `percentile_disc` definition the DuckDB oracle
-    *     still uses, so the gate proves the equivalence.
+    * Scale shape — [[Quantiles.grouped]]' histogram selection, NOT a
+    * per-language sort. A `row_number` window partitioned only by `lang`
+    * funnels the whole corpus through one task per language (~20 TB/task
+    * at 100 TB with a handful of languages); the histogram is #langs ×
+    * #distinct-lengths rows, bounded by max document length. Its integer
+    * rank test `100·cum ≥ p·cnt` is `cum ≥ ceil(cnt·p/100)` — the
+    * `row_number`-based `percentile_disc` definition the DuckDB oracle
+    * still uses, so the gate proves the equivalence.
     */
-  def lengthPercentiles(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val t = Tables.documents(spark, dir)
-      .select(col("lang"), graft.text.Analysis.wsTokenCount(col("text")).as("n_tokens"))
-    val hist = t.groupBy(col("lang"), col("n_tokens")).agg(count(lit(1)).as("k"))
-    val totals = hist.groupBy(col("lang")).agg(sum(col("k")).as("cnt"))
-    val w = Window.partitionBy(col("lang")).orderBy(col("n_tokens"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist.withColumn("cum", sum(col("k")).over(w)).join(totals, "lang")
-    def rankOf(pct: Int) = expr(s"(cnt * $pct + 99) div 100") // ceil(cnt*pct/100), integral
-    def valueAt(pct: Int) = min(when(col("cum") >= rankOf(pct), col("n_tokens")))
-    cum.groupBy(col("lang"))
-      .agg(
-        max(col("cnt")).as("n_docs"),
-        valueAt(50).as("p50_tokens"),
-        valueAt(90).as("p90_tokens"),
-        valueAt(99).as("p99_tokens"))
-  }
+  def lengthPercentiles(spark: SparkSession, dir: String): DataFrame =
+    Quantiles.grouped(Tables.documents(spark, dir), col("lang"),
+        graft.text.Analysis.wsTokenCount(col("text")))
+      .select(col("k").as("lang"), col("n_rows").as("n_docs"),
+        col("p50").as("p50_tokens"), col("p90").as("p90_tokens"), col("p99").as("p99_tokens"))
 
   def lengthPercentilesOracle: String = {
     val nTok = s"CAST(len(${TextOps.tokenizeSql("text")}) AS BIGINT)"
@@ -372,28 +355,21 @@ object CorpusOps {
     * Scale shape — the naive form is `row_number() OVER (PARTITION BY
     * source ORDER BY h)`, ONE task per source: a 100 TB crawl's largest
     * domain funnels through a single executor (the same W1 pathology
-    * [[lengthPercentiles]] avoids). This is the two-pass exact-rank
-    * rewrite instead:
-    *   1. bucket = first byte of the hash ([[CapBuckets]] sub-buckets —
-    *      the bucket is a PREFIX of the order key, so bucket order refines
-    *      global order);
-    *   2. per-(source, bucket) counts + a running sum per source over the
-    *      tiny counts table → each bucket's global starting rank;
-    *   3. buckets entirely under the cap are kept with NO window; buckets
-    *      entirely past it are dropped with no window; only the ONE
-    *      boundary bucket per source ranks its rows, in a window
-    *      partitioned by (source, bucket) — 1/[[CapBuckets]] of the
-    *      domain per task instead of the whole domain.
+    * [[lengthPercentiles]] avoids). Instead the first byte of the hash
+    * ([[CapBuckets]] sub-buckets, a PREFIX of the order key) is a shard
+    * for [[Prefix.shardStarts]], which gives each bucket's global
+    * starting rank from the tiny per-(source, bucket) counts table.
+    * Buckets entirely under the cap are kept with NO window; buckets
+    * entirely past it are dropped with no window; only the ONE boundary
+    * bucket per source ranks its rows, in a window partitioned by
+    * (source, bucket) — 1/[[CapBuckets]] of the domain per task instead
+    * of the whole domain.
     */
   def capPerSource(docs: DataFrame, cap: Int = SourceCap): DataFrame = {
     val d = docs.select(col("doc_id"), col("source"),
         md5(concat(col("doc_id").cast("string"), lit(CapSalt))).as("h"))
       .withColumn("b", conv(substring(col("h"), 1, 2), 16, 10).cast("int"))
-    val cnts = d.groupBy(col("source"), col("b")).agg(count(lit(1)).as("k"))
-    val wStart = Window.partitionBy(col("source")).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val starts = cnts.withColumn("start", coalesce(sum(col("k")).over(wStart), lit(0L)))
-    val joined = d.join(starts, Seq("source", "b"))
+    val joined = d.join(Prefix.shardStarts(d, Seq("source"), "b", lit(1L)), Seq("source", "b"))
     val keptFull = joined.filter(col("start") + col("k") <= cap)
     val boundary = joined.filter(col("start") < cap && col("start") + col("k") > cap)
     val wB = Window.partitionBy(col("source"), col("b")).orderBy(col("h"), col("doc_id"))

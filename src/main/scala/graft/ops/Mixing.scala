@@ -29,15 +29,14 @@ import graft.{Query, Tables}
   *
   * Scale shape: the naive form is one `SUM(toks) OVER (PARTITION BY
   * source ORDER BY h)` window — a 100 TB corpus's largest source
-  * funnels through ONE task. This is the [[CorpusOps.capPerSource]]
-  * two-pass exact rewrite for token prefix sums instead: hash-prefix
-  * sub-buckets refine the order, per-(source, bucket) token sums give
-  * each bucket's starting offset, buckets entirely inside the quota
-  * are kept with NO window, buckets entirely past it are dropped, and
-  * only the ONE boundary bucket per source runs a window — partitioned
-  * by (source, bucket), 1/[[CorpusOps.CapBuckets]] of the source per
-  * task. The oracle states the single-window SPEC; the gate proves the
-  * bucketed plan equals it.
+  * funnels through ONE task. Instead, as in [[CorpusOps.capPerSource]],
+  * hash-prefix sub-buckets are shards for [[Prefix.shardStarts]], whose
+  * per-(source, bucket) token sums give each bucket's starting offset;
+  * buckets entirely inside the quota are kept with NO window, buckets
+  * entirely past it are dropped, and only the ONE boundary bucket per
+  * source runs a window — partitioned by (source, bucket),
+  * 1/[[CorpusOps.CapBuckets]] of the source per task. The oracle states
+  * the single-window SPEC; the gate proves the bucketed plan equals it.
   *
   * Reference scope: no mixing surface in the reference; north-star
   * LLM-pipeline machinery.
@@ -100,11 +99,7 @@ object Mixing {
     */
   private def selectUnderQuota(d0: DataFrame, q: DataFrame, key: String): DataFrame = {
     val d = d0.withColumn("b", conv(substring(col("h"), 1, 2), 16, 10).cast("int"))
-    val cnts = d.groupBy(col(key), col("b")).agg(sum(col("toks")).as("k"))
-    val wStart = Window.partitionBy(col(key)).orderBy(col("b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val starts = cnts.withColumn("start", coalesce(sum(col("k")).over(wStart), lit(0L)))
-      .join(broadcast(q), Seq(key))
+    val starts = Prefix.shardStarts(d, Seq(key), "b", col("toks")).join(broadcast(q), Seq(key))
     val joined = d.join(starts, Seq(key, "b"))
     val keptFull = joined.filter(col("start") + col("k") <= col("quota"))
     val boundary = joined.filter(col("start") < col("quota")

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Query, Tables}
@@ -20,24 +19,12 @@ import graft.text.TextOps
   * A global running sum is the classic single-task window trap
   * (`sum().over(Window.orderBy(...))` funnels the corpus through ONE
   * task — the same W1 pathology `Preprocess.withRowNumFaithful`
-  * documents). The scalable shape is the two-pass prefix sum:
-  *
-  *   1. range-repartition by the order key (partitions are then globally
-  *      ordered) and MATERIALIZE the partition id — the persisted narrow
-  *      table ((doc_id, n_tokens, pid); no text) is read by both passes,
-  *      which is a correctness requirement, not a cache: the range
-  *      partitioner's sampled bounds are not guaranteed identical across
-  *      two separate evaluations, and divergent pids between the passes
-  *      would corrupt every offset;
-  *   2. per-partition token totals (≤ #partitions rows) prefix-sum into
-  *      partition offsets — the only ordered window runs over that tiny
-  *      table;
-  *   3. partition-local running sums (window PARTITIONED by pid — every
-  *      partition sums in parallel) + broadcast offsets = the exact
-  *      global `cum_before` for every document.
-  *
-  * Nothing corpus-sized crosses a single task; the result is bit-equal to
-  * the naive global window (the oracle computes exactly that).
+  * documents). Scale shape: [[Prefix]]'s exact ordered prefix over
+  * [[Prefix.rangeShards]] — range-partition by the order key, persist
+  * the partition id on the narrow (doc_id, n_tokens) table, prefix-sum
+  * the per-partition token totals, add partition-local running sums.
+  * Nothing corpus-sized crosses a single task; the result is bit-equal
+  * to the naive global window (the oracle computes exactly that).
   */
 object Packing {
 
@@ -57,37 +44,21 @@ object Packing {
   }
 
   /** Width-agnostic core: exact global running sum of `n_tokens` in
-    * `orderKeys` order (keys must be jointly unique), via the two-pass
-    * prefix sum described above. Input keeps all its columns.
+    * `orderKeys` order (keys must be jointly unique), via [[Prefix]].
+    * Input keeps all its columns.
     */
-  def packOn(df: DataFrame, orderKeys: Seq[String]): DataFrame = {
-    val parts = df.sparkSession.sessionState.conf.numShufflePartitions
-    val keyCols = orderKeys.map(col)
-
-    val ranged = Caches.persist(df.repartitionByRange(parts, keyCols: _*)
-      .withColumn("pid", spark_partition_id()))
-
-    val offs = ranged.groupBy(col("pid")).agg(sum(col("n_tokens")).as("ptot"))
-      .withColumn("poff", coalesce(
-        sum(col("ptot")).over(Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("pid"), col("poff"))
-
-    val wLocal = Window.partitionBy(col("pid")).orderBy(keyCols: _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    ranged.join(broadcast(offs), Seq("pid"))
-      .withColumn("cum_before",
-        col("poff") + coalesce(sum(col("n_tokens")).over(wLocal), lit(0L)))
+  def packOn(df: DataFrame, orderKeys: Seq[String]): DataFrame =
+    Prefix.before(Prefix.rangeShards(df, orderKeys), Nil, "pid", orderKeys, col("n_tokens"))
+      .withColumnRenamed("before", "cum_before")
       .withColumn("seq_id", expr(s"cum_before div $Budget"))
-      .drop("pid", "poff")
-  }
+      .drop("pid")
 
   /** The composed finish line of the training-data pipeline: pack the
     * MIXED corpus ([[CorpusOps.mixCorpus]] epochs) — upsampled copies are
     * ordinary rows by construction, so packing composes with the mixture
     * by widening the order key to (doc_id, epoch). One lazy plan: the
     * mixture's per-row explode, a (doc_id)-keyed join attaching token
-    * counts (no text moves), then the same two-pass prefix sum.
+    * counts (no text moves), then the same exact prefix sum.
     */
   def mixPack(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.ops.ScaleOps.widen(Tables.documents(spark, dir))
@@ -173,7 +144,7 @@ object Packing {
     * would seed every batch with neighboring docs), but the shuffle must
     * be REPRODUCIBLE — so the order key is a salted md5-fold of doc_id
     * (the [[graft.ops.CorpusOps.stratifiedSplit]] key-hash discipline
-    * applied to ordering), not `rand()`. Same two-pass prefix sum,
+    * applied to ordering), not `rand()`. Same exact prefix sum,
     * order keys (h, doc_id) — jointly unique, so the packing is
     * bit-reproducible on any cluster while documents land in
     * hash-shuffled sequence order.

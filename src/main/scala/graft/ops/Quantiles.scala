@@ -115,37 +115,22 @@ object Quantiles {
     groupedSql(
       "SELECT event_type AS k, CAST(floor(value * 100) AS BIGINT) AS v FROM events")
 
-  /** Type-1 median per key via the same histogram selection, as a
-    * (k, m) relation — `cum·2 ≥ n` is the integer form of the p50 rank
-    * test.
-    */
-  private def median(in: DataFrame): DataFrame = {
-    val hist = in.groupBy(col("k"), col("v")).agg(count(lit(1)).as("cnt"))
-    val byV = Window.partitionBy(col("k")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val whole = Window.partitionBy(col("k"))
-    hist.select(col("k"), col("v"),
-        sum(col("cnt")).over(byV).as("cum"),
-        sum(col("cnt")).over(whole).as("n"))
-      .groupBy(col("k"))
-      .agg(min(when(col("cum") * 2 >= col("n"), col("v"))).as("m"))
-  }
-
   /** Robust outlier statistics (X156) — median + MAD (median absolute
     * deviation), the screen quality pipelines use where mean/stddev
     * would let the outliers move their own threshold: per key the
     * type-1 median `m`, `mad = median(|v − m|)`, and the count of rows
     * with `|v − m| > 3·mad`. Exact integers end to end; BOTH medians
-    * run the histogram-selection plan (never a per-group row sort) and
-    * the two model-sized (k, scalar) relations broadcast back to the
-    * row stream.
+    * are [[grouped]]'s p50 (its rank test `cum·100 ≥ n·50` is the
+    * oracle's integer `cum·2 ≥ n`), never a per-group row sort, and the
+    * two model-sized (k, scalar) relations broadcast back to the row
+    * stream.
     */
   def robustStats(rows: DataFrame, key: Column, v: Column): DataFrame = {
     val base = rows.select(key.as("k"), v.cast("long").as("v"))
-    val med = median(base)
+    val med = grouped(base, col("k"), col("v")).select(col("k"), col("p50").as("m"))
     val dev = base.join(broadcast(med), Seq("k"))
       .select(col("k"), abs(col("v") - col("m")).as("v"))
-    val mad = median(dev).withColumnRenamed("m", "mad")
+    val mad = grouped(dev, col("k"), col("v")).select(col("k"), col("p50").as("mad"))
     base.join(broadcast(med), Seq("k")).join(broadcast(mad), Seq("k"))
       .groupBy(col("k"))
       .agg(count(lit(1)).as("n_rows"),

@@ -22,19 +22,21 @@ import graft.text.Canonical
   * running byte offsets per shard.
   *
   * Scale shape — the part that matters at 100 TB:
-  *  - the global order comes from [[Preprocess.withGlobalRowNum]]'s
-  *    scalable path: range-repartition on the sort key + sort within
-  *    partitions + `zipWithIndex` partition offsets. ONE range
-  *    exchange, no single-task window funnel (the faithful
-  *    `row_number() OVER ()` shape would serialize the corpus
-  *    through one task).
+  *  - the global order comes from [[Preprocess.withGlobalRowNum]]:
+  *    [[graft.ops.Prefix]] over range partitions of the sort key — ONE
+  *    range exchange, per-partition counts (the only single-partition
+  *    window, over ≤ #partitions rows), partition-local ranks. No
+  *    single-task window funnel (the faithful `row_number() OVER ()`
+  *    shape would serialize the corpus through one task) and no job at
+  *    build time.
   *  - shard assignment is rank-arithmetic (`(rn-1) DIV rowsPerShard`)
   *    — deterministic, unlike sampling-based range partition ids, so
   *    the oracle can recompute it.
   *  - byte offsets need a cumulative sum WITHIN each shard only —
   *    one hash exchange on shard_id whose window never sees more
-  *    than `rowsPerShard` rows per partition key. Total: one range +
-  *    one hash exchange, both plan-pinned in `CdxIndexSpec`.
+  *    than `rowsPerShard` rows per partition key. The range exchange
+  *    and the totals-only single-partition exchange are plan-pinned in
+  *    `CdxIndexSpec`.
   *
   * The oracle recomputes everything — SURT (string ops), record
   * length (the [[WarcWriter.recordSql]] restatement through DuckDB's

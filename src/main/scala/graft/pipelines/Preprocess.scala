@@ -3,10 +3,10 @@ package graft.pipelines
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.Query
-import graft.ops.{Caches, SrData}
+import graft.ops.{Caches, Prefix, SrData}
 import graft.text.{Normalize, TextOps}
 
 /** The reference's richest pipeline — `preprocess_and_store_parquets.py`
@@ -23,10 +23,10 @@ import graft.text.{Normalize, TextOps}
   *
   *   - Global numbering. Faithful: `row_number()` over a constant
   *     partition key (`:210-212`) — correct but funnels every row through
-  *     ONE task. Scalable: range-repartition on the order key, sort within
-  *     partitions, then `zipWithIndex` (one lightweight count job computes
-  *     per-partition offsets; no single-task funnel). Same numbering
-  *     because the order key is unique.
+  *     ONE task. Scalable: [[graft.ops.Prefix]]'s exact ordered prefix
+  *     over range partitions of the order key (per-partition counts give
+  *     partition offsets; no single-task funnel, no job at build time).
+  *     Same numbering because the order key is unique.
   *   - Chunk gathering. Faithful: per-chunk temp-view SQL range filter +
   *     collect to driver + re-parallelize + unionByName loop
   *     (`:219-240`) — a driver round-trip per chunk. Scalable: one
@@ -75,20 +75,16 @@ object Preprocess {
         row_number().over(Window.partitionBy(col("new_column")).orderBy(col(orderKey))).cast("long"))
       .drop("new_column")                    // P5 ↔ :212
 
-  /** Scalable global numbering: range-repartition by the order key, sort
-    * within partitions, `zipWithIndex`. The range partitioner keeps
-    * partitions globally ordered, so partition-offset + local index IS the
-    * global rank; the only extra cost is zipWithIndex's small count job.
-    * Works at any partition count — no single-task funnel.
+  /** Scalable global numbering: `row_num` (1-based) in `orderKey` order
+    * (unique) as [[Prefix.before]] over [[Prefix.rangeShards]] — the range
+    * partitioner keeps partitions globally ordered, so the partition's
+    * offset plus the local rank IS the global rank. Works at any
+    * partition count — no single-task funnel.
     */
-  def withGlobalRowNum(df: DataFrame, orderKey: String, partitions: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    val parts = if (partitions > 0) partitions else spark.sessionState.conf.numShufflePartitions
-    val sorted = df.repartitionByRange(parts, col(orderKey)).sortWithinPartitions(orderKey)
-    val schema = StructType(sorted.schema.fields :+ StructField("row_num", LongType, nullable = false))
-    val rdd = sorted.rdd.zipWithIndex().map { case (r, i) => Row.fromSeq(r.toSeq :+ (i + 1L)) }
-    spark.createDataFrame(rdd, schema)
-  }
+  def withGlobalRowNum(df: DataFrame, orderKey: String): DataFrame =
+    Prefix.before(Prefix.rangeShards(df, Seq(orderKey)), Nil, "pid", Seq(orderKey), lit(1L))
+      .withColumn("row_num", col("before") + 1L)
+      .drop("pid", "before")
 
   /** chunk_id = (row_num - 1) / chunkSize, integral division (↔ the loop
     * bounds `row_num > i AND row_num <= i + onelakh`, `:219-230`).
@@ -129,12 +125,12 @@ object Preprocess {
     val total = persisted.count()                            // A1 ↔ :205-206
     persisted.createOrReplaceTempView("preprocessed")        // C6 ↔ :216
     val emptySeed = spark.createDataFrame(                   // S7 ↔ :217
-      spark.sparkContext.emptyRDD[Row],
+      java.util.Collections.emptyList[Row](),
       StructType(Seq(
         StructField("chunk_id", LongType, nullable = false),
         StructField("n_docs", LongType, nullable = false),
-        StructField("ids", org.apache.spark.sql.types.StringType),
-        StructField("docs", org.apache.spark.sql.types.StringType))))
+        StructField("ids", StringType),
+        StructField("docs", StringType))))
     val out = (0L until total by chunkSize.toLong).zipWithIndex
       .foldLeft(emptySeed) { case (acc, (lo, chunkIdx)) =>
         val chunk = spark.sql(                               // P9 ↔ :226-230

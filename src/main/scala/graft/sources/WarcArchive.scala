@@ -7,7 +7,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Query, Tables}
-import graft.pipelines.{CdxIndex, CrawlPipeline, Preprocess}
+import graft.ops.Prefix
+import graft.pipelines.{CdxIndex, CrawlPipeline}
 import graft.text.Canonical
 
 /** An on-disk `.warc.gz` archive with a member-granular ERASURE path —
@@ -113,10 +114,12 @@ object WarcArchive {
 
   /** Write the planted archive under `outDir` (replacing any previous
     * one): `shard-NNNNN.warc.gz` member-concatenated shard files plus
-    * the `_index/` parquet. One range exchange for the global SURT
-    * order (the X134 scalable-rank path), then each writer task
-    * streams its shards to the FS — member offsets are recorded from
-    * the true compressed byte counts as they are written.
+    * the `_index/` parquet. The global SURT rank is the X134 path,
+    * [[graft.ops.Prefix]] over range partitions of the sort key (one
+    * range exchange; the persisted range partitions are released once
+    * the archive is written), then each writer task streams its shards to
+    * the FS — member offsets are recorded from the true compressed byte
+    * counts as they are written.
     */
   def writeArchive(spark: SparkSession, dir: String, outDir: String,
                    rowsPerShard: Long = CdxIndex.RowsPerShard): Unit = {
@@ -132,9 +135,10 @@ object WarcArchive {
       .withColumn("member", gz(graft.sources.WarcWriter.record(
         lit("response"), col("canon"), col("t"))))
       .withColumn("digest", sha2(col("t").cast("binary"), 256))
-    val sharded = Preprocess.withGlobalRowNum(
-        rec.select(col("doc_id"), col("ck"), col("surt"), col("member"), col("digest")), "ck")
-      .withColumn("shard_id", expr(s"(row_num - 1) DIV $rowsPerShard"))
+    val ranged = Prefix.rangeShards(
+      rec.select(col("doc_id"), col("ck"), col("surt"), col("member"), col("digest")), Seq("ck"))
+    val sharded = Prefix.before(ranged, Nil, "pid", Seq("ck"), lit(1L))
+      .withColumn("shard_id", expr(s"before DIV $rowsPerShard"))
       .select(col("shard_id"), col("ck"), col("doc_id"), col("surt"),
         col("member"), col("digest"))
     val out = outDir
@@ -173,6 +177,7 @@ object WarcArchive {
       .toDF("shard_id", "doc_id", "surt", "member_offset", "member_bytes", "digest")
     index.write.mode("overwrite").partitionBy("shard_id")
       .parquet(new Path(hp, "_index").toString)
+    ranged.unpersist()
     // the session-shared FileStatusCache has NO TTL by default: a
     // re-written archive at the same path would otherwise serve stale
     // listings (old parquet part names, old shard lengths) to every

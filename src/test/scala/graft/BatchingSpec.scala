@@ -60,12 +60,14 @@ class BatchingSpec extends SparkSuite {
   test("sharded form never funnels a bucket through one window task") {
     val plan = Batching.batchesSharded(spark, Sf)
       .queryExecution.executedPlan.toString
-    // the row_number window must partition by (bucket, shard) — a
-    // bucket-only window would be the straggler this form removes
-    assert(plan.contains("row_number"))
-    val winPart = "windowspecdefinition\\(bucket#\\d+L?,\\s*shard#\\d+L?".r
-    assert(winPart.findFirstIn(plan).isDefined,
-      s"row_number window keyed by (bucket, shard):\n$plan")
+    // the in-bucket running count over (ord, doc_id) must partition by
+    // (bucket, shard) — a bucket-only window would be the straggler this
+    // form removes
+    val local = "windowspecdefinition\\(bucket#\\d+L?,\\s*shard#\\d+L?,\\s*ord#\\d+ ASC".r
+    assert(local.findFirstIn(plan).isDefined,
+      s"running-count window keyed by (bucket, shard):\n$plan")
+    val bucketOnly = "windowspecdefinition\\(bucket#\\d+L?,\\s*ord#".r
+    assert(bucketOnly.findFirstIn(plan).isEmpty, s"no window keyed by bucket alone:\n$plan")
   }
 
   test("one bucket-keyed exchange feeds both the window and the rollup") {

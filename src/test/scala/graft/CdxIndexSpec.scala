@@ -79,14 +79,35 @@ class CdxIndexSpec extends SparkSuite {
     }
   }
 
-  test("plan shape: offsets cost ONE hash exchange; ordering is the range-partition pre-job") {
-    val plan = CdxIndex.index(spark, Sf).queryExecution.executedPlan.toString
-    assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1,
-      s"exactly the shard-offset window exchange:\n$plan")
-    // the global order was produced by withGlobalRowNum's
-    // repartitionByRange + zipWithIndex pre-job; the final plan reads
-    // its RDD — no range exchange (and no single-task window) here
-    assert(!plan.contains("Exchange rangepartitioning"), plan)
-    assert(!plan.contains("Exchange SinglePartition"), plan)
+  test("plan shape: one range exchange, a totals-only SinglePartition") {
+    import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // every node, through AQE wrappers and into the persisted input
+    def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+      case q: QueryStageExec => walk(q.plan)
+      case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+      case _ => p.children.flatMap(walk)
+    })
+    val plan = CdxIndex.index(spark, Sf).queryExecution.executedPlan
+    // the persisted input is read twice (totals and local ranks): one node
+    val exchanges = walk(plan).collect { case e: ShuffleExchangeExec => e }.distinct
+    val ranges = exchanges.filter(_.outputPartitioning.isInstanceOf[RangePartitioning])
+    assert(ranges.size == 1, s"the global order is one range exchange:\n$plan")
+    // every single-partition exchange carries the per-partition totals
+    // (the final aggregate keyed by pid), never a corpus-sized input
+    val singles = exchanges.filter(_.outputPartitioning == SinglePartition)
+    assert(singles.nonEmpty, s"partition offsets window over the totals:\n$plan")
+    singles.foreach { e =>
+      e.child match {
+        case agg: HashAggregateExec =>
+          assert(agg.groupingExpressions.map(_.name) == Seq("pid"), e.toString)
+        case other => fail(s"SinglePartition exchange over ${other.nodeName}:\n$plan")
+      }
+    }
   }
 }

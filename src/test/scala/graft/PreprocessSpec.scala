@@ -33,10 +33,19 @@ class PreprocessSpec extends SparkSuite {
     val b = Preprocess.base(spark, Sf, bucket)
     val faithful = Preprocess.withRowNumFaithful(b, "Incident_Number")
       .select("Incident_Number", "row_num")
-    val scalable = Preprocess.withGlobalRowNum(b, "Incident_Number")
-      .select("Incident_Number", "row_num")
     assert(faithful.count() > 0)
-    assert(faithful.exceptAll(scalable).isEmpty && scalable.exceptAll(faithful).isEmpty)
+    val conf = spark.conf
+    val orig = conf.get("spark.sql.shuffle.partitions")
+    // the range shard count follows the session's shuffle partitions
+    for (parts <- Seq("1", "3", "17", orig)) {
+      try {
+        conf.set("spark.sql.shuffle.partitions", parts)
+        val scalable = Preprocess.withGlobalRowNum(b, "Incident_Number")
+          .select("Incident_Number", "row_num")
+        assert(faithful.exceptAll(scalable).isEmpty && scalable.exceptAll(faithful).isEmpty,
+          s"at $parts partitions")
+      } finally conf.set("spark.sql.shuffle.partitions", orig)
+    }
   }
 
   test("faithful chunked-collect loop equals the one-shuffle groupBy gather") {
@@ -82,8 +91,8 @@ class PreprocessSpec extends SparkSuite {
       case f: CodegenFallback => f.children.flatMap(_.collect { case c if isChain(c) => c })
       case _ => e.children.flatMap(interpretedChains)
     }
-    // q_preprocess_monthly numbers rows through an RDD, so its own plan
-    // starts at the numbered rows; the chain lives in `base`
+    // q_preprocess_monthly persists its range-partitioned input, so its
+    // optimized plan reads that cache as a leaf; the chain lives in `base`
     val frames = Seq(
       "preprocessAllMonths" -> Preprocess.preprocessAllMonths(spark, Sf),
       "q_preprocess_monthly" -> SparkEntry.queries("q_preprocess_monthly")(spark, Sf),

@@ -34,10 +34,6 @@ class SparkEntrySpec extends SparkSuite {
     "q_frontier_new_bloom" -> "collects the Bloom filter of already-seen URLs",
     "q_decontaminate_bloom" -> "collects the Bloom filter of benchmark n-grams",
     "q_crawl_budget" -> "collects host totals to split the crawl budget",
-    // global row numbers: zipWithIndex counts each partition first
-    "q_preprocess_monthly" -> "numbers rows with zipWithIndex, which counts partitions",
-    "q_order_limit_chunks" -> "numbers rows with zipWithIndex, which counts partitions",
-    "q_cdx_index" -> "numbers records with zipWithIndex, which counts partitions",
     // materialized intermediates (Checkpoints), written once, read back by path
     "q_corpus_pipeline" -> "materializes its stages and reads them back",
     "q_warc_erasure" -> "writes a WARC archive, then reads and erases from it",
