@@ -10,11 +10,16 @@ import Harness.jstr
   *     not count(): under a bare count Catalyst prunes deterministic
   *     projections, so md5/regex/tokenize work was never executed and text
   *     queries benched as pure scan time.
-  *   - One untimed warmup pass per query first (JVM/JIT + codegen + the
-  *     session's fixture schemas, resolved once by [[Tables.table]]), so
-  *     the first timed query doesn't eat cluster warmup and no timed run
-  *     pays for schema inference. [[ops.Caches.release]] before each run
-  *     drops cached data, not that per-session metadata.
+  *   - One untimed warmup pass over every query first (JVM/JIT, codegen,
+  *     the session's fixture schemas, resolved once by [[Tables.table]]),
+  *     so the first timed query doesn't eat cluster warmup and no timed
+  *     run pays for schema inference. [[ops.Caches.release]] before each
+  *     run drops cached data, not that per-session metadata. The warm-up
+  *     covers the whole registry before any query is timed, so its
+  *     generated classes carry over only because the codegen cache holds
+  *     the registry's working set ([[Graft.configure]] sizes it to one
+  *     registry pass); the full-map line records per query the classes
+  *     its timed passes still compiled (`compiles`).
   *   - Failures are not swallowed into small timings: a failing query records
   *     value -1 and an "errors" entry, and the process exits non-zero after
   *     still printing the JSON line (so the driver always gets a parse).
@@ -86,10 +91,14 @@ object Bench {
       catch { case e: Throwable => record(name, e); None }
 
     val timed = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val compiled = scala.collection.mutable.LinkedHashMap[String, Long]()
     queries.iterator.takeWhile(_ => fatal.isEmpty).foreach { case (name, q) =>
-      if (!errors.contains(name))
+      if (!errors.contains(name)) {
+        val c0 = Harness.compiles()
         timed(name) = (1 to TimedPasses).iterator
           .takeWhile(_ => fatal.isEmpty).flatMap(_ => timedRun(name, q)).toSeq
+        compiled(name) = Harness.compiles() - c0
+      }
     }
     // a fatal context death marks every query that never completed as
     // SKIPPED with the culprit's name — the artifact then reads as one
@@ -113,6 +122,10 @@ object Bench {
       .map { case (k, (mn, mx)) =>
         s"${jstr(k)}:${if (mn > 0) f"${mx / mn}%.2f" else "-1"}" }
       .mkString("{", ",", "}")
+    // generated classes each query's timed passes compiled (-1: not timed)
+    val compilesJson = queries
+      .map { case (name, _) => s"${jstr(name)}:${compiled.getOrElse(name, -1L)}" }
+      .mkString("{", ",", "}")
     val total = results.collect { case (_, (mn, _)) if mn >= 0 => mn }.sum
     // Host-contention telltale: the median across queries of max/min over
     // the timed passes. On a quiet host this sits near 1.0-1.3; a
@@ -126,13 +139,13 @@ object Bench {
       if (errors.isEmpty) ""
       else s""","errors":${errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")}"""
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","pass_spread_median":$noise,"queries":$qs,"spreads":$spreadJson,"sf":${jstr(sfDir)}$errJson}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","pass_spread_median":$noise,"queries":$qs,"spreads":$spreadJson,"compiles":$compilesJson,"sf":${jstr(sfDir)}$errJson}"""
     // The driver's stdout capture keeps only a tail, which truncated
     // BENCH_r06.json to 61 of 85 queries and left r9's first ~75 queries
-    // unreadable. The FULL line (per-query + spreads) goes to a file; the
-    // one printed line stays compact — aggregate, the slowest queries,
-    // and a pointer at the file — so the captured artifact parses
-    // end-to-end at any registry size. Path overridable for tests;
+    // unreadable. The FULL line (per-query, spreads, compiles) goes to a
+    // file; the one printed line stays compact — aggregate, the slowest
+    // queries, and a pointer at the file — so the captured artifact
+    // parses end-to-end at any registry size. Path overridable for tests;
     // failures to write must not fail the bench.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_out.json")
     try java.nio.file.Files.write(

@@ -16,10 +16,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Graft {
 
   /** A session configured the way every graft entry point expects:
-    * UTC clock, right-sized shuffle partitions, and the extension pack
+    * UTC clock, right-sized shuffle partitions, a codegen class cache
+    * that holds the registry's generated classes, and the extension pack
     * ([[plans.GraftExtensions]]: the dot_long, simhash48, cdc_chunks,
     * winnow_hashes and phrase_merge SQL functions, SargableMonthRule and
-    * AsofJoinStrategy).
+    * AsofJoinStrategy). Build it before anything else in the JVM runs a
+    * Spark query: the codegen cache and the `file:` filesystem are
+    * JVM-wide and keep the settings of the first session that used them.
     */
   def session(cpus: Int = Runtime.getRuntime.availableProcessors()): SparkSession = {
     val s = configure(SparkSession.builder())
@@ -32,9 +35,12 @@ object Graft {
   }
 
   /** Apply graft's required session config to ANY builder — the cluster
-    * path: bring your own master/deploy settings, graft adds the UTC clock
-    * and the extension pack. (Shuffle partitioning is left to the caller /
-    * AQE on a real cluster.)
+    * path: bring your own master/deploy settings, graft adds the UTC clock,
+    * the extension pack, the `file:` filesystem and the codegen cache
+    * size (`spark.sql.codegen.cache.maxEntries`, a static conf: a
+    * caller's own `.config` after this call overrides it, and it takes
+    * effect only if no codegen ran earlier in the JVM). (Shuffle
+    * partitioning is left to the caller / AQE on a real cluster.)
     *
     * `nanosAsLong` lives here — at session construction, not inside
     * [[Tables.events]] — because a loader mutating session conf is a
@@ -75,6 +81,23 @@ object Graft {
       // (and user), not by configuration, so a `file:` filesystem created
       // in this JVM before the graft session keeps the stock class.
       .config("spark.hadoop.fs.file.impl", classOf[sources.NioLocalFileSystem].getName)
+      // Spark caches compiled generated classes by (thread context class
+      // loader, code): 100 entries by default, in a Guava cache of 4
+      // segments of about 25. In local mode a stage body is compiled
+      // twice, on the driver and in a task under the executor's class
+      // loader, so q_setsim_join and q_dedup_chargram alone need about
+      // 120 entries, and alternating them recompiled 80-100 classes every
+      // round. 4096 is one registry pass at sf0.001 (a build and two full
+      // evaluations per query, 4-CPU host, local[4]) with the cache
+      // unbounded, 3,830 distinct classes, rounded up to a power of two:
+      // graft.Bench's warm-up then still holds every query's classes when
+      // its timed passes start. At the default size that pass compiled
+      // 6,423 classes; unbounded, metaspace grew 117 MB instead of 86 MB.
+      // Caveat: the conf is static, and the CodeGenerator object is
+      // JVM-wide and takes its capacity from the first codegen in the
+      // JVM, so a JVM that ran codegen before the graft session keeps 100
+      // (as with fs.file.impl above).
+      .config("spark.sql.codegen.cache.maxEntries", 4096)
 
   // ---- the three reference pipelines ----
 

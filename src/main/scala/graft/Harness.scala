@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{bit_xor, col, struct, xxhash64}
 
@@ -75,9 +76,13 @@ object Harness {
   /** Seconds to build and fully evaluate `df` after [[ops.Caches.release]]
     * (every main builds its queries on its own thread, so this drops
     * all the last query cached). What carries over from earlier runs is
-    * JVM and codegen warm-up and the session's fixture schemas, which
-    * [[Tables.table]] resolves once per session: after a warm-up, a cold
-    * run pays for no schema-inference job.
+    * JVM warm-up, the session's fixture schemas, which [[Tables.table]]
+    * resolves once per session (after a warm-up, a cold run pays for no
+    * schema-inference job), and the generated classes still in the
+    * JVM's codegen cache. That cache holds a whole registry pass at the
+    * size [[Graft.configure]] sets; at Spark's default of 100 entries a
+    * query whose classes were evicted since its last run compiles them
+    * again, inside the timed run.
     */
   def coldRun(spark: SparkSession)(df: => DataFrame): Double = {
     ops.Caches.release()
@@ -85,4 +90,9 @@ object Harness {
     fullEval(df)
     (System.nanoTime() - t0) / 1e9
   }
+
+  /** Generated classes compiled in this JVM so far (Spark's codegen
+    * metric, JVM-wide): the difference across a run is what it compiled.
+    */
+  def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }
